@@ -1,0 +1,7 @@
+"""Benchmark for gorilla_stream_spark: four closed-loop workloads (ingest,
+read, timeseries, curation) with end-to-end and per-layer metrics.
+
+Run one workload with ``python3 perfbench/run.py --workload <name> --seed
+<n> --seconds <s> --trace <0|1>`` from the repository root; see README.md
+in this directory.
+"""
