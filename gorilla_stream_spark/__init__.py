@@ -24,6 +24,13 @@ LLM training-data operators (round 2):
     cosine_neardup_pairs(df) / ann_search(enc, queries)
 """
 
+# Every Python worker that runs an engine task imports this package first:
+# from then on, its per-task importlib.invalidate_caches() stops re-reading
+# unchanged zip archives (see _worker.py).
+from gorilla_stream_spark import _worker
+
+_worker.install()
+
 from gorilla_stream_spark.analyze import analyze_and_recommend
 from gorilla_stream_spark.engine import (
     compact_blocks,

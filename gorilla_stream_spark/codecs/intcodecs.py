@@ -206,8 +206,13 @@ def rle_decode(buf: bytes) -> np.ndarray:
         raise ValueError(
             f"rle stream counts {vals.size}/{lens.size} != n_runs {nruns}"
         )
-    if lens.sum() != n:  # corrupt header must not turn into a giant repeat
-        raise ValueError(f"rle run lengths sum {lens.sum()} != count {n}")
+    # bound every run before summing: runs like [2^63-1, 2^63-1, n+2] wrap
+    # the int64 sum back to n, and np.repeat then overruns its output
+    if nruns and (int(lens.min()) < 0 or int(lens.max()) > n):
+        raise ValueError(f"rle run length outside [0, {n}]")
+    total = int(lens.sum())  # <= MAX_COUNT**2 < 2**63 once runs are bounded
+    if total != n:  # corrupt header must not turn into a giant repeat
+        raise ValueError(f"rle run lengths sum {total} != count {n}")
     return np.repeat(vals, lens)
 
 

@@ -238,8 +238,8 @@ def _enc_arrow_schema():
             ("enc_bytes", pa.int64()),
             ("crc32_raw", pa.int64()),
             ("crc32_buf", pa.int64()),
-            ("enc_us", pa.int64()),
-            ("buffer", pa.binary()),
+            ("enc_us", pa.int64()),  # per-block encode wall — the analog of
+            ("buffer", pa.binary()),  # the reference's metric snapshots (O36)
         ]
     )
 
@@ -293,27 +293,7 @@ def _encode_fn(
 
     from gorilla_stream_spark.codecs import wrap_container
 
-    out_schema = pa.schema(
-        [
-            ("block_id", pa.int64()),
-            ("part_id", pa.int32()),
-            ("seq_in_part", pa.int32()),
-            ("n_docs", pa.int32()),
-            ("n_tokens", pa.int64()),
-            ("doc_ids", pa.list_(pa.string())),
-            ("doc_lens", pa.list_(pa.int32())),
-            ("sources", pa.list_(pa.string())),
-            ("id_min", pa.string()),
-            ("id_max", pa.string()),
-            ("codec", pa.string()),
-            ("raw_bytes", pa.int64()),
-            ("enc_bytes", pa.int64()),
-            ("crc32_raw", pa.int64()),
-            ("crc32_buf", pa.int64()),
-            ("enc_us", pa.int64()),  # per-block encode wall — the analog of
-            ("buffer", pa.binary()),  # the reference's metric snapshots (O36)
-        ]
-    )
+    out_schema = _enc_arrow_schema()
 
     def fn(batches: Iterator) -> Iterator:
         ctx = TaskContext.get()

@@ -572,3 +572,37 @@ def test_rle_decode_rejects_mismatched_stream_counts():
         decode_array(bytes(buf))
     # intact buffers still round-trip
     np.testing.assert_array_equal(decode_array(bytes(encode_array(vals, codec="rle"))), vals)
+
+
+def test_rle_decode_rejects_wrapping_run_lengths():
+    # run lengths [2^63-1, 2^63-1, n+2] wrap the int64 sum back to n; before
+    # the per-run bound np.repeat overran the heap, so decode in a child
+    # process: a regression fails this test instead of killing pytest
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    code = textwrap.dedent(
+        """
+        import struct
+        import numpy as np
+        from gorilla_stream_spark.codecs.intcodecs import for_encode, rle_decode
+
+        n = 5
+        vbuf = for_encode(np.array([1, 2, 3], dtype=np.int64))
+        lbuf = for_encode(np.array([2**63 - 1, 2**63 - 1, n + 2], dtype=np.int64))
+        buf = struct.pack("<III", n, 3, len(vbuf)) + vbuf + lbuf
+        assert len(buf) < 80, len(buf)
+        try:
+            rle_decode(buf)
+        except ValueError as e:
+            print("ValueError:", e)
+        """
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=120
+    )
+    assert res.returncode == 0, (res.returncode, res.stderr[-2000:])
+    assert "ValueError: rle run length outside [0, 5]" in res.stdout, res.stdout

@@ -12,7 +12,15 @@ from gorilla_stream_spark.generator import tokens_df
 from gorilla_stream_spark.streaming import encode_stream
 
 
-@pytest.mark.timeout(300)
+def _await(q, timeout_s: float = 240) -> None:
+    """Wait for an availableNow query; fail the test, and stop the query,
+    if it is still running after ``timeout_s``."""
+    finished = q.awaitTermination(timeout_s)
+    if not finished:
+        q.stop()
+    assert finished, f"streaming query still running after {timeout_s} s"
+
+
 def test_stream_encode_roundtrip(spark, tmp_path):
     src_dir = str(tmp_path / "stream_src")
     out_dir = str(tmp_path / "stream_out")
@@ -27,7 +35,7 @@ def test_stream_encode_roundtrip(spark, tmp_path):
         .parquet(src_dir)
     )
     q = encode_stream(stream, out_dir, ckpt_dir, codec="auto", num_partitions=2)
-    q.awaitTermination(240)
+    _await(q)
 
     enc = spark.read.parquet(out_dir)
     dec = decode(enc)
@@ -39,7 +47,6 @@ def test_stream_encode_roundtrip(spark, tmp_path):
     assert os.path.isdir(os.path.join(ckpt_dir, "committed_batches"))
 
 
-@pytest.mark.timeout(300)
 def test_streaming_decode(spark, tmp_path):
     # decode is stateless -> works directly on a readStream of encoded
     # blocks (reference stream decompress, stream.ex:102-125)
@@ -61,14 +68,13 @@ def test_streaming_decode(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(240)
+    _await(q)
     out = spark.read.parquet(out_path)
     assert out.count() == 300
     joined = src.alias("s").join(out.alias("d"), "doc_id", "inner")
     assert joined.filter(F.col("s.tokens") != F.col("d.tokens")).count() == 0
 
 
-@pytest.mark.timeout(300)
 def test_stateful_streaming_dedup(spark, tmp_path):
     # cross-batch exact dedup via applyInPandasWithState: later copies of
     # already-seen content are dropped even when they arrive batches later
@@ -106,7 +112,7 @@ def test_stateful_streaming_dedup(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(240)
+    _await(q)
     out = spark.read.parquet(out_dir)
     assert out.count() == 150  # 100 originals + 50 fresh, 50 dups dropped
     ids = {int(r.doc_id) for r in out.select("doc_id").collect()}
@@ -114,7 +120,6 @@ def test_stateful_streaming_dedup(spark, tmp_path):
     assert all(2000 + i in ids for i in range(50))
 
 
-@pytest.mark.timeout(300)
 def test_windowed_stats_with_watermark_matches_batch(spark, tmp_path):
     # two micro-batches with out-of-order event times; finalized windows
     # must equal the batch groupBy-window over the same data
@@ -155,7 +160,7 @@ def test_windowed_stats_with_watermark_matches_batch(spark, tmp_path):
         .option("checkpointLocation", ck).outputMode("append")
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(240)
+    _await(q)
     got = {
         (r.win_start, r.event_type): (r.n, r.sum_value)
         for r in spark.read.parquet(out).collect()
@@ -195,7 +200,6 @@ def test_marker_roundtrip_hadoop_fs(spark, tmp_path):
     assert os.path.exists(str(tmp_path / "ck_uri" / "committed_batches" / "7"))
 
 
-@pytest.mark.timeout(300)
 def test_replayed_batch_skipped_via_marker(spark, tmp_path):
     # pre-committing batch 0's marker simulates a post-commit crash replay:
     # the replayed batch must be skipped (no duplicate blocks appended)
@@ -211,14 +215,13 @@ def test_replayed_batch_skipped_via_marker(spark, tmp_path):
         spark.readStream.schema(spark.read.parquet(src_dir).schema).parquet(src_dir)
     )
     q = encode_stream(stream, out_dir, ckpt_dir, codec="auto", num_partitions=2)
-    q.awaitTermination(240)
+    _await(q)
     # batch 0 (the whole input, availableNow) was marked committed -> skipped
     assert not os.path.exists(os.path.join(out_dir, "_SUCCESS")) or (
         spark.read.parquet(out_dir).count() == 0
     )
 
 
-@pytest.mark.timeout(300)
 def test_dedup_stream_numeric_id_order_matches_batch(spark, tmp_path):
     # ids 9 and 10 share content in one batch: numeric order keeps 9, while
     # a string sort would keep 10 ('10' < '9') — parity with dedup_exact
@@ -245,13 +248,12 @@ def test_dedup_stream_numeric_id_order_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(240)
+    _await(q)
     got = sorted(int(r.doc_id) for r in spark.read.parquet(out_dir).collect())
     want = sorted(int(r.doc_id) for r in dedup_exact(df).collect())
     assert got == want == [2, 9]
 
 
-@pytest.mark.timeout(300)
 def test_simhash_neardup_stream_matches_batch(spark, tmp_path):
     # near-dup pairs must be found WITHIN and ACROSS micro-batches with the
     # same deterministic recall as the batch operator; distinct pairs equal
@@ -288,7 +290,7 @@ def test_simhash_neardup_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(240)
+    _await(q)
     got = {
         (r.id_a, r.id_b)
         for r in spark.read.parquet(out_dir).dropDuplicates(["id_a", "id_b"]).collect()
@@ -433,7 +435,7 @@ def test_stream_block_ids_unique_and_restart_does_not_clobber(spark, tmp_path):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src1),
         out, str(tmp_path / "ck1"), num_partitions=2,
     )
-    q.awaitTermination(240)
+    _await(q)
     n1 = decode(spark.read.parquet(out)).count()
     assert n1 == 120
     # run 2: NEW checkpoint, batch numbering restarts at 0 — must not
@@ -442,7 +444,7 @@ def test_stream_block_ids_unique_and_restart_does_not_clobber(spark, tmp_path):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src2),
         out, str(tmp_path / "ck2"), num_partitions=2,
     )
-    q.awaitTermination(240)
+    _await(q)
     tab = spark.read.parquet(out)
     assert decode(tab).count() == 210
     # two distinct ingest namespaces; (ingest, block_id) unique table-wide,
@@ -471,7 +473,7 @@ def test_stream_legacy_flat_table_keeps_appending(spark, tmp_path):
         .option("maxFilesPerTrigger", 2).parquet(src),
         out, str(tmp_path / "ckl"), num_partitions=1,
     )
-    q.awaitTermination(240)
+    _await(q)
     tab = spark.read.parquet(out)
     assert "batch_id" in tab.columns and "ingest" not in tab.columns
     assert decode(tab).count() == 110
