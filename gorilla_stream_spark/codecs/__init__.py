@@ -348,10 +348,14 @@ def _zstd_codec(level: int | None):
 _CONTAINER_DICTS: dict[int, bytes] = {}
 
 
-def register_container_dict(d: bytes) -> int:
-    """Register dictionary bytes for decode; returns its id (crc32)."""
+def register_container_dict(d: bytes | None) -> int | None:
+    """Register dictionary bytes for decode; returns its id (crc32).
+    ``None`` (no dictionary) registers nothing, so kernels whose closure
+    may carry a dict call this unconditionally."""
     import zlib as _zlib
 
+    if d is None:
+        return None
     d = bytes(d)
     did = _zlib.crc32(d) & 0xFFFFFFFF
     _CONTAINER_DICTS[did] = d

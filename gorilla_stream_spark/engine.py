@@ -41,7 +41,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gorilla_stream_spark.codecs import decode_array, encode_array, encode_paged
+from gorilla_stream_spark.codecs import (
+    decode_array,
+    encode_array,
+    encode_paged,
+    register_container_dict,
+    wrap_container,
+)
 from gorilla_stream_spark.skew import salted_repartition
 
 __all__ = [
@@ -140,30 +146,6 @@ slicing the same work to ~16 MB scratch cut sys time 6x and total wall
 many tokens and reuse warm heap instead."""
 
 
-def _token_batch_slices(rb, tok_idx: int, max_tokens: int = _KERNEL_SLICE_TOKENS):
-    """Yield zero-copy row-slices of ``rb`` whose token totals stay near
-    ``max_tokens`` (always >= 1 row per slice).  Safe for any kernel whose
-    computation never crosses document boundaries."""
-    import numpy as np
-
-    n = rb.num_rows
-    if n == 0:
-        return
-    lens = rb.column(tok_idx).value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
-    total = int(lens.sum())
-    if total <= max_tokens:
-        yield rb
-        return
-    csum = np.cumsum(lens)
-    start = 0
-    while start < n:
-        base = csum[start - 1] if start else 0
-        end = int(np.searchsorted(csum, base + max_tokens, side="right"))
-        end = max(end, start + 1)
-        yield rb.slice(start, min(end, n) - start)
-        start = min(end, n) if end > start else start + 1
-
-
 _MAX_SEQ = 1 << 24  # block_id = (pid << 24) | seq — seq must stay below
 
 
@@ -213,12 +195,22 @@ def _block_bounds(lens: np.ndarray, block_tokens: int) -> list[tuple[int, int]]:
     return bounds
 
 
+def _token_batch_slices(rb, tok_idx: int, max_tokens: int = _KERNEL_SLICE_TOKENS):
+    """Yield zero-copy row-slices of ``rb`` whose token totals stay near
+    ``max_tokens`` (always >= 1 row per slice).  Safe for any kernel whose
+    computation never crosses document boundaries."""
+    if rb.num_rows == 0:
+        return
+    lens = rb.column(tok_idx).value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    if int(lens.sum()) <= max_tokens:
+        yield rb
+        return
+    for lo, hi in _block_bounds(lens, max_tokens):
+        yield rb.slice(lo, hi - lo)
 
 
 def _enc_arrow_schema():
-    """Arrow twin of ENCODED_SCHEMA — single source for every kernel that
-    emits block-manifest rows (encode, compact); a column added here plus
-    ENCODED_SCHEMA reaches all of them."""
+    """Arrow twin of ENCODED_SCHEMA, the schema ``_BlockEmitter`` builds."""
     import pyarrow as pa
 
     return pa.schema(
@@ -238,8 +230,8 @@ def _enc_arrow_schema():
             ("enc_bytes", pa.int64()),
             ("crc32_raw", pa.int64()),
             ("crc32_buf", pa.int64()),
-            ("enc_us", pa.int64()),  # per-block encode wall — the analog of
-            ("buffer", pa.binary()),  # the reference's metric snapshots (O36)
+            ("enc_us", pa.int64()),  # per-block encode+container wall — the
+            ("buffer", pa.binary()),  # reference's metric snapshots' analog (O36)
         ]
     )
 
@@ -247,7 +239,7 @@ def _enc_arrow_schema():
 def _decode_block_checked(col: dict, i: int, strict: bool) -> np.ndarray:
     """Decode one block row's buffer with the two-stage crc gate (buffer
     crc BEFORE decode so corruption fails here, raw crc after) — shared by
-    the decode and compact kernels."""
+    every kernel that reads block buffers."""
     raw_buf = col["buffer"][i].as_py()
     if strict and "crc32_buf" in col:
         bcrc = zlib.crc32(raw_buf)
@@ -267,6 +259,138 @@ def _decode_block_checked(col: dict, i: int, strict: bool) -> np.ndarray:
                 f" {crc} != {expect}"
             )
     return flat
+
+
+def _tiling_lens(lens_arr, n_tokens: int, where: str) -> np.ndarray:
+    """Per-doc lengths (an Arrow int array) as int64, checked to tile the
+    ``n_tokens`` decoded tokens.  ``crc32_raw`` covers the token stream but
+    not the lengths: a short sum would silently drop the block's tail and a
+    negative length would build an invalid Arrow list."""
+    lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
+    total = int(lens.sum())
+    if total != n_tokens or (lens.size and int(lens.min()) < 0):
+        raise ValueError(
+            f"doc_lens do not tile {where}: {lens.size} lengths sum to {total}"
+            f" (min {int(lens.min()) if lens.size else 0}),"
+            f" decoded {n_tokens} tokens"
+        )
+    return lens
+
+
+def _decode_docs_checked(col: dict, i: int, strict: bool) -> tuple[np.ndarray, np.ndarray]:
+    """``_decode_block_checked`` plus the row's ``doc_lens``, checked to tile
+    the decoded tokens — for every reader that splits a block into docs."""
+    flat = _decode_block_checked(col, i, strict)
+    where = f"block {col['block_id'][i].as_py()}"
+    return flat, _tiling_lens(col["doc_lens"][i].values, flat.size, where)
+
+
+def _list_array(flat: np.ndarray, lens: np.ndarray, dtype=np.int32):
+    """A list column rebuilt from a decoded flat stream and per-row lengths
+    (``ListArray.from_arrays`` — no per-row np.split / Python objects)."""
+    import pyarrow as pa
+
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()), pa.array(flat.astype(dtype))
+    )
+
+
+def _decode_column(buf: bytes, crc: int, lens_arr, strict: bool, where: str):
+    """One multi-column buffer back to its list column: buffer crc gate,
+    decode, length tiling."""
+    if strict and zlib.crc32(buf) != crc:
+        raise ValueError(f"buffer crc32 mismatch on {where}")
+    flat = decode_array(buf)
+    return _list_array(flat, _tiling_lens(lens_arr, flat.size, where))
+
+
+class _BlockEmitter:
+    """The one place a token block becomes an ENCODED_SCHEMA manifest row.
+
+    ``add`` encodes a block and wraps it in the container (``enc_us`` times
+    exactly these two steps, in every kernel), and derives the rest of the
+    row: counts, ``raw_bytes``, both crc32s, doc-id bounds, and for a new
+    block its identity ``block_id = (part_id << 24) | seq_in_part``.
+    ``flush`` yields the rows added since the last flush as one Arrow batch.
+    The kernels (encode, compact, transcode, delete) decide only which docs
+    form a block; a manifest column is added here and in ``ENCODED_SCHEMA``
+    / ``_enc_arrow_schema``, nowhere else.
+    """
+
+    def __init__(
+        self,
+        codec: str,
+        page_tokens: int,
+        container: str = "none",
+        container_level: int | None = None,
+        container_dict: bytes | None = None,
+        part_base: int = 0,
+    ):
+        ctx = TaskContext.get()
+        self.part_id = (ctx.partitionId() if ctx is not None else 0) + part_base
+        self.seq = 0
+        self.codec, self.page_tokens = codec, page_tokens
+        self.container, self.level, self.zdict = container, container_level, container_dict
+        self.schema = _enc_arrow_schema()
+        self.cols: dict[str, list] = {n: [] for n in self.schema.names}
+
+    def add(self, flat, doc_ids: list, doc_lens, sources, ident=None, crc32_raw=None):
+        """Emit one block of ``flat`` tokens.  ``ident`` (block_id, part_id,
+        seq_in_part) and ``crc32_raw`` keep an existing block's identity and
+        raw-stream lineage; omitted, the block takes this task's next seq
+        and the crc of ``flat``."""
+        t0 = _time.perf_counter()
+        buf, codec_name = encode_paged(flat, codec=self.codec, page_tokens=self.page_tokens)
+        if self.container != "none":
+            buf = wrap_container(buf, method=self.container, level=self.level, zdict=self.zdict)
+        enc_us = int((_time.perf_counter() - t0) * 1e6)
+        if ident is None:
+            ident = ((self.part_id << 24) | _check_seq(self.seq), self.part_id, self.seq)
+            self.seq += 1
+        if crc32_raw is None:
+            crc32_raw = zlib.crc32(flat.astype("<i4").tobytes())
+        n_tokens = int(flat.size)
+        row = {
+            "block_id": ident[0],
+            "part_id": ident[1],
+            "seq_in_part": ident[2],
+            "n_docs": len(doc_ids),
+            "n_tokens": n_tokens,
+            "doc_ids": doc_ids,
+            "doc_lens": doc_lens,
+            "sources": sources,
+            # per-block doc-id bounds: parquet min/max stats on these two
+            # short strings let point lookups prune row groups without
+            # reading the doc_ids list column (decode_docs)
+            "id_min": min(doc_ids),
+            "id_max": max(doc_ids),
+            "codec": codec_name,
+            "raw_bytes": 4 * n_tokens,
+            "enc_bytes": len(buf),
+            "crc32_raw": crc32_raw,
+            "crc32_buf": zlib.crc32(buf),
+            "enc_us": enc_us,
+            "buffer": buf,
+        }
+        for name, v in row.items():
+            self.cols[name].append(v)
+
+    def flush(self) -> Iterator:
+        import pyarrow as pa
+
+        if self.cols["block_id"]:
+            cols, self.cols = self.cols, {n: [] for n in self.schema.names}
+            yield pa.RecordBatch.from_pydict(cols, schema=self.schema)
+
+
+_IDENT_COLS = ("block_id", "part_id", "seq_in_part")
+# what the in-place rewrites (transcode, delete) read of a block row
+_REWRITE_COLS = [*_IDENT_COLS, "doc_ids", "doc_lens", "sources", "crc32_raw", "crc32_buf", "buffer"]
+
+
+def _ident(col: dict, i: int) -> tuple:
+    return tuple(col[n][i].as_py() for n in _IDENT_COLS)
 
 
 def _encode_fn(
@@ -289,16 +413,11 @@ def _encode_fn(
     no pandas Series-of-ndarrays materialization, which profiling showed
     cost as much as the codecs themselves.
     """
-    import pyarrow as pa
-
-    from gorilla_stream_spark.codecs import wrap_container
-
-    out_schema = _enc_arrow_schema()
 
     def fn(batches: Iterator) -> Iterator:
-        ctx = TaskContext.get()
-        pid = (ctx.partitionId() if ctx is not None else 0) + part_base
-        seq = 0
+        em = _BlockEmitter(
+            codec, page_tokens, container, container_level, container_dict, part_base
+        )
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -312,50 +431,14 @@ def _encode_fn(
             flat_all, lens = _flatten_arrow(tok_arr, dtype=None)
             _check_int32_tokens(flat_all, tok_arr)
             offs = np.concatenate(([0], np.cumsum(lens)))
-            cols: dict[str, list] = {name: [] for name in out_schema.names}
             for lo, hi in _block_bounds(lens, block_tokens):
-                t0 = _time.perf_counter()
-                flat = flat_all[offs[lo] : offs[hi]]
-                buf, codec_name = encode_paged(flat, codec=codec, page_tokens=page_tokens)
-                if container != "none":
-                    buf = wrap_container(
-                        buf, method=container, level=container_level,
-                        zdict=container_dict,
-                    )
-                enc_us = int((_time.perf_counter() - t0) * 1e6)
-                raw = flat.astype("<i4").tobytes()
-                cols["block_id"].append((pid << 24) | _check_seq(seq))
-                cols["part_id"].append(pid)
-                cols["seq_in_part"].append(seq)
-                cols["n_docs"].append(hi - lo)
-                cols["n_tokens"].append(int(flat.size))
-                block_ids = ids_arr.slice(lo, hi - lo).to_pylist()
-                cols["doc_ids"].append(block_ids)
-                cols["doc_lens"].append(lens[lo:hi].astype(np.int32))
-                cols["sources"].append(
-                    src_arr.slice(lo, hi - lo).to_pylist() if src_arr is not None else None
+                em.add(
+                    flat_all[offs[lo] : offs[hi]],
+                    ids_arr.slice(lo, hi - lo).to_pylist(),
+                    lens[lo:hi].astype(np.int32),
+                    src_arr.slice(lo, hi - lo).to_pylist() if src_arr is not None else None,
                 )
-                # per-block doc-id bounds: parquet min/max stats on these two
-                # short strings let point lookups prune row groups without
-                # reading the doc_ids list column (decode_docs)
-                cols["id_min"].append(min(block_ids))
-                cols["id_max"].append(max(block_ids))
-                cols["codec"].append(codec_name)
-                cols["raw_bytes"].append(len(raw))
-                cols["enc_bytes"].append(len(buf))
-                cols["crc32_raw"].append(zlib.crc32(raw))
-                cols["crc32_buf"].append(zlib.crc32(buf))
-                cols["enc_us"].append(enc_us)
-                cols["buffer"].append(buf)
-                seq += 1
-            if cols["block_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[name], type=out_schema.field(name).type)
-                        for name in out_schema.names
-                    ],
-                    schema=out_schema,
-                )
+            yield from em.flush()
 
     return fn
 
@@ -429,24 +512,14 @@ def _decode_fn(strict: bool, container_dict: bytes | None = None):
     )
 
     def fn(batches: Iterator) -> Iterator:
-        if container_dict is not None:
-            # the dict rides the task closure (the broadcast analog of the
-            # reference's ddict reference) and lands in the worker registry
-            from gorilla_stream_spark.codecs import register_container_dict
-
-            register_container_dict(container_dict)
+        # the dict rides the task closure (the broadcast analog of the
+        # reference's ddict reference) and lands in the worker registry
+        register_container_dict(container_dict)
         for rb in batches:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
             for i in range(rb.num_rows):
-                flat = _decode_block_checked(col, i, strict)
-                lens = col["doc_lens"][i].values.to_numpy(zero_copy_only=False).astype(np.int64)
-                offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-                tokens = pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()),
-                    pa.array(flat.astype(np.int32), type=pa.int32()),
-                )
-                ids = col["doc_ids"][i].values
+                flat, lens = _decode_docs_checked(col, i, strict)
                 srcs_cell = col["sources"][i]
                 srcs = (
                     srcs_cell.values
@@ -455,8 +528,8 @@ def _decode_fn(strict: bool, container_dict: bytes | None = None):
                 )
                 yield pa.RecordBatch.from_arrays(
                     [
-                        ids.cast(pa.string()),
-                        tokens,
+                        col["doc_ids"][i].values.cast(pa.string()),
+                        _list_array(flat, lens),
                         pa.array(lens.astype(np.int32), type=pa.int32()),
                         srcs.cast(pa.string()),
                     ],
@@ -516,20 +589,12 @@ def _compact_fn(
     """Arrow kernel: decode under-filled blocks, re-chunk to ``block_tokens``,
     re-encode.  Memory is bounded: pending docs are flushed as soon as they
     fill a block, so at most ~(arrow batch + block_tokens) tokens are held."""
-    import pyarrow as pa
-
-    from gorilla_stream_spark.codecs import wrap_container
-
-    out_schema = _enc_arrow_schema()
 
     def fn(batches: Iterator) -> Iterator:
-        if container_dict is not None:
-            from gorilla_stream_spark.codecs import register_container_dict
-
-            register_container_dict(container_dict)
-        ctx = TaskContext.get()
-        pid = (ctx.partitionId() if ctx is not None else 0) + part_base
-        seq = 0
+        register_container_dict(container_dict)
+        em = _BlockEmitter(
+            codec, page_tokens, container, container_level, container_dict, part_base
+        )
         # pending docs not yet filling a block: parallel per-doc arrays
         p_flat: list[np.ndarray] = []
         p_lens: list[np.ndarray] = []
@@ -537,10 +602,10 @@ def _compact_fn(
         p_srcs: list[list] = []
         p_tokens = 0
 
-        def flush(final: bool):
-            nonlocal seq, p_flat, p_lens, p_ids, p_srcs, p_tokens
+        def emit_blocks(final: bool):
+            nonlocal p_flat, p_lens, p_ids, p_srcs, p_tokens
             if not p_lens:
-                return None
+                return
             flat_all = p_flat[0] if len(p_flat) == 1 else np.concatenate(p_flat)
             lens = p_lens[0] if len(p_lens) == 1 else np.concatenate(p_lens)
             ids = [i for chunk in p_ids for i in chunk]
@@ -552,38 +617,12 @@ def _compact_fn(
                 if offs[hi] - offs[lo] < block_tokens:
                     bounds.pop()  # tail stays pending until it fills
             if not bounds:
-                return None
-            cols: dict[str, list] = {n: [] for n in out_schema.names}
+                return
             for lo, hi in bounds:
-                t0 = _time.perf_counter()
-                flat = flat_all[offs[lo] : offs[hi]]
-                buf, codec_name = encode_paged(flat, codec=codec, page_tokens=page_tokens)
-                if container != "none":
-                    buf = wrap_container(
-                        buf, method=container, level=container_level,
-                        zdict=container_dict,
-                    )
-                enc_us = int((_time.perf_counter() - t0) * 1e6)
-                raw = flat.astype("<i4").tobytes()
-                cols["block_id"].append((pid << 24) | _check_seq(seq))
-                cols["part_id"].append(pid)
-                cols["seq_in_part"].append(seq)
-                cols["n_docs"].append(hi - lo)
-                cols["n_tokens"].append(int(flat.size))
-                block_ids = ids[lo:hi]
-                cols["doc_ids"].append(block_ids)
-                cols["doc_lens"].append(lens[lo:hi].astype(np.int32))
-                cols["sources"].append(srcs[lo:hi])
-                cols["id_min"].append(min(block_ids))
-                cols["id_max"].append(max(block_ids))
-                cols["codec"].append(codec_name)
-                cols["raw_bytes"].append(len(raw))
-                cols["enc_bytes"].append(len(buf))
-                cols["crc32_raw"].append(zlib.crc32(raw))
-                cols["crc32_buf"].append(zlib.crc32(buf))
-                cols["enc_us"].append(enc_us)
-                cols["buffer"].append(buf)
-                seq += 1
+                em.add(
+                    flat_all[offs[lo] : offs[hi]], ids[lo:hi],
+                    lens[lo:hi].astype(np.int32), srcs[lo:hi],
+                )
             cut = bounds[-1][1]
             if cut < len(lens):
                 # reset pending on ROW count, not token count — a pending
@@ -597,17 +636,12 @@ def _compact_fn(
             else:
                 p_flat, p_lens, p_ids, p_srcs = [], [], [], []
                 p_tokens = 0
-            return pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=out_schema.field(n).type) for n in out_schema.names],
-                schema=out_schema,
-            )
 
         for rb in batches:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
             for i in range(rb.num_rows):
-                flat = _decode_block_checked(col, i, strict)
-                lens = col["doc_lens"][i].values.to_numpy(zero_copy_only=False).astype(np.int64)
+                flat, lens = _decode_docs_checked(col, i, strict)
                 srcs_cell = col["sources"][i]
                 p_flat.append(flat.astype(np.int64, copy=False))
                 p_lens.append(lens)
@@ -617,12 +651,10 @@ def _compact_fn(
                 )
                 p_tokens += int(flat.size)
                 if p_tokens >= block_tokens:
-                    out = flush(final=False)
-                    if out is not None:
-                        yield out
-        out = flush(final=True)
-        if out is not None:
-            yield out
+                    emit_blocks(final=False)
+                    yield from em.flush()
+        emit_blocks(final=True)
+        yield from em.flush()
 
     return fn
 
@@ -753,56 +785,25 @@ def transcode_blocks(
     shuffles it) — transcode touches every buffer but moves none.
     Decode equality is bit-exact (the q63 driver oracle).
     """
-    import pyarrow as pa
-
-    from gorilla_stream_spark.codecs import wrap_container
-
-    out_schema = _enc_arrow_schema()
 
     def fn(batches: Iterator) -> Iterator:
-        if container_dict is not None:
-            from gorilla_stream_spark.codecs import register_container_dict
-
-            register_container_dict(container_dict)
+        register_container_dict(container_dict)
+        em = _BlockEmitter(codec, page_tokens, container, container_level, container_dict)
         for rb in batches:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
-            cols: dict[str, list] = {n: [] for n in out_schema.names}
             for i in range(rb.num_rows):
-                t0 = _time.perf_counter()
-                flat = _decode_block_checked(col, i, strict)
-                buf, codec_name = encode_paged(flat, codec=codec, page_tokens=page_tokens)
-                if container != "none":
-                    buf = wrap_container(
-                        buf, method=container, level=container_level,
-                        zdict=container_dict,
-                    )
-                enc_us = int((_time.perf_counter() - t0) * 1e6)
-                for n in out_schema.names:
-                    if n == "codec":
-                        cols[n].append(codec_name)
-                    elif n == "enc_bytes":
-                        cols[n].append(len(buf))
-                    elif n == "crc32_buf":
-                        cols[n].append(zlib.crc32(buf))
-                    elif n == "enc_us":
-                        cols[n].append(enc_us)
-                    elif n == "buffer":
-                        cols[n].append(buf)
-                    else:
-                        cols[n].append(col[n][i].as_py())
-            if cols["block_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[n], type=out_schema.field(n).type)
-                        for n in out_schema.names
-                    ],
-                    schema=out_schema,
+                em.add(
+                    _decode_block_checked(col, i, strict),
+                    col["doc_ids"][i].values.to_pylist(),
+                    col["doc_lens"][i].values.to_numpy(zero_copy_only=False),
+                    col["sources"][i].as_py(),
+                    ident=_ident(col, i),
+                    crc32_raw=col["crc32_raw"][i].as_py(),
                 )
+            yield from em.flush()
 
-    return enc_df.select(*[f.name for f in out_schema]).mapInArrow(
-        fn, ENCODED_SCHEMA
-    )
+    return enc_df.select(*_REWRITE_COLS).mapInArrow(fn, ENCODED_SCHEMA)
 
 
 def _prune_by_id_bounds(enc_df: DataFrame, doc_ids: list[str]) -> DataFrame:
@@ -873,77 +874,30 @@ def _delete_fn(
     seq_in_part) is PRESERVED — the block shrinks, it doesn't move —
     so table-wide id uniqueness and downstream point-lookup pruning keep
     working.  Fully-deleted blocks are dropped."""
-    import pyarrow as pa
-
-    from gorilla_stream_spark.codecs import wrap_container
-
-    out_schema = _enc_arrow_schema()
 
     def fn(batches: Iterator) -> Iterator:
-        if container_dict is not None:
-            from gorilla_stream_spark.codecs import register_container_dict
-
-            register_container_dict(container_dict)
+        register_container_dict(container_dict)
+        em = _BlockEmitter(codec, page_tokens, container, container_level, container_dict)
         for rb in batches:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
-            cols: dict[str, list] = {n: [] for n in out_schema.names}
             for i in range(rb.num_rows):
                 ids = col["doc_ids"][i].values.to_pylist()
                 keep = np.array([d not in delete_ids for d in ids], dtype=bool)
                 if not keep.any():
                     continue  # whole block deleted
-                t0 = _time.perf_counter()
-                flat = _decode_block_checked(col, i, strict)
-                lens = (
-                    col["doc_lens"][i].values.to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
+                flat, lens = _decode_docs_checked(col, i, strict)
+                srcs = col["sources"][i].as_py()
+                if srcs is None:
+                    srcs = [None] * len(ids)
+                em.add(
+                    flat[np.repeat(keep, lens)],
+                    [d for d, k in zip(ids, keep) if k],
+                    lens[keep].astype(np.int32),
+                    [s for s, k in zip(srcs, keep) if k],
+                    ident=_ident(col, i),
                 )
-                new_flat = flat[np.repeat(keep, lens)]
-                new_lens = lens[keep]
-                new_ids = [d for d, k in zip(ids, keep) if k]
-                srcs_cell = col["sources"][i]
-                srcs = (
-                    srcs_cell.values.to_pylist()
-                    if srcs_cell.is_valid
-                    else [None] * len(lens)
-                )
-                new_srcs = [s for s, k in zip(srcs, keep) if k]
-                buf, codec_name = encode_paged(
-                    new_flat, codec=codec, page_tokens=page_tokens
-                )
-                if container != "none":
-                    buf = wrap_container(
-                        buf, method=container, level=container_level,
-                        zdict=container_dict,
-                    )
-                enc_us = int((_time.perf_counter() - t0) * 1e6)
-                raw = new_flat.astype("<i4").tobytes()
-                cols["block_id"].append(col["block_id"][i].as_py())
-                cols["part_id"].append(col["part_id"][i].as_py())
-                cols["seq_in_part"].append(col["seq_in_part"][i].as_py())
-                cols["n_docs"].append(len(new_ids))
-                cols["n_tokens"].append(int(new_flat.size))
-                cols["doc_ids"].append(new_ids)
-                cols["doc_lens"].append(new_lens.astype(np.int32))
-                cols["sources"].append(new_srcs)
-                cols["id_min"].append(min(new_ids))
-                cols["id_max"].append(max(new_ids))
-                cols["codec"].append(codec_name)
-                cols["raw_bytes"].append(len(raw))
-                cols["enc_bytes"].append(len(buf))
-                cols["crc32_raw"].append(zlib.crc32(raw))
-                cols["crc32_buf"].append(zlib.crc32(buf))
-                cols["enc_us"].append(enc_us)
-                cols["buffer"].append(buf)
-            if cols["block_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols[n], type=out_schema.field(n).type)
-                        for n in out_schema.names
-                    ],
-                    schema=out_schema,
-                )
+            yield from em.flush()
 
     return fn
 
@@ -994,8 +948,7 @@ def delete_docs(
     hit = F.arrays_overlap(F.col("doc_ids"), wanted)
     untouched = enc_df.filter(~hit)
     affected = _prune_by_id_bounds(enc_df, doc_ids).filter(hit)
-    needed = [f.name for f in _enc_arrow_schema()]
-    rewritten = affected.select(*needed).mapInArrow(
+    rewritten = affected.select(*_REWRITE_COLS).mapInArrow(
         _delete_fn(
             frozenset(doc_ids), codec, page_tokens, strict,
             container, container_level, container_dict,
@@ -1333,10 +1286,7 @@ def encode_multi(
                 cols["buffers"].append(bufs)
                 seq += 1
             if cols["block_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[n], type=out_schema.field(n).type) for n in out_schema.names],
-                    schema=out_schema,
-                )
+                yield pa.RecordBatch.from_pydict(cols, schema=out_schema)
 
     return slim.mapInArrow(fn, MULTI_ENCODED_DDL)
 
@@ -1375,25 +1325,14 @@ def decode_multi(enc_df: DataFrame, token_cols: list[str], strict: bool = True) 
                     ) from None
                 bufs = col["buffers"][i].as_py()
                 crcs = col["crc32_bufs"][i].as_py()
-                arrays = []
-                for c, ci in zip(token_cols, idxs):
-                    buf = bufs[ci]
-                    if strict and zlib.crc32(buf) != crcs[ci]:
-                        raise ValueError(
-                            f"buffer crc32 mismatch on block"
-                            f" {col['block_id'][i].as_py()} column {c}"
-                        )
-                    flat = decode_array(buf)
-                    lens = np.asarray(col["col_lens"][i][ci].as_py(), dtype=np.int64)
-                    if int(lens.sum()) != flat.size:
-                        raise ValueError("column length sum != decoded count")
-                    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-                    arrays.append(
-                        pa.ListArray.from_arrays(
-                            pa.array(offsets, type=pa.int32()),
-                            pa.array(flat.astype(np.int32), type=pa.int32()),
-                        )
+                lens = col["col_lens"][i].values
+                bid = col["block_id"][i].as_py()
+                arrays = [
+                    _decode_column(
+                        bufs[ci], crcs[ci], lens[ci].values, strict, f"block {bid} column {c}"
                     )
+                    for c, ci in zip(token_cols, idxs)
+                ]
                 yield pa.RecordBatch.from_arrays(
                     [col["doc_ids"][i].values.cast(pa.string())] + arrays,
                     schema=out_schema,
@@ -1518,28 +1457,14 @@ def _decode_multi_wide(
         for rb in batches:
             col = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
             for i in range(rb.num_rows):
-                arrays = []
-                for c in token_cols:
-                    buf = col[f"buf_{c}"][i].as_py()
-                    if strict and zlib.crc32(buf) != col[f"crc32_{c}"][i].as_py():
-                        raise ValueError(
-                            f"buffer crc32 mismatch on block"
-                            f" {col['block_id'][i].as_py()} column {c}"
-                        )
-                    flat = decode_array(buf)
-                    lens = (
-                        col[f"lens_{c}"][i].values.to_numpy(zero_copy_only=False)
-                        .astype(np.int64)
+                bid = col["block_id"][i].as_py()
+                arrays = [
+                    _decode_column(
+                        col[f"buf_{c}"][i].as_py(), col[f"crc32_{c}"][i].as_py(),
+                        col[f"lens_{c}"][i].values, strict, f"block {bid} column {c}",
                     )
-                    if int(lens.sum()) != flat.size:
-                        raise ValueError("column length sum != decoded count")
-                    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-                    arrays.append(
-                        pa.ListArray.from_arrays(
-                            pa.array(offsets, type=pa.int32()),
-                            pa.array(flat.astype(np.int32), type=pa.int32()),
-                        )
-                    )
+                    for c in token_cols
+                ]
                 yield pa.RecordBatch.from_arrays(
                     [col["doc_ids"][i].values.cast(pa.string())] + arrays,
                     schema=out_schema,

@@ -45,7 +45,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gorilla_stream_spark.engine import _decode_block_checked
+from gorilla_stream_spark.codecs import register_container_dict
+from gorilla_stream_spark.engine import _decode_block_checked, _decode_docs_checked
 
 __all__ = [
     "build_token_index",
@@ -118,10 +119,7 @@ def build_token_index(
     )
 
     def fn(batches: Iterator) -> Iterator:
-        if container_dict is not None:
-            from gorilla_stream_spark.codecs import register_container_dict
-
-            register_container_dict(container_dict)
+        register_container_dict(container_dict)
         for rb in batches:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
@@ -264,23 +262,16 @@ def find_docs_with_token(
     pruned = prune_blocks_for_token(enc_df, index_df, int(token))
 
     def fn(batches: Iterator) -> Iterator:
-        if container_dict is not None:
-            from gorilla_stream_spark.codecs import register_container_dict
-
-            register_container_dict(container_dict)
+        register_container_dict(container_dict)
         tok = np.int64(int(token))
         for rb in batches:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
             for i in range(rb.num_rows):
-                flat = _decode_block_checked(col, i, strict)
+                flat, lens = _decode_docs_checked(col, i, strict)
                 hits = np.flatnonzero(flat == tok)
                 if hits.size == 0:
                     continue  # bloom false positive: wasted decode, no rows
-                lens = (
-                    col["doc_lens"][i].values.to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
                 ends = np.cumsum(lens)
                 doc_idx = np.searchsorted(ends, hits, side="right")
                 uniq_docs, n_hits = np.unique(doc_idx, return_counts=True)
@@ -343,17 +334,14 @@ def find_docs_with_phrase(
     pruned = _prune_with(enc_df, _candidate_ids(index_df, cond))
 
     def fn(batches: Iterator) -> Iterator:
-        if container_dict is not None:
-            from gorilla_stream_spark.codecs import register_container_dict
-
-            register_container_dict(container_dict)
+        register_container_dict(container_dict)
         pharr = np.array(ph, dtype=np.int64)
         kk = pharr.size
         for rb in batches:
             names = rb.schema.names
             col = {n: rb.column(i) for i, n in enumerate(names)}
             for i in range(rb.num_rows):
-                flat = _decode_block_checked(col, i, strict)
+                flat, lens = _decode_docs_checked(col, i, strict)
                 n = flat.size
                 if n < kk:
                     continue
@@ -363,10 +351,6 @@ def find_docs_with_phrase(
                 starts = np.flatnonzero(ok)
                 if starts.size == 0:
                     continue
-                lens = (
-                    col["doc_lens"][i].values.to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
                 ends = np.cumsum(lens)
                 d0 = np.searchsorted(ends, starts, side="right")
                 d1 = np.searchsorted(ends, starts + kk - 1, side="right")

@@ -223,10 +223,9 @@ def _fsck_frame(
     def fn(batches: Iterator) -> Iterator:
         import pyarrow as pa
 
-        if container_dict is not None:
-            from gorilla_stream_spark.codecs import register_container_dict
+        from gorilla_stream_spark.codecs import register_container_dict
 
-            register_container_dict(container_dict)
+        register_container_dict(container_dict)
         for rb in batches:
             col = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
             out_id, out_ok, out_err = [], [], []
@@ -260,35 +259,20 @@ def fsck_blocks(
     re-deriving from raw is off the table).
 
     Per block: buffer crc, full decode, raw-stream crc, and manifest
-    consistency (n_tokens vs doc_lens sum vs decoded size).  Never raises —
+    consistency (``doc_lens`` non-negative and summing to the decoded size,
+    which ``n_tokens`` must equal).  Never raises —
     returns one row per block with ``ok`` and the first error string, so
     the caller aggregates or quarantines.  Tables written with
     ``container='zlib-dict'`` need the same ``container_dict`` bytes or
     every block reports undecodable.
     """
-    import zlib
-
-    from gorilla_stream_spark.codecs import decode_array
+    from gorilla_stream_spark.engine import _decode_docs_checked
 
     def check(col, i):
-        buf = col["buffer"][i].as_py()
-        if "crc32_buf" in col:
-            bcrc = zlib.crc32(buf)
-            bexp = col["crc32_buf"][i].as_py()
-            if bcrc != bexp:
-                raise ValueError(f"buffer crc32 {bcrc} != manifest {bexp}")
-        flat = decode_array(buf)
-        crc = zlib.crc32(flat.astype("<i4").tobytes())
-        rexp = col["crc32_raw"][i].as_py()
-        if crc != rexp:
-            raise ValueError(f"raw crc32 {crc} != manifest {rexp}")
-        lens = col["doc_lens"][i].values.to_numpy(zero_copy_only=False)
+        flat, lens = _decode_docs_checked(col, i, strict=True)
         n_tok = col["n_tokens"][i].as_py()
-        if int(lens.sum()) != n_tok or int(flat.size) != n_tok:
-            raise ValueError(
-                f"count mismatch: n_tokens={n_tok},"
-                f" doc_lens sum={int(lens.sum())}, decoded={int(flat.size)}"
-            )
+        if int(flat.size) != n_tok:
+            raise ValueError(f"count mismatch: n_tokens={n_tok}, decoded={int(flat.size)}")
         if len(col["doc_ids"][i]) != len(lens):
             raise ValueError("doc_ids / doc_lens length mismatch")
 

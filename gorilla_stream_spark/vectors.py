@@ -31,7 +31,7 @@ from gorilla_stream_spark.codecs import (
     decode_array,
     floatcodecs,
 )
-from gorilla_stream_spark.engine import _block_bounds, _check_seq, _flatten_arrow
+from gorilla_stream_spark.engine import _block_bounds, _check_seq, _flatten_arrow, _list_array
 
 __all__ = [
     "encode_vectors",
@@ -300,13 +300,7 @@ def encode_vectors(
                     out["bucket_pfx"].append(int(pfx[lo]))
                 seq += 1
             if out["block_id"]:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out[name], type=out_schema.field(name).type)
-                        for name in out_schema.names
-                    ],
-                    schema=out_schema,
-                )
+                yield pa.RecordBatch.from_pydict(out, schema=out_schema)
 
     return slim.mapInArrow(fn, ddl)
 
@@ -386,12 +380,10 @@ def decode_vectors(
                             f"crc32 mismatch on block {col['block_id'][i].as_py()}"
                         )
                 lens = col["vec_lens"][i].values.to_numpy(zero_copy_only=False)
-                offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-                vecs = pa.ListArray.from_arrays(
-                    pa.array(offsets, type=pa.int32()),
-                    pa.array(flat.astype(np.float32), type=pa.float32()),
-                )
-                arrays = [col["vec_ids"][i].values.cast(pa.int64()), vecs]
+                arrays = [
+                    col["vec_ids"][i].values.cast(pa.int64()),
+                    _list_array(flat, lens, np.float32),
+                ]
                 names = ["vec_id", "embedding"]
                 if with_scale:
                     if buf[0] == VECI8:
