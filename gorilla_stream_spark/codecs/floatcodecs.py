@@ -23,27 +23,9 @@ import numpy as np
 
 from gorilla_stream_spark.codecs import bitio
 
-__all__ = ["gxor_encode", "gxor_decode", "leading_zeros64", "trailing_zeros64"]
+__all__ = ["gxor_encode", "gxor_decode"]
 
 _U64 = np.uint64
-
-
-def leading_zeros64(v: np.ndarray) -> np.ndarray:
-    """Vectorized count-leading-zeros for uint64 (0 -> 64)."""
-    from gorilla_stream_spark.codecs.intcodecs import value_bit_widths
-
-    return (64 - value_bit_widths(v)).astype(np.uint8)
-
-
-def trailing_zeros64(v: np.ndarray) -> np.ndarray:
-    """Vectorized count-trailing-zeros for uint64 (0 -> 64)."""
-    v = v.astype(_U64, copy=False)
-    iso = v & (~v + _U64(1))  # isolate lowest set bit
-    from gorilla_stream_spark.codecs.intcodecs import value_bit_widths
-
-    w = value_bit_widths(iso).astype(np.int16)  # position of lowest bit, 0 if v==0
-    out = np.where(v == 0, 64, w - 1).astype(np.uint8)
-    return out
 
 
 def _choose_windows(lz: np.ndarray, tz: np.ndarray) -> tuple[tuple[int, int], tuple[int, int]]:
@@ -97,6 +79,41 @@ def _choose_windows(lz: np.ndarray, tz: np.ndarray) -> tuple[tuple[int, int], tu
     return (l1, s1), (l2, s2)
 
 
+def _xor_classes_encode(xor: np.ndarray) -> bytes:
+    """One XOR stream as its ``<BBBB`` window header plus a classed stream:
+    class 0 = XOR 0 (no payload), classes 1/2 = the two chosen (lead,
+    sigbits) windows, class 3 = raw 64 bits.  Shared by gxor and xorlag."""
+    lz = bitio.clz64(xor)
+    tz = bitio.ctz64(xor)
+    (l1, s1), (l2, s2) = _choose_windows(lz, tz)
+    span_end = 64 - tz.astype(np.int16)
+    lzi = lz.astype(np.int16)
+    cls = np.full(xor.size, 3, dtype=_U64)
+    cls[(lzi >= l2) & (span_end - l2 <= s2)] = 2
+    cls[(lzi >= l1) & (span_end - l1 <= s1)] = 1
+    cls[xor == 0] = 0
+    windows = ((l1, s1), (l2, s2), (0, 64))
+    sections = [(xor[cls == c] >> _U64(64 - L - S), S) for c, (L, S) in enumerate(windows, 1)]
+    head = struct.pack("<BBBB", l1, s1 % 256, l2, s2 % 256)  # 64 stored as 0
+    return head + bitio.pack_classes(cls, sections)
+
+
+def _xor_classes_decode(mv: memoryview, off: int, m: int) -> np.ndarray:
+    """Inverse of :func:`_xor_classes_encode` from byte ``off`` -> the ``m``
+    XORs.  A window wider than 64 bits is corrupt: its shift would go
+    negative."""
+    l1, s1, l2, s2 = struct.unpack_from("<BBBB", mv, off)
+    windows = ((l1, s1 or 64), (l2, s2 or 64), (0, 64))
+    if any(L + S > 64 for L, S in windows):
+        raise ValueError(f"xor windows {windows[:2]}: lead + sigbits > 64")
+    sections = [(c, S) for c, (_L, S) in enumerate(windows, 1)]
+    tags, payloads, _end = bitio.unpack_classes(mv, off + 4, m, sections)
+    xor = np.zeros(m, dtype=_U64)
+    for c, ((L, S), payload) in enumerate(zip(windows, payloads), 1):
+        xor[tags == c] = payload << _U64(64 - L - S)
+    return xor
+
+
 def gxor_encode(vals: np.ndarray) -> bytes:
     vals = np.ascontiguousarray(vals, dtype=np.float64)
     n = vals.size
@@ -106,25 +123,7 @@ def gxor_encode(vals: np.ndarray) -> bytes:
     head = struct.pack("<IQ", n, int(bits[0]))
     if n == 1:
         return head
-    xor = np.bitwise_xor(bits[1:], bits[:-1])
-    lz = leading_zeros64(xor)
-    tz = trailing_zeros64(xor)
-    (l1, s1), (l2, s2) = _choose_windows(lz, tz)
-    span_end = 64 - tz.astype(np.int16)
-    lzi = lz.astype(np.int16)
-    cls = np.full(xor.size, 3, dtype=_U64)
-    cls[(lzi >= l2) & (span_end - l2 <= s2)] = 2
-    cls[(lzi >= l1) & (span_end - l1 <= s1)] = 1
-    cls[xor == 0] = 0
-    head += struct.pack("<BBBB", l1, s1 % 256, l2, s2 % 256)  # 64 stored as 0
-    parts = [head, bitio.pack(cls, 2)]
-    for c, (L, S) in ((1, (l1, s1)), (2, (l2, s2)), (3, (0, 64))):
-        sel = xor[cls == c]
-        shift = _U64(64 - L - S)
-        payload = sel >> shift if S < 64 else sel
-        parts.append(struct.pack("<I", sel.size))
-        parts.append(bitio.pack(payload, S))
-    return b"".join(parts)
+    return head + _xor_classes_encode(np.bitwise_xor(bits[1:], bits[:-1]))
 
 
 def gxor_decode(buf: bytes) -> np.ndarray:
@@ -132,35 +131,13 @@ def gxor_decode(buf: bytes) -> np.ndarray:
     bitio.check_count(n)
     if n == 0:
         return np.empty(0, dtype=np.float64)
-    out_bits = np.empty(n, dtype=_U64)
-    out_bits[0] = first
-    if n == 1:
-        return out_bits.view(np.float64)
-    mv = memoryview(buf)
-    l1, s1, l2, s2 = struct.unpack_from("<BBBB", mv, 12)
-    s1 = s1 or 64
-    s2 = s2 or 64
-    off = 16
-    m = n - 1
-    tag_bytes = (m * 2 + 7) // 8
-    cls = bitio.unpack(mv[off : off + tag_bytes], 2, m)
-    off += tag_bytes
-    xor = np.zeros(m, dtype=_U64)
-    for c, (L, S) in ((1, (l1, s1)), (2, (l2, s2)), (3, (0, 64))):
-        (cnt,) = struct.unpack_from("<I", mv, off)
-        off += 4
-        nbytes = (cnt * S + 7) // 8
-        if cnt:
-            payload = bitio.unpack(mv[off : off + nbytes], S, cnt)
-            shift = _U64(64 - L - S)
-            xor[cls == c] = payload << shift if S < 64 else payload
-        off += nbytes
+    chain = np.empty(n, dtype=_U64)
+    chain[0] = first
+    if n > 1:
+        chain[1:] = _xor_classes_decode(memoryview(buf), 12, n - 1)
     # XOR prefix-chain reconstruction: cumulative xor is associative -> use
     # np.bitwise_xor.accumulate (vectorized inverse of the reference's
     # sequential reconstruct, decoder/value_decompression.ex:103-119)
-    chain = np.empty(n, dtype=_U64)
-    chain[0] = first
-    chain[1:] = xor
     return np.bitwise_xor.accumulate(chain).view(np.float64)
 
 
@@ -186,7 +163,7 @@ def _lag_cost(bits: np.ndarray, lag: int) -> int:
     xor = np.bitwise_xor(bits[lag:], bits[:-lag])
     nz = xor != 0
     span = np.zeros(xor.size, dtype=np.int16)
-    span[nz] = 64 - leading_zeros64(xor[nz]).astype(np.int16) - trailing_zeros64(xor[nz]).astype(np.int16)
+    span[nz] = 64 - bitio.clz64(xor[nz]).astype(np.int16) - bitio.ctz64(xor[nz]).astype(np.int16)
     # ~2 tag bits per value + 64 raw bits per leading value
     return int(span.sum()) + 2 * xor.size + 64 * lag
 
@@ -211,25 +188,7 @@ def xorlag_encode(vals: np.ndarray, lag: int | None = None) -> bytes:
     head += bits[:k].astype("<u8").tobytes()  # leading values raw
     if n <= lag:
         return head
-    xor = np.bitwise_xor(bits[lag:], bits[:-lag])
-    lz = leading_zeros64(xor)
-    tz = trailing_zeros64(xor)
-    (l1, s1), (l2, s2) = _choose_windows(lz, tz)
-    span_end = 64 - tz.astype(np.int16)
-    lzi = lz.astype(np.int16)
-    cls = np.full(xor.size, 3, dtype=_U64)
-    cls[(lzi >= l2) & (span_end - l2 <= s2)] = 2
-    cls[(lzi >= l1) & (span_end - l1 <= s1)] = 1
-    cls[xor == 0] = 0
-    head += struct.pack("<BBBB", l1, s1 % 256, l2, s2 % 256)
-    parts = [head, bitio.pack(cls, 2)]
-    for c, (L, S) in ((1, (l1, s1)), (2, (l2, s2)), (3, (0, 64))):
-        sel = xor[cls == c]
-        shift = _U64(64 - L - S)
-        payload = sel >> shift if S < 64 else sel
-        parts.append(struct.pack("<I", sel.size))
-        parts.append(bitio.pack(payload, S))
-    return b"".join(parts)
+    return head + _xor_classes_encode(np.bitwise_xor(bits[lag:], bits[:-lag]))
 
 
 def xorlag_decode(buf: bytes | memoryview) -> np.ndarray:
@@ -242,28 +201,9 @@ def xorlag_decode(buf: bytes | memoryview) -> np.ndarray:
     firsts = np.frombuffer(mv, dtype="<u8", count=k, offset=5).astype(_U64)
     if n <= lag:
         return firsts[:n].view(np.float64)
-    off = 5 + 8 * k
-    l1, s1, l2, s2 = struct.unpack_from("<BBBB", mv, off)
-    s1 = s1 or 64
-    s2 = s2 or 64
-    off += 4
-    m = n - lag
-    tag_bytes = (m * 2 + 7) // 8
-    cls = bitio.unpack(mv[off : off + tag_bytes], 2, m)
-    off += tag_bytes
-    xor = np.zeros(m, dtype=_U64)
-    for c, (L, S) in ((1, (l1, s1)), (2, (l2, s2)), (3, (0, 64))):
-        (cnt,) = struct.unpack_from("<I", mv, off)
-        off += 4
-        nbytes = (cnt * S + 7) // 8
-        if cnt:
-            payload = bitio.unpack(mv[off : off + nbytes], S, cnt)
-            shift = _U64(64 - L - S)
-            xor[cls == c] = payload << shift if S < 64 else payload
-        off += nbytes
     chain = np.empty(n, dtype=_U64)
     chain[:lag] = firsts
-    chain[lag:] = xor
+    chain[lag:] = _xor_classes_decode(mv, 5 + 8 * k, n - lag)
     if lag == 1:
         return np.bitwise_xor.accumulate(chain).view(np.float64)
     # per-residue XOR chains: out[i] = out[i-lag] ^ xor[i], vectorized as one

@@ -37,7 +37,6 @@ __all__ = [
     "delta_decode",
     "dod_encode",
     "dod_decode",
-    "value_bit_widths",
     "choose_class_widths",
 ]
 
@@ -314,19 +313,6 @@ def delta_decode(buf: bytes) -> np.ndarray:
 # Delta-of-delta with cost-optimal width classes.
 # ---------------------------------------------------------------------------
 
-_POW2 = np.uint64(1) << np.arange(64, dtype=np.uint64)  # [1, 2, 4, ..., 2^63]
-
-
-def value_bit_widths(v: np.ndarray) -> np.ndarray:
-    """Vectorized bit_length for a uint64 array (0 -> 0).
-
-    One binary search over the 64-entry power table per element (tight C
-    loop, no temporaries) — width(v) = #{powers <= v}.
-    """
-    v = v.astype(_U64, copy=False)
-    return np.searchsorted(_POW2, v, side="right").astype(np.uint8)
-
-
 def choose_class_widths(widths: np.ndarray) -> list[int]:
     """Pick 4 ascending class widths [0, a, b, m] minimizing total payload
     bits, by exact scan over the width histogram (the vectorizable analog of
@@ -364,20 +350,13 @@ def choose_class_widths(widths: np.ndarray) -> list[int]:
 
 
 def _pack_classed(vals: np.ndarray) -> bytes:
-    """Pack uint64s as (2-bit class tags ++ per-class fixed-width payloads)."""
-    n = vals.size
-    widths = value_bit_widths(vals)
+    """Pack uint64s as a ``<IBBBB`` (count, class widths) header plus a
+    classed stream whose class c holds the values of width <= cw[c]."""
     # class index = first class whose width >= value width (shared with the
     # selector's size estimators via classed_stats — one source of truth)
-    cw, cls = classed_stats(widths)
-    cls = cls.astype(_U64)
-    header = struct.pack("<IBBBB", n, *cw)
-    parts = [header, bitio.pack(cls, 2)]
-    for c in range(4):
-        sel = vals[cls == c]
-        parts.append(struct.pack("<I", sel.size))
-        parts.append(bitio.pack(sel, cw[c]))
-    return b"".join(parts)
+    cw, cls = classed_stats(bitio.bit_widths(vals))
+    sections = [(vals[cls == c], cw[c]) for c in range(4)]
+    return struct.pack("<IBBBB", vals.size, *cw) + bitio.pack_classes(cls, sections)
 
 
 def _unpack_classed(buf: memoryview) -> np.ndarray:
@@ -385,18 +364,10 @@ def _unpack_classed(buf: memoryview) -> np.ndarray:
     cw = struct.unpack_from("<BBBB", buf, 4)
     if n == 0:
         return np.empty(0, dtype=_U64)
-    off = 8
-    tag_bytes = (n * 2 + 7) // 8
-    cls = bitio.unpack(buf[off : off + tag_bytes], 2, n)
-    off += tag_bytes
+    tags, payloads, _end = bitio.unpack_classes(buf, 8, n, list(enumerate(cw)))
     out = np.zeros(n, dtype=_U64)
-    for c in range(4):
-        (cnt,) = struct.unpack_from("<I", buf, off)
-        off += 4
-        nbytes = (cnt * cw[c] + 7) // 8
-        if cnt:
-            out[cls == c] = bitio.unpack(buf[off : off + nbytes], cw[c], cnt)
-        off += nbytes
+    for c, payload in enumerate(payloads):
+        out[tags == c] = payload
     return out
 
 
@@ -436,7 +407,7 @@ def dod_decode(buf: bytes) -> np.ndarray:
     if n == 1:
         return out
     if n == 2:
-        out[1] = first + first_delta
+        out[1] = _wrap_i64(first + first_delta)
         return out
     dod = bitio.unzigzag(_unpack_classed(memoryview(buf)[20:]))
     deltas = np.empty(n - 1, dtype=_I64)

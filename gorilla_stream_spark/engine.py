@@ -261,18 +261,18 @@ def _decode_block_checked(col: dict, i: int, strict: bool) -> np.ndarray:
     return flat
 
 
-def _tiling_lens(lens_arr, n_tokens: int, where: str) -> np.ndarray:
-    """Per-doc lengths (an Arrow int array) as int64, checked to tile the
-    ``n_tokens`` decoded tokens.  ``crc32_raw`` covers the token stream but
-    not the lengths: a short sum would silently drop the block's tail and a
-    negative length would build an invalid Arrow list."""
+def _tiling_lens(lens_arr, n_values: int, where: str, name: str = "doc_lens") -> np.ndarray:
+    """Per-row lengths (an Arrow int array; ``name`` is its column) as int64,
+    checked to tile the ``n_values`` decoded values.  ``crc32_raw`` covers
+    the value stream but not the lengths: a short sum would silently drop the
+    block's tail and a negative length would build an invalid Arrow list."""
     lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
     total = int(lens.sum())
-    if total != n_tokens or (lens.size and int(lens.min()) < 0):
+    if total != n_values or (lens.size and int(lens.min()) < 0):
         raise ValueError(
-            f"doc_lens do not tile {where}: {lens.size} lengths sum to {total}"
+            f"{name} do not tile {where}: {lens.size} lengths sum to {total}"
             f" (min {int(lens.min()) if lens.size else 0}),"
-            f" decoded {n_tokens} tokens"
+            f" decoded {n_values} values"
         )
     return lens
 

@@ -50,6 +50,8 @@ from typing import Iterator
 
 import numpy as np
 
+from gorilla_stream_spark.codecs import bitio
+
 __all__ = [
     "MAGIC",
     "VERSION",
@@ -86,96 +88,6 @@ _FLAG_COUNTER = 0x2
 # decoder dispatch :1417-1424 checks 0x8 before 0x4, mirrored here)
 _FLAG_CHIMP = 0x4
 _FLAG_CHIMP128 = 0x8
-
-
-# ---------------------------------------------------------------------------
-# Bit-level kernels (vectorized; no per-value Python in the hot paths)
-# ---------------------------------------------------------------------------
-
-
-def _pack_fields(vals: np.ndarray, widths: np.ndarray) -> tuple[bytes, int]:
-    """MSB-first concatenation of variable-width fields -> (bytes, nbits).
-
-    Word-wise construction: every field lands in at most two consecutive
-    big-endian 64-bit words, fields never share bits (so OR == ADD), and
-    field offsets are non-decreasing — one stable sort of the (word,
-    contribution) pairs plus ``np.add.reduceat`` assembles the stream with
-    zero per-field Python and O(words) memory (the old per-bit matrix
-    built ``total_bits`` byte temporaries; this is ~8x less traffic).
-    Zero-pads the final byte exactly like the reference's
-    pad_to_byte_boundary (bit_packing.ex:115-125).
-    """
-    v = np.ascontiguousarray(vals, dtype=np.uint64)
-    w = np.ascontiguousarray(widths, dtype=np.int64)
-    total = int(w.sum())
-    if total == 0:
-        return b"", 0
-    # keep only non-empty fields (width-0 contributes nothing)
-    nz = w > 0
-    if not nz.all():
-        v, w = v[nz], w[nz]
-    o = np.cumsum(w) - w  # start bit of each field
-    w0 = o >> 6
-    hi_shift = 64 - (o & 63) - w  # may be negative (field crosses a word)
-    pos_sh = np.maximum(hi_shift, 0).astype(np.uint64)
-    neg_sh = np.maximum(-hi_shift, 0).astype(np.uint64)
-    hi = np.where(hi_shift >= 0, v << pos_sh, v >> neg_sh)
-    crosses = hi_shift < 0
-    if crosses.any():
-        lo = v[crosses] << (np.uint64(64) - neg_sh[crosses])
-        idx = np.concatenate([w0, w0[crosses] + 1])
-        contrib = np.concatenate([hi, lo])
-        order = np.argsort(idx, kind="stable")
-        idx, contrib = idx[order], contrib[order]
-    else:
-        idx, contrib = w0, hi
-    run_start = np.concatenate(([True], idx[1:] != idx[:-1]))
-    sums = np.add.reduceat(contrib, np.flatnonzero(run_start))
-    n_words = (total + 63) >> 6
-    words = np.zeros(n_words, dtype=np.uint64)
-    words[idx[run_start]] = sums
-    return words.astype(">u8").tobytes()[: (total + 7) >> 3], total
-
-
-def _gather_bits_packed(data: np.ndarray, starts: np.ndarray, width: int) -> np.ndarray:
-    """Read ``width``-bit (<=64) unsigned values at arbitrary absolute bit
-    offsets from PACKED bytes — gathers ceil((7+w)/8) bytes per value
-    instead of one byte per BIT (~7x less traffic at w=64, the decode
-    hot path).  ``data`` must be a uint8 array.
-    """
-    if starts.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    o = starts.astype(np.int64, copy=False)
-    b0 = o >> 3
-    sh = (o & 7).astype(np.uint64)
-    nbytes = (7 + width + 7) >> 3  # worst-case window for any sh
-    pad = np.concatenate([data, np.zeros(nbytes, dtype=np.uint8)])
-    mat = pad[b0[:, None] + np.arange(nbytes, dtype=np.int64)]
-    mask = (
-        np.uint64(0xFFFFFFFFFFFFFFFF)
-        if width == 64
-        else (np.uint64(1) << np.uint64(width)) - np.uint64(1)
-    )
-    if nbytes <= 8:
-        win = np.zeros((o.size, 8), dtype=np.uint8)
-        win[:, 8 - nbytes :] = mat
-        hi = np.ascontiguousarray(win).view(">u8").ravel().astype(np.uint64)
-        return (hi >> (np.uint64(nbytes * 8) - sh - np.uint64(width))) & mask
-    # nbytes == 9 (width 58..64): 8-byte head + low-bit tail
-    hi = np.ascontiguousarray(mat[:, :8]).view(">u8").ravel().astype(np.uint64)
-    lo = mat[:, 8].astype(np.uint64)
-    win = np.where(
-        sh == 0,
-        hi,
-        (hi << sh) | (lo >> (np.uint64(8) - sh)),
-    )  # the top `width` bits of the 72-bit window, left-aligned at bit sh
-    return (win >> (np.uint64(64) - np.uint64(width))) & mask
-
-
-def _sign_extend(v: np.ndarray, width: int) -> np.ndarray:
-    """Two's-complement interpret ``width``-bit values as int64."""
-    sign = np.uint64(1) << np.uint64(width - 1)
-    return (v.astype(np.uint64) ^ sign).view(np.int64) - np.int64(1 << (width - 1))
 
 
 # ---------------------------------------------------------------------------
@@ -271,8 +183,8 @@ def _decode_dod_stream(
         m = cls == c
         if not m.any() or w == 0:
             continue
-        raw = _gather_bits_packed(packed, base + P[m] + plen, w)
-        out[m] = _sign_extend(raw, w)
+        raw = bitio.gather(packed, base + P[m] + plen, w)
+        out[m] = bitio.sign_extend(raw, w)
     return out, end
 
 
@@ -284,34 +196,6 @@ def _decode_dod_stream(
 # headers, ts stream) with outer-header flags 0x4 / 0x8 selecting the
 # value decoder.
 # ---------------------------------------------------------------------------
-
-# leading/trailing zero count per byte value (0 -> 8)
-_LZ8 = np.array([8] + [7 - int(b).bit_length() + 1 for b in range(1, 256)], np.int64)
-_TZ8 = np.array(
-    [8] + [(int(b) & -int(b)).bit_length() - 1 for b in range(1, 256)], np.int64
-)
-
-
-def _clz64(x: np.ndarray) -> np.ndarray:
-    """Leading-zero count of uint64 values (0 -> 64). Byte-table based —
-    float-conversion tricks mis-round near 2^k boundaries."""
-    B = np.ascontiguousarray(x, dtype=">u8").view(np.uint8).reshape(-1, 8)
-    nz = B != 0
-    first = np.argmax(nz, axis=1)
-    out = first * 8 + _LZ8[B[np.arange(B.shape[0]), first]]
-    out[~nz.any(axis=1)] = 64
-    return out
-
-
-def _ctz64(x: np.ndarray) -> np.ndarray:
-    """Trailing-zero count of uint64 values (0 -> 64)."""
-    B = np.ascontiguousarray(x, dtype="<u8").view(np.uint8).reshape(-1, 8)
-    nz = B != 0
-    first = np.argmax(nz, axis=1)
-    out = first * 8 + _TZ8[B[np.arange(B.shape[0]), first]]
-    out[~nz.any(axis=1)] = 64
-    return out
-
 
 # leading-zero-count -> 3-bit bucket code / rounded-down boundary
 # (gorilla_nif.cpp:424-448); decode table is _CHIMP_DECODE[code]
@@ -333,7 +217,7 @@ _CHIMP128_HASH_MASK = np.uint64((1 << (_CHIMP128_THRESHOLD + 1)) - 1)
 def _interleave_fields(
     hdr_v: np.ndarray, hdr_w: np.ndarray, pay_v: np.ndarray, pay_w: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(header, payload) per element -> flat field arrays for _pack_fields
+    """(header, payload) per element -> flat field arrays for bitio.pack_fields
     (zero-width payloads are dropped there)."""
     n = hdr_v.size
     fv = np.empty(2 * n, dtype=np.uint64)
@@ -363,8 +247,8 @@ def _chimp_fields(vb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Chimp value fields for values[1:] -> (vals, widths)
     (gorilla_nif.cpp:450-519).  First value's 64 bits are the caller's."""
     x = vb[1:] ^ vb[:-1]
-    lead = _clz64(x)
-    trail = _ctz64(x)
+    lead = bitio.clz64(x)
+    trail = bitio.ctz64(x)
     zero = x == 0
     f01 = (~zero) & (trail > 6)
     rep = _CHIMP_REPR[np.minimum(lead, 64)]
@@ -416,8 +300,8 @@ def _chimp128_fields(vb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     in_window = (ji >= 0) & (ii - ji <= _CHIMP128_N)
     xr = np.where(in_window, vb[1:] ^ vb[np.maximum(ji, 0)], np.uint64(0))
     xp = vb[1:] ^ vb[:-1]
-    tr_ring = _ctz64(xr)  # 64 when xr == 0, matching the NIF's convention
-    tr_prev = _ctz64(xp)
+    tr_ring = bitio.ctz64(xr)  # 64 when xr == 0, matching the NIF's convention
+    tr_prev = bitio.ctz64(xp)
     use_ring = in_window & (tr_ring >= tr_prev)
     ring_f00 = use_ring & (xr == 0)
     ring_f01 = use_ring & (xr != 0) & (tr_ring > _CHIMP128_THRESHOLD)
@@ -425,13 +309,13 @@ def _chimp128_fields(vb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     # value (the NIF's goto use_prev)
     prev_path = ~(ring_f00 | ring_f01)
     p_f00 = prev_path & (xp == 0)
-    lead_p = _clz64(xp)
+    lead_p = bitio.clz64(xp)
     rep_p = _CHIMP_REPR[np.minimum(lead_p, 64)]
     rnd_p = _CHIMP_ROUND[np.minimum(lead_p, 64)]
     prev_stored = _stored_leading_prev(ring_f00 | ring_f01 | p_f00, rnd_p)
     f10 = prev_path & (xp != 0) & (lead_p == prev_stored)
     f11 = prev_path & (xp != 0) & (~f10)
-    lead_r = _clz64(xr)
+    lead_r = bitio.clz64(xr)
     rnd_r = _CHIMP_ROUND[np.minimum(lead_r, 64)]
     # rounded-leading significant count — same deliberate deviation as
     # _chimp_fields (the NIF's unrounded count mis-decodes off-boundary
@@ -466,19 +350,7 @@ def _decode_values_chimp(bits: np.ndarray, count: int, first_bits: int) -> np.nd
     out[0] = first_bits
     prev = int(first_bits)
     stored_leading = 65
-    pos = 64
-    bl = bits.tolist()
-    npos = len(bl)
-
-    def read(w: int) -> int:
-        nonlocal pos
-        if pos + w > npos:
-            raise ValueError("gorilla wire: chimp value bitstream truncated")
-        v = 0
-        for b in bl[pos : pos + w]:
-            v = (v << 1) | b
-        pos += w
-        return v
+    read = bitio.BitReader(bits, 64, "gorilla wire: chimp value bitstream truncated").read
 
     for i in range(1, count):
         flag = read(2)
@@ -513,19 +385,7 @@ def _decode_values_chimp128(
     ring_pos = 1
     stored_val = int(first_bits)
     stored_leading = 65
-    pos = 64
-    bl = bits.tolist()
-    npos = len(bl)
-
-    def read(w: int) -> int:
-        nonlocal pos
-        if pos + w > npos:
-            raise ValueError("gorilla wire: chimp128 value bitstream truncated")
-        v = 0
-        for b in bl[pos : pos + w]:
-            v = (v << 1) | b
-        pos += w
-        return v
+    read = bitio.BitReader(bits, 64, "gorilla wire: chimp128 value bitstream truncated").read
 
     for i in range(1, count):
         flag = read(2)
@@ -710,7 +570,7 @@ def encode_points(
     header_fields_w = np.full(header_fields_v.size, 8, dtype=np.int64)
     all_vals = np.concatenate([header_fields_v] + f_vals)
     all_wid = np.concatenate([header_fields_w] + f_wid)
-    payload, _bits = _pack_fields(all_vals, all_wid)
+    payload, _bits = bitio.pack_fields(all_vals, all_wid)
 
     compressed_size = len(payload)
     original_size = n * 16  # metadata.ex:140-144
@@ -752,19 +612,7 @@ def _decode_values_sequential(
     out[0] = first_bits
     prev = first_bits
     lead, trail = 0, 0
-    pos = 64
-    bl = bits.tolist()
-    npos = len(bl)
-
-    def read(w: int) -> int:
-        nonlocal pos
-        if pos + w > npos:
-            raise ValueError("gorilla wire: value bitstream truncated")
-        v = 0
-        for b in bl[pos : pos + w]:
-            v = (v << 1) | b
-        pos += w
-        return v
+    read = bitio.BitReader(bits, 64, "gorilla wire: value bitstream truncated").read
 
     for i in range(1, count):
         if read(1) == 0:
@@ -792,7 +640,7 @@ def _gather_var_bits(
 ) -> np.ndarray:
     """Per-element variable-width (1..64 bit) gather at absolute offsets:
     one fixed 64-bit gather, then keep each element's top ``width`` bits."""
-    full = _gather_bits_packed(datab, abs_starts, 64)
+    full = bitio.gather(datab, abs_starts, 64)
     return full >> (np.uint64(64) - widths.astype(np.uint64))
 
 
@@ -891,7 +739,7 @@ def _decode_values_general(
             if J_self is None:
                 idx = np.arange(V, dtype=np.int64)
                 mlen_self = (
-                    _gather_bits_packed(datab, base + idx + 7, 6).astype(np.int64) + 1
+                    bitio.gather(datab, base + idx + 7, 6).astype(np.int64) + 1
                 )
                 BAR = V + 1
                 Js = np.where(
@@ -918,7 +766,7 @@ def _decode_values_general(
             P11 = Pk[m11]
             if P11.size:
                 ml = mlen_self[P11]
-                lead = _gather_bits_packed(datab, base + P11 + 2, 5).astype(np.int64)
+                lead = bitio.gather(datab, base + P11 + 2, 5).astype(np.int64)
                 tr = 64 - lead - ml
                 if (tr < 0).any():
                     raise ValueError("invalid trailing zeros calculation")
@@ -944,7 +792,7 @@ def _decode_values_general(
         if w11.size:
             ml_map = np.zeros(S_len, dtype=np.int64)
             ml_map[w11] = (
-                _gather_bits_packed(datab, base + pos + w11 + 7, 6).astype(np.int64) + 1
+                bitio.gather(datab, base + pos + w11 + 7, 6).astype(np.int64) + 1
             )
             width_sl[w11] = 13 + ml_map[w11]
         idx = np.arange(S_len, dtype=np.int64)
@@ -976,7 +824,7 @@ def _decode_values_general(
         if sel11.any():
             P11 = Pk[sel11]
             ml = ml_map[P11]
-            lead = _gather_bits_packed(datab, base + pos + P11 + 2, 5).astype(np.int64)
+            lead = bitio.gather(datab, base + pos + P11 + 2, 5).astype(np.int64)
             tr11 = 64 - lead - ml
             if (tr11 < 0).any():
                 raise ValueError("invalid trailing zeros calculation")
@@ -991,7 +839,7 @@ def _decode_values_general(
             lastf = np.maximum.accumulate(j11)
             tr_map = np.concatenate([np.array([trail], dtype=np.int64), tr_tok])
             tr_ff = tr_map[lastf + 1]
-            pay = _gather_bits_packed(datab, base + pos + Pk[sel10] + 2, w)
+            pay = bitio.gather(datab, base + pos + Pk[sel10] + 2, w)
             x[sel10] = pay << tr_ff[sel10].astype(np.uint64)
         xors[i : i + consumed] = x
         i += consumed
@@ -1172,7 +1020,7 @@ def decode_points(
     )
     # the reference decodes from the inner header (bit_packing.ex:136-199)
     count, ts_bit_len, val_bit_len = i_count, i_ts_len, i_val_len
-    if count > (1 << 28) or count < 1:
+    if count > bitio.MAX_COUNT or count < 1:
         # an empty series encodes to an empty buffer (handled above), so a
         # zero/negative inner count on a non-empty payload is corruption —
         # downstream first-value reads would IndexError instead
@@ -1188,7 +1036,7 @@ def decode_points(
     tb = bits[:ts_bit_len]
     if ts_bit_len < 64:
         raise ValueError("gorilla wire: timestamp stream too short")
-    first_ts = int(_gather_bits_packed(datab, np.array([0]), 64)[0])
+    first_ts = int(bitio.gather(datab, np.array([0]), 64)[0])
     first_ts = first_ts - (1 << 64) if first_ts >= (1 << 63) else first_ts  # signed read
     if count == 1:
         ts = np.array([first_ts], dtype=np.int64)
@@ -1203,7 +1051,7 @@ def decode_points(
     vb = bits[ts_bit_len : ts_bit_len + val_bit_len]
     if val_bit_len < 64:
         raise ValueError("gorilla wire: value stream too short")
-    first_vb = int(_gather_bits_packed(datab, np.array([ts_bit_len]), 64)[0])
+    first_vb = int(bitio.gather(datab, np.array([ts_bit_len]), 64)[0])
     if count == 1:
         vbits = np.array([first_vb], dtype=np.uint64)
     elif flags & _FLAG_CHIMP128:
@@ -1227,7 +1075,7 @@ def decode_points(
             xors = np.zeros(count, dtype=np.uint64)
             if P10.size:
                 idxs = P10 - 64 - 65 * np.arange(P10.size, dtype=np.int64)
-                xors[1 + idxs] = _gather_bits_packed(
+                xors[1 + idxs] = bitio.gather(
                     datab, ts_bit_len + P10 + 2, 64
                 )
             xors[0] = np.uint64(first_vb)

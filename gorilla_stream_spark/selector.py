@@ -86,7 +86,7 @@ def candidate_sizes(
     # classed FOR: residual width histogram -> exact classed-stream size
     resid = (a - f["min"]).view(np.uint64)
     sizes["forc"] = intcodecs.classed_size_from_widths(
-        intcodecs.value_bit_widths(resid), header=12
+        bitio.bit_widths(resid), header=12
     )
     # rle
     rv, rl = f["_run_vals"], f["_run_lens"]
@@ -103,7 +103,7 @@ def candidate_sizes(
     if n > 2:
         dod_zz = bitio.zigzag(np.diff(np.diff(a)))
         sizes["dod"] = intcodecs.classed_size_from_widths(
-            intcodecs.value_bit_widths(dod_zz), header=20
+            bitio.bit_widths(dod_zz), header=20
         )
     # fsst: trial-encode a sample (cheap, bounded) and extrapolate
     if try_fsst and n >= _FSST_MIN_N and 0 <= f["min"] and f["max"] < 0xFFFFFFFF - 1:
@@ -166,7 +166,7 @@ def sampled_sizes(
     sizes["for"] = 13 + _pack_size(n, bitio.bit_width(vmax - vmin))
     # classed FOR from the sample's residual width distribution; overhead =
     # 12 frame + 8 classed header + 16 per-class counts (matches forc_encode)
-    residw = intcodecs.value_bit_widths((s - vmin).view(np.uint64))
+    residw = bitio.bit_widths((s - vmin).view(np.uint64))
     forc_bits = intcodecs.classed_payload_bits(residw)
     sizes["forc"] = 36 + int((forc_bits + 2 * ns) / ns * n / 8)
     rv, rl = f["_run_vals"], f["_run_lens"]
@@ -182,7 +182,7 @@ def sampled_sizes(
     sizes["delta"] = 13 + _pack_size(n - 1, f["delta_width"])
     if ns > 2:
         dod_zz = bitio.zigzag(np.diff(np.diff(s)))
-        dod_bits = intcodecs.classed_payload_bits(intcodecs.value_bit_widths(dod_zz))
+        dod_bits = intcodecs.classed_payload_bits(bitio.bit_widths(dod_zz))
         bits_per_val = (dod_bits + 2 * dod_zz.size) / dod_zz.size
         sizes["dod"] = 44 + int(bits_per_val * (n - 2) / 8)
     if try_fsst and 0 <= vmin and vmax < 0xFFFFFFFF - 1:

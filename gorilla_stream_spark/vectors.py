@@ -31,7 +31,8 @@ from gorilla_stream_spark.codecs import (
     decode_array,
     floatcodecs,
 )
-from gorilla_stream_spark.engine import _block_bounds, _check_seq, _flatten_arrow, _list_array
+from gorilla_stream_spark.engine import _block_bounds, _check_seq, _flatten_arrow
+from gorilla_stream_spark.engine import _list_array, _tiling_lens
 
 __all__ = [
     "encode_vectors",
@@ -379,7 +380,8 @@ def decode_vectors(
                         raise ValueError(
                             f"crc32 mismatch on block {col['block_id'][i].as_py()}"
                         )
-                lens = col["vec_lens"][i].values.to_numpy(zero_copy_only=False)
+                where = f"vector block {col['block_id'][i].as_py()}"
+                lens = _tiling_lens(col["vec_lens"][i].values, flat.size, where, "vec_lens")
                 arrays = [
                     col["vec_ids"][i].values.cast(pa.int64()),
                     _list_array(flat, lens, np.float32),

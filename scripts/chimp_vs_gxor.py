@@ -25,11 +25,8 @@ import numpy as np
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gorilla_stream_spark.codecs import encode_array  # noqa: E402
-from gorilla_stream_spark.codecs.floatcodecs import (  # noqa: E402
-    gxor_encode,
-    leading_zeros64,
-    trailing_zeros64,
-)
+from gorilla_stream_spark.codecs.bitio import clz64, ctz64  # noqa: E402
+from gorilla_stream_spark.codecs.floatcodecs import gxor_encode  # noqa: E402
 
 
 def gorilla_cost_bits(vals: np.ndarray) -> int:
@@ -44,8 +41,8 @@ def gorilla_cost_bits(vals: np.ndarray) -> int:
         if x == 0:
             cost += 1
             continue
-        lead = min(int(leading_zeros64(np.array([x]))[0]), 31)
-        trail = int(trailing_zeros64(np.array([x]))[0])
+        lead = min(int(clz64(np.array([x]))[0]), 31)
+        trail = int(ctz64(np.array([x]))[0])
         sig = 64 - lead - trail
         if prev_sig > 0 and lead >= prev_lead and 64 - prev_lead - prev_sig <= trail:
             cost += 2 + prev_sig
@@ -74,8 +71,8 @@ def chimp_cost_bits(vals: np.ndarray) -> int:
             cost += 2
             prev_lead = -1
             continue
-        lead = _chimp_round_lead(min(int(leading_zeros64(np.array([x]))[0]), 31))
-        trail = int(trailing_zeros64(np.array([x]))[0])
+        lead = _chimp_round_lead(min(int(clz64(np.array([x]))[0]), 31))
+        trail = int(ctz64(np.array([x]))[0])
         if trail > 6:
             center = 64 - lead - trail
             cost += 2 + 3 + 6 + center

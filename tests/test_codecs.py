@@ -606,3 +606,71 @@ def test_rle_decode_rejects_wrapping_run_lengths():
     )
     assert res.returncode == 0, (res.returncode, res.stderr[-2000:])
     assert "ValueError: rle run length outside [0, 5]" in res.stdout, res.stdout
+
+
+def _drop_last_section(buf: bytes, off: int, n: int, widths) -> bytes:
+    """Walk a classed stream (n 2-bit tags at byte ``off``, then a ``<I``
+    count + payload per width) and zero the last section's count, dropping
+    its payload bytes — a buffer whose counts disagree with its tags."""
+    import struct as _struct
+
+    off += (2 * n + 7) // 8
+    for width in widths:
+        (cnt,) = _struct.unpack_from("<I", buf, off)
+        last, nbytes = off, (cnt * width + 7) // 8
+        off += 4 + nbytes
+    assert cnt > 0, "the last class must be non-empty for the case to bite"
+    assert off == len(buf)
+    return buf[:last] + b"\0\0\0\0"
+
+
+def test_classed_count_tag_mismatch_raises():
+    rng = np.random.default_rng(11)
+    n = 400
+    # dod: mostly regular ticks with a few wide jumps so class 3 is populated
+    ts = np.cumsum(rng.integers(59, 62, n) + (rng.random(n) < 0.05) * rng.integers(1, 1 << 40, n))
+    body = intcodecs.dod_encode(ts)
+    cw = tuple(body[24:28])
+    bad = _drop_last_section(body, 28, n - 2, cw)
+    with pytest.raises(ValueError, match="classed stream: class 3 declares 0"):
+        intcodecs.dod_decode(bad)
+    # gxor: a heavy-tailed series leaves raw-64 (class 3) values
+    vals = rng.standard_cauchy(n)
+    body = floatcodecs.gxor_encode(vals)
+    widths = (body[13] or 64, body[15] or 64, 64)
+    bad = _drop_last_section(body, 16, n - 1, widths)
+    with pytest.raises(ValueError, match="classed stream: class 3 declares 0"):
+        floatcodecs.gxor_decode(bad)
+    # the intact buffers still round-trip
+    np.testing.assert_array_equal(intcodecs.dod_decode(intcodecs.dod_encode(ts)), ts)
+    np.testing.assert_array_equal(floatcodecs.gxor_decode(body).view(np.uint64), vals.view(np.uint64))
+
+
+@pytest.mark.parametrize("codec", ["gxor", "xorlag"])
+def test_xor_window_wider_than_64_bits_raises(codec):
+    import warnings
+
+    vals = np.round(np.cumsum(np.random.default_rng(3).normal(0, 1, 300)), 3)
+    if codec == "gxor":
+        buf, off, decode = bytearray(floatcodecs.gxor_encode(vals)), 12, floatcodecs.gxor_decode
+    else:
+        buf = bytearray(floatcodecs.xorlag_encode(vals, lag=2))
+        off, decode = 5 + 8 * 2, floatcodecs.xorlag_decode
+    assert (buf[off + 1] or 64) > 4  # so a lead of 60 overflows the window
+    buf[off] = 60
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        with pytest.raises(ValueError, match="lead \\+ sigbits > 64"):
+            decode(bytes(buf))
+
+
+def test_bitio_unpack_rejects_width_over_64():
+    with pytest.raises(ValueError, match="width 65 > 64"):
+        bitio.unpack(b"\xff" * 16, 65, 1)
+
+
+def test_dod_two_values_with_wrapping_delta_roundtrip():
+    # with n == 2 the second value is rebuilt from the header's scalar
+    # first_delta; it wraps mod 2^64 like the array path
+    a = np.array([-(2**63) + 5, 2**63 - 1], dtype=np.int64)
+    np.testing.assert_array_equal(intcodecs.dod_decode(intcodecs.dod_encode(a)), a)

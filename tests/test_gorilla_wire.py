@@ -20,6 +20,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gorilla_stream_spark import gorilla_wire as gw
+from gorilla_stream_spark.codecs import bitio
 
 
 # ---------------------------------------------------------------------------
@@ -466,14 +467,14 @@ def test_pack_fields_gather_roundtrip(fields):
     vals = np.array(
         [v & ((1 << w) - 1) for w, v in fields], dtype=np.uint64
     )
-    buf, nbits = gw._pack_fields(vals, widths)
+    buf, nbits = bitio.pack_fields(vals, widths)
     assert nbits == int(widths.sum())
     assert len(buf) == (nbits + 7) // 8
     data = np.frombuffer(buf, dtype=np.uint8)
     starts = np.cumsum(widths) - widths
     for w in np.unique(widths):
         m = widths == w
-        got = gw._gather_bits_packed(data, starts[m], int(w))
+        got = bitio.gather(data, starts[m], int(w))
         assert np.array_equal(got, vals[m]), (w, got, vals[m])
 
 
@@ -611,6 +612,25 @@ def test_vm_negative_zero_byte_for_byte():
     # cap-6 scaling quantizes -4e-8 to exactly 0 (lossy, matches reference)
     assert np.allclose(v2, vals2, atol=5e-7)
     assert not np.signbit(v2[1])
+
+
+def _with_inner_count(buf: bytes, count: int) -> bytes:
+    """``buf`` with its inner-header count replaced and the crc refreshed."""
+    out = bytearray(buf)
+    struct.pack_into(">I", out, 80, count)  # inner header opens the payload
+    struct.pack_into(">I", out, 24, zlib.crc32(bytes(out[80:])) & 0xFFFFFFFF)
+    return bytes(out)
+
+
+def test_decode_points_count_bound_is_max_count(monkeypatch):
+    buf = gw.encode_points(np.arange(10) * 1000, np.arange(10) * 0.5)
+    with pytest.raises(ValueError, match="implausible count"):
+        gw.decode_points(_with_inner_count(buf, bitio.MAX_COUNT + 1))
+    # the bound is the shared constant, not a copy of its value
+    monkeypatch.setattr(bitio, "MAX_COUNT", 10)
+    assert gw.decode_points(buf)[0].size == 10
+    with pytest.raises(ValueError, match="implausible count 11"):
+        gw.decode_points(_with_inner_count(buf, 11))
 
 
 def test_decode_points_zeroed_inner_count_raises_cleanly():
@@ -1053,7 +1073,7 @@ def _run_general(bw, count):
     bits = np.unpackbits(datab)
     V = len(bw.bits)
     first = int(
-        gw._gather_bits_packed(datab, np.array([0]), 64)[0]
+        bitio.gather(datab, np.array([0]), 64)[0]
     )
     got = gw._decode_values_general(bits[:V], V, count, first, datab, 0)
     oracle = gw._decode_values_sequential(bits[:V], count, first)

@@ -35,7 +35,14 @@ def test_pack_unpack_roundtrip(width, n, data):
     out = bitio.unpack(bitio.pack(vals, width), width, vals.size)
     np.testing.assert_array_equal(out, vals)
     # byte length contract
-    assert len(bitio.pack(vals, width)) == (vals.size * width + 7) // 8
+    data = bitio.pack(vals, width)
+    assert len(data) == (vals.size * width + 7) // 8
+    # the fixed-width and the variable-width writer/reader share one layout
+    assert data == bitio.pack_fields(vals, np.full(vals.size, width))[0]
+    if width:
+        starts = np.arange(vals.size) * width
+        got = bitio.gather(np.frombuffer(data, dtype=np.uint8), starts, width)
+        np.testing.assert_array_equal(out, got)
 
 
 _INT_CODECS = ["raw", "for", "forc", "rle", "dict", "delta", "dod", "fsst"]

@@ -559,3 +559,18 @@ def test_ivf_pq_filter_reaches_scan(spark, clustered, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters" in plan and "bucket_pfx" in plan.split("PartitionFilters")[1][:200], plan
+
+
+@pytest.mark.parametrize("lens", [[4, 4, 3], [-4, 8, 8]], ids=["short", "negative"])
+def test_decode_vectors_rejects_untiled_vec_lens(spark, lens):
+    # crc32_raw covers the values, not vec_lens: a short sum would drop the
+    # block's tail, a negative length would build an invalid list
+    df = spark.createDataFrame(
+        [(i, [float(i), 0.5, -1.0, 2.0]) for i in range(3)], "vec_id long, embedding array<float>"
+    )
+    enc = V.encode_vectors(df, num_partitions=1).localCheckpoint()
+    assert enc.count() == 1
+    assert V.decode_vectors(enc).count() == 3
+    bad = enc.withColumn("vec_lens", F.array(*[F.lit(v) for v in lens]).cast("array<int>"))
+    with pytest.raises(Exception, match="ValueError: vec_lens do not tile vector block"):
+        V.decode_vectors(bad, strict=True).collect()
