@@ -534,16 +534,16 @@ def run_pass(spark, toks, tokens_path, total_tokens, enc_path, sf):
     # HOF (oracle formulation — deliberately slow, so it runs on a 20K-doc
     # sample and the speedup is per-doc-normalized; no reason to spend 15s
     # of bench wall proving the slow path is slow)
-    from gorilla_stream_spark.textops import simhash
+    from gorilla_stream_spark.textops import simhash, simhash_hof
 
     t0 = time.time()
-    simhash(corpus, impl="kernel").agg(F.expr("bit_xor(simhash)")).first()
+    simhash(corpus).agg(F.expr("bit_xor(simhash)")).first()
     queries["q8b_simhash_kernel"] = time.time() - t0
     n_sample = min(10000, n_corpus)
     sim_sample = corpus.limit(n_sample).persist()
     sim_sample.count()
     t0 = time.time()
-    simhash(sim_sample, impl="hof").agg(F.expr("bit_xor(simhash)")).first()
+    simhash_hof(sim_sample).agg(F.expr("bit_xor(simhash)")).first()
     queries["q8c_simhash_hof_10k"] = time.time() - t0
     sim_sample.unpersist()
     extras["simhash_kernel_docs_per_sec"] = n_corpus / queries["q8b_simhash_kernel"]

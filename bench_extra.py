@@ -43,7 +43,7 @@ def main() -> int:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     from gorilla_stream_spark import encode
     from gorilla_stream_spark.session import get_spark
-    from gorilla_stream_spark.textops import duplicate_spans, simhash
+    from gorilla_stream_spark.textops import duplicate_spans, simhash_hof
     from gorilla_stream_spark.vocab import build_global_dict, remap_tokens
 
     spark = get_spark(app_name="gss-bench-extra", master=f"local[{CPUS}]",
@@ -73,7 +73,7 @@ def main() -> int:
     ).agg(F.count("*"), F.sum("dup_tokens")).collect())
     sample = corpus.limit(10000).persist()
     sample.count()
-    run("simhash_hof_10k", lambda: simhash(sample, impl="hof").agg(
+    run("simhash_hof_10k", lambda: simhash_hof(sample).agg(
         F.expr("bit_xor(simhash)")).first())
     sample.unpersist()
     vtoks = toks.filter(F.col("source").isin(

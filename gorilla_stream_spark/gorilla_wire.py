@@ -496,6 +496,7 @@ def encode_points(
     n = ts.size
     if vals.size != n:
         raise ValueError("timestamp/value counts must match")  # bit_packing.ex:30
+    bitio.check_count(n)  # decode_points refuses larger blocks
     if n == 0:
         return b""
     if algorithm not in ("gorilla", "chimp", "chimp128"):
@@ -1361,6 +1362,8 @@ def encode_timeseries_wire(
 
     if algorithm not in ("gorilla", "chimp", "chimp128"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
+    if not 1 <= block_points <= bitio.MAX_COUNT:
+        raise ValueError(f"block_points must be in [1, {bitio.MAX_COUNT}], got {block_points}")
     slim = df.select(
         F.col(ts_col).cast("long").alias("__ts"),
         F.col(val_col).cast("double").alias("__val"),

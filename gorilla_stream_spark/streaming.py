@@ -492,7 +492,6 @@ def simhash_neardup_stream(
         ),
         text_col="text",
         id_col="doc_id",
-        impl="kernel",
     )
     bands = simhash_bands(sig, id_col="doc_id", n_bands=max_hamming + 1).withColumn(
         "__sb", F.pmod(F.xxhash64("band_bits"), F.lit(int(state_buckets)))

@@ -20,6 +20,8 @@ Design rules (100 TB first):
 
 from __future__ import annotations
 
+from itertools import chain
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,7 +38,6 @@ __all__ = [
     "simhash",
     "simhash_hof",
     "shingle_sets",
-    "minhash_signature",
     "lsh_candidate_pairs",
     "neardup_pairs",
     "corpus_report",
@@ -256,9 +257,7 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
 SIMHASH_BITS = 60
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", impl: str = "kernel"
-) -> DataFrame:
+def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """60-bit SimHash per doc, computed row-locally (no shuffle).
 
     Per word w: h = first 60 bits of md5(w).  Per bit i: sum +-1 over all
@@ -266,17 +265,12 @@ def simhash(
     differ in few bits — hamming-band bucketing then finds near-dups with
     *deterministic* recall (pigeonhole, see ``simhash_bands``).
 
-    ``impl="kernel"`` (default, production) is the fused Arrow/numpy kernel
-    — one md5 per *unique* word per batch, one vectorized ``reduceat`` bit
-    count; ``impl="hof"`` is the pure-SQL higher-order-function formulation
-    of the identical bit definition (O(words x 60) interpreted lambda evals
-    per doc — measured an order of magnitude slower), kept as the
-    engine-portable oracle the kernel is parity-tested against bit-for-bit.
+    A fused Arrow/numpy kernel: one md5 per *unique* word per batch, one
+    vectorized ``reduceat`` bit count.  :func:`simhash_hof` is the pure-SQL
+    formulation of the identical bit definition (an order of magnitude
+    slower), kept as the engine-portable oracle this kernel is
+    parity-tested against bit-for-bit.
     """
-    if impl == "hof":
-        return simhash_hof(df, text_col=text_col, id_col=id_col)
-    if impl != "kernel":
-        raise ValueError(f"unknown simhash impl {impl!r}")
     import hashlib
 
     import pyarrow as pa
@@ -493,46 +487,45 @@ def _affine_min_sig(h: np.ndarray, starts: np.ndarray, A: np.ndarray, B: np.ndar
     return sig
 
 
-def shingle_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 128,
-    with_sh: bool = True,
-    with_sig: bool = True,
+def _shingle_kernel(
+    slim: DataFrame,
+    units,
+    k: int,
+    num_hashes: int,
+    with_sh: bool,
+    with_sig: bool,
+    where: str,
 ) -> DataFrame:
-    """(doc_id, sh: distinct k-shingle hashes, sig: MinHash signature) in ONE
-    vectorized Arrow pass — no interpreted per-element Spark expressions.
+    """The one MinHash kernel behind :func:`shingle_minhash` and
+    :func:`token_shingle_minhash`: (doc_id[, sh][, sig]) from ``slim`` =
+    (doc_id long, payload) in ONE vectorized Arrow pass, zero shuffles.
 
-    ``with_sig=False`` skips the MinHash reduction entirely (column pruning
-    cannot reach inside the kernel): consumers that only need the shingle
-    sets — containment-mode decontamination — should not pay for 128
-    affine reductions per doc.
+    ``units(rb)`` yields ``(ids, unit_hashes, units_per_doc)`` per slice of
+    a batch (uint64 word hashes for text, raw token values for tokens).
+    k-unit shingle hashes come from a rolling combine over the concatenated
+    units, minus the windows that straddle a doc boundary, deduped per doc
+    by one lexsort; the affine family ``(a_j*h + b_j) mod 2^64`` is reduced
+    per doc (see _affine_min_sig).  64-bit shingle hashes stand in for
+    shingle strings downstream (collisions ~2^-50 per corpus).  A
+    higher-order-function formulation was measured 10-40x slower.
 
-    Per batch: all texts split at once, every word hashed with ONE
-    ``pandas.util.hash_array`` call (SipHash, fixed key — deterministic
-    across runs/executors), k-word shingle hashes formed by a vectorized
-    rolling combine, deduped per doc, then the affine MinHash family
-    ``(a_j*h + b_j) mod 2^64`` reduced per segment (see _affine_min_sig).  The
-    (shingles, num_hashes) temporary is chunked to ~128 MB.  A higher-order-
-    function formulation of the same pipeline was measured 10-40x slower
-    (interpreted row-at-a-time); this kernel is bounded-memory and
-    C-speed throughout.  Shingle-hash sets stand in for shingle-string sets
-    downstream (64-bit collisions ~2^-50 per corpus — far below any other
-    error source).  Zero shuffles.
+    ``k`` and ``num_hashes`` are checked at call time: a bad value would
+    otherwise fail inside a Python worker at the first collect.
     """
-    import pandas as pd
     import pyarrow as pa
 
+    if k < 1 or num_hashes < 1:
+        raise ValueError(
+            f"{where}: k and num_hashes must be >= 1, got k={k}, num_hashes={num_hashes}"
+        )
+    if not with_sh and not with_sig:
+        raise ValueError(f"{where}: at least one of with_sh/with_sig required")
     rng = np.random.default_rng(_MINHASH_SEED)
     A = (rng.integers(1, 2**63 - 1, num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
     B = rng.integers(0, 2**63 - 1, num_hashes).astype(np.uint64)
     mix_rng = np.random.default_rng(_SH_MIX[0] & 0xFFFFFFFF)
     MIX = (mix_rng.integers(1, 2**63 - 1, k).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
 
-    if not with_sh and not with_sig:
-        raise ValueError("shingle_minhash: at least one of with_sh/with_sig required")
     fields = [("doc_id", pa.int64())]
     if with_sh:
         fields.append(("sh", pa.list_(pa.int64())))
@@ -546,40 +539,14 @@ def shingle_minhash(
     )
 
     def fn(batches):
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            if rb.num_rows == 0:
+        for ids, wh, lens in chain.from_iterable(map(units, batches)):
+            if wh.size < k:
                 continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            # split + vocab-dedup in Arrow C++; SipHash only the UNIQUE words
-            # (pd.util.hash_array over the dictionary — identical hash values
-            # to hashing every word, ~40x fewer hashes and no per-word Python
-            # objects, which also cuts the DRAM pressure that capped 2->8
-            # core scaling)
-            words_col = pc.split_pattern(rb.column(1), pattern=" ")
-            wlens = (
-                words_col.value_lengths()
-                .fill_null(0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            flat_words = words_col.flatten()  # null cells contribute 0 words
-            if len(flat_words) < k:
-                continue
-            enc = flat_words.dictionary_encode()
-            inv = enc.indices.to_numpy(zero_copy_only=False)
-            uh = pd.util.hash_array(enc.dictionary.to_numpy(zero_copy_only=False))
-            wh = uh[inv]
-            # distinct k-shingle hashes for the WHOLE batch in one pass:
-            # rolling combine over the concatenated word hashes, mask out
-            # windows that straddle doc boundaries, then per-doc dedup via
-            # one lexsort + adjacent-duplicate drop (no per-doc loops)
             m = wh.size - k + 1
             sh_all = wh[0:m] * MIX[0]
             for j in range(1, k):
                 sh_all = sh_all + wh[j : m + j] * MIX[j]
-            doc_of = np.repeat(np.arange(len(ids), dtype=np.int64), wlens)
+            doc_of = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
             in_doc = doc_of[:m] == doc_of[k - 1 :]
             sh_v = sh_all[in_doc]
             doc_v = doc_of[:m][in_doc]
@@ -620,49 +587,51 @@ def shingle_minhash(
                 )
             yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
-    slim = df.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("__text"))
     return slim.mapInArrow(fn, out_ddl)
 
 
-def minhash_signature(shingled: DataFrame, num_hashes: int = 128) -> DataFrame:
-    """MinHash signatures from string shingle sets (compat path; the fused
-    text->hashes->signature kernel is :func:`shingle_minhash`)."""
-    import pyarrow as pa
+def shingle_minhash(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 3,
+    num_hashes: int = 128,
+    with_sh: bool = True,
+    with_sig: bool = True,
+) -> DataFrame:
+    """(doc_id, sh: distinct k-word-shingle hashes, sig: MinHash signature)
+    for text documents, through :func:`_shingle_kernel`.
 
-    from gorilla_stream_spark.engine import _flatten_arrow
+    ``with_sig=False`` skips the MinHash reduction entirely (column pruning
+    cannot reach inside the kernel): consumers that only need the shingle
+    sets — containment-mode decontamination — should not pay for 128
+    affine reductions per doc.  Words are split on ``' '`` and hashed with
+    SipHash (fixed key — deterministic across runs/executors).
+    """
 
-    rng = np.random.default_rng(_MINHASH_SEED)
-    A = (rng.integers(1, 2**63 - 1, num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
-    B = rng.integers(0, 2**63 - 1, num_hashes).astype(np.uint64)
+    def units(rb):
+        import pandas as pd
+        import pyarrow.compute as pc
 
-    def fn(batches):
-        import pyarrow as _pa
+        # split + vocab-dedup in Arrow C++; SipHash only the UNIQUE words
+        # (pd.util.hash_array over the dictionary — identical hash values
+        # to hashing every word, ~40x fewer hashes and no per-word Python
+        # objects, which also cuts the DRAM pressure that capped 2->8
+        # core scaling)
+        words_col = pc.split_pattern(rb.column(1), pattern=" ")
+        wlens = (
+            words_col.value_lengths()
+            .fill_null(0)
+            .to_numpy(zero_copy_only=False)
+            .astype(np.int64)
+        )
+        enc = words_col.flatten().dictionary_encode()  # null cells contribute 0 words
+        inv = enc.indices.to_numpy(zero_copy_only=False)
+        uh = pd.util.hash_array(enc.dictionary.to_numpy(zero_copy_only=False))
+        yield rb.column(0).to_numpy(zero_copy_only=False), uh[inv], wlens
 
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            ids = rb.column(0)
-            flat, lens = _flatten_arrow(rb.column(1))
-            if flat.size == 0:
-                continue
-            h = flat.view(np.uint64)
-            offs_all = np.concatenate(([0], np.cumsum(lens)))
-            sig = _affine_min_sig(h, offs_all[:-1].astype(np.intp), A, B)
-            yield _pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    _pa.FixedSizeListArray.from_arrays(
-                        _pa.array(sig.view(np.int64).ravel(), type=_pa.int64()), num_hashes
-                    ).cast(_pa.list_(_pa.int64())),
-                ],
-                names=["doc_id", "sig"],
-            )
-
-    hashed = shingled.filter(F.size("shingles") > 0).select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.expr("transform(shingles, s -> xxhash64(s))").alias("hs"),
-    )
-    return hashed.mapInArrow(fn, "doc_id long, sig array<long>")
+    slim = df.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("__text"))
+    return _shingle_kernel(slim, units, k, num_hashes, with_sh, with_sig, "shingle_minhash")
 
 
 def _grouped_bucket_pairs(
@@ -798,14 +767,50 @@ def neardup_pairs(
 
     Both modes return identical pairs (pinned by test).
     """
+    return _neardup_impl(
+        shingle_minhash, df, text_col, id_col, k, num_hashes, threshold_pct, rows_per_band,
+        verify,
+    )
+
+
+def _nd_shingler(kernel, k: int, num_hashes: int):
+    """``shingler(frame, with_sh, with_sig)`` over the ``(__nd_id,
+    __nd_payload)`` frames the near-dup and decontamination drivers pass
+    around; ``kernel`` is :func:`shingle_minhash` or
+    :func:`token_shingle_minhash` — the only payload-specific piece."""
+
+    def shingler(frame: DataFrame, with_sh: bool, with_sig: bool) -> DataFrame:
+        return kernel(frame, "__nd_payload", "__nd_id", k, num_hashes, with_sh, with_sig)
+
+    return shingler
+
+
+def _nd_project(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
+    return df.select(
+        F.col(id_col).cast("long").alias("__nd_id"), F.col(payload_col).alias("__nd_payload")
+    )
+
+
+def _neardup_impl(
+    kernel,
+    df: DataFrame,
+    payload_col: str,
+    id_col: str,
+    k: int,
+    num_hashes: int,
+    threshold_pct: int,
+    rows_per_band: int,
+    verify: str,
+) -> DataFrame:
+    """Shared near-dup driver (text and token paths): MinHash-LSH candidates
+    + exact integer-jaccard verify, in ``verify`` mode "cached" or
+    "recompute" (see :func:`neardup_pairs`)."""
     if verify not in ("cached", "recompute"):
         raise ValueError(f"unknown verify mode {verify!r}")
-    slim = df.select(F.col(id_col).cast("long").alias("__nd_id"), F.col(text_col).alias("__nd_text"))
+    slim = _nd_project(df, id_col, payload_col)
+    shingler = _nd_shingler(kernel, k, num_hashes)
     if verify == "cached":
-        shmin = shingle_minhash(
-            slim, text_col="__nd_text", id_col="__nd_id", k=k, num_hashes=num_hashes,
-            with_sh=True,
-        ).persist()
+        shmin = shingler(slim, True, True).persist()
         cand = lsh_candidate_pairs(
             shmin.select("doc_id", "sig"), rows_per_band=rows_per_band,
             num_hashes=num_hashes,
@@ -815,10 +820,7 @@ def neardup_pairs(
             _verify_pairs(shmin.select("doc_id", "sh"), cand, threshold_pct),
             [shmin, cand],
         )
-    sig = shingle_minhash(
-        slim, text_col="__nd_text", id_col="__nd_id", k=k, num_hashes=num_hashes,
-        with_sh=False,
-    ).persist()
+    sig = shingler(slim, False, True).persist()
     cand = lsh_candidate_pairs(sig, rows_per_band=rows_per_band, num_hashes=num_hashes)
     cand = cand.persist()
     # materialize the caches with one action before the join plan builds:
@@ -832,10 +834,7 @@ def neardup_pairs(
         .distinct()
     )
     docs_c = slim.join(F.broadcast(cand_ids), "__nd_id", "left_semi")
-    shc = shingle_minhash(
-        docs_c, text_col="__nd_text", id_col="__nd_id", k=k, num_hashes=num_hashes,
-        with_sh=True, with_sig=False,  # verify reads only the shingle sets
-    ).persist()
+    shc = shingler(docs_c, True, False).persist()  # verify reads only the shingle sets
     return _finalize_unpersist(_verify_pairs(shc, cand, threshold_pct), [sig, cand, shc])
 
 
@@ -941,45 +940,38 @@ def decontaminate(
     oversized "eval" corpus falls back to a shuffled shingle join — same
     exact result, shuffle volume ~ both exploded sides.
     """
-    if metric not in ("jaccard", "containment"):
-        raise ValueError(f"unknown metric {metric!r}")
-
-    def shingler(frame: DataFrame, with_sh: bool, with_sig: bool) -> DataFrame:
-        return shingle_minhash(
-            frame, text_col="__nd_payload", id_col="__nd_id", k=k,
-            num_hashes=num_hashes, with_sh=with_sh, with_sig=with_sig,
-        )
-
-    tr = train_df.select(
-        F.col(id_col).cast("long").alias("__nd_id"), F.col(text_col).alias("__nd_payload")
-    )
-    ev = eval_df.select(
-        F.col(id_col).cast("long").alias("__nd_id"), F.col(text_col).alias("__nd_payload")
-    )
     return _decontaminate_impl(
-        tr, ev, shingler, threshold_pct, rows_per_band, num_hashes, metric,
-        eval_broadcast_max_shingles=eval_broadcast_max_shingles,
+        shingle_minhash, train_df, eval_df, text_col, id_col, k, num_hashes, threshold_pct,
+        rows_per_band, metric, eval_broadcast_max_shingles,
     )
 
 
 def _decontaminate_impl(
-    tr: DataFrame,
-    ev: DataFrame,
-    shingler,
+    kernel,
+    train_df: DataFrame,
+    eval_df: DataFrame,
+    payload_col: str,
+    id_col: str,
+    k: int,
+    num_hashes: int,
     threshold_pct: int,
     rows_per_band: int,
-    num_hashes: int,
     metric: str,
-    eval_broadcast_max_shingles: int = 8_000_000,
+    eval_broadcast_max_shingles: int,
 ) -> DataFrame:
     """Shared cross-corpus leak-detection pipeline (text and token paths).
 
-    ``shingler(frame, with_sh, with_sig)`` produces the (doc_id[, sh][,
+    ``kernel`` (via :func:`_nd_shingler`) produces the (doc_id[, sh][,
     sig]) table for either corpus; everything downstream — broadcast
     eval-side artifacts, signatures-only train pass with candidate-pruned
     shingle recompute (jaccard), exploded-shingle broadcast join
     (containment), shared integer verify — is payload-agnostic.
     """
+    if metric not in ("jaccard", "containment"):
+        raise ValueError(f"unknown metric {metric!r}")
+    tr = _nd_project(train_df, id_col, payload_col)
+    ev = _nd_project(eval_df, id_col, payload_col)
+    shingler = _nd_shingler(kernel, k, num_hashes)
     shm_e = shingler(ev, True, metric == "jaccard").persist()
     shm_e.count()  # materialize before the broadcast subtrees build
     if metric == "containment":
@@ -1090,92 +1082,21 @@ def token_shingle_minhash(
     with_sig: bool = True,
 ) -> DataFrame:
     """(doc_id, sh, sig) for TOKEN-ARRAY documents — the engine's native
-    data model.  Identical pipeline to :func:`shingle_minhash` but the
-    k-gram rolling combine runs over the raw token values (zero-copy Arrow
-    flatten, no string hashing at all): the cheapest near-dup path when the
-    corpus is already tokenized.
+    data model.  Same :func:`_shingle_kernel` as :func:`shingle_minhash`,
+    but the k-gram rolling combine runs over the raw token values (zero-copy
+    Arrow flatten, no string hashing at all): the cheapest near-dup path
+    when the corpus is already tokenized.
     """
-    import pyarrow as pa
 
-    from gorilla_stream_spark.engine import _flatten_arrow
+    def units(rb):
+        from gorilla_stream_spark.engine import _flatten_arrow, _token_batch_slices
 
-    rng = np.random.default_rng(_MINHASH_SEED)
-    A = (rng.integers(1, 2**63 - 1, num_hashes).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
-    B = rng.integers(0, 2**63 - 1, num_hashes).astype(np.uint64)
-    mix_rng = np.random.default_rng(_SH_MIX[0] & 0xFFFFFFFF)
-    MIX = (mix_rng.integers(1, 2**63 - 1, k).astype(np.uint64) << np.uint64(1)) | np.uint64(1)
-
-    if not with_sh and not with_sig:
-        raise ValueError("token_shingle_minhash: at least one of with_sh/with_sig required")
-    fields = [("doc_id", pa.int64())]
-    if with_sh:
-        fields.append(("sh", pa.list_(pa.int64())))
-    if with_sig:
-        fields.append(("sig", pa.list_(pa.int64())))
-    out_schema = pa.schema(fields)
-    out_ddl = (
-        "doc_id long"
-        + (", sh array<long>" if with_sh else "")
-        + (", sig array<long>" if with_sig else "")
-    )
-
-    def fn(batches):
-        from gorilla_stream_spark.engine import _token_batch_slices
-
-        for rb0 in batches:
-          for rb in _token_batch_slices(rb0, 1):
-            if rb.num_rows == 0:
-                continue
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            flat, lens = _flatten_arrow(rb.column(1))
-            wh = flat.view(np.uint64)
-            if wh.size < k:
-                continue
-            m = wh.size - k + 1
-            sh_all = wh[0:m] * MIX[0]
-            for j in range(1, k):
-                sh_all = sh_all + wh[j : m + j] * MIX[j]
-            doc_of = np.repeat(np.arange(len(ids), dtype=np.int64), lens)
-            in_doc = doc_of[:m] == doc_of[k - 1 :]
-            sh_v = sh_all[in_doc]
-            doc_v = doc_of[:m][in_doc]
-            if sh_v.size == 0:
-                continue
-            if with_sh:
-                order = np.lexsort((sh_v, doc_v))
-                ds, ss = doc_v[order], sh_v[order]
-                uniq = np.empty(ds.size, dtype=bool)
-                uniq[0] = True
-                uniq[1:] = (ds[1:] != ds[:-1]) | (ss[1:] != ss[:-1])
-                h = ss[uniq]
-                dh = ds[uniq]
-            else:
-                # sig-only: minima are duplicate-invariant (see
-                # shingle_minhash) — skip the dedup sort
-                h = sh_v
-                dh = doc_v
-            slens = np.bincount(dh, minlength=len(ids))
-            keep = slens > 0
-            offs_all = np.concatenate(([0], np.cumsum(slens[keep])))
-            arrays = [pa.array(ids[keep], pa.int64())]
-            if with_sh:
-                arrays.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(offs_all.astype(np.int32), pa.int32()),
-                        pa.array(h.view(np.int64), pa.int64()),
-                    )
-                )
-            if with_sig:
-                sig = _affine_min_sig(h, offs_all[:-1].astype(np.intp), A, B)
-                arrays.append(
-                    pa.FixedSizeListArray.from_arrays(
-                        pa.array(sig.view(np.int64).ravel(), type=pa.int64()), num_hashes
-                    ).cast(pa.list_(pa.int64()))
-                )
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+        for part in _token_batch_slices(rb, 1):
+            flat, lens = _flatten_arrow(part.column(1))
+            yield part.column(0).to_numpy(zero_copy_only=False), flat.view(np.uint64), lens
 
     slim = df.select(F.col(id_col).cast("long").alias("doc_id"), F.col(tokens_col))
-    return slim.mapInArrow(fn, out_ddl)
+    return _shingle_kernel(slim, units, k, num_hashes, with_sh, with_sig, "token_shingle_minhash")
 
 
 def decontaminate_tokens(
@@ -1197,24 +1118,9 @@ def decontaminate_tokens(
     token k-grams) through the shared pipeline; k-gram jaccard /
     containment of token sequences.
     """
-    if metric not in ("jaccard", "containment"):
-        raise ValueError(f"unknown metric {metric!r}")
-
-    def shingler(frame: DataFrame, with_sh: bool, with_sig: bool) -> DataFrame:
-        return token_shingle_minhash(
-            frame, tokens_col="__nd_payload", id_col="__nd_id", k=k,
-            num_hashes=num_hashes, with_sh=with_sh, with_sig=with_sig,
-        )
-
-    tr = train_df.select(
-        F.col(id_col).cast("long").alias("__nd_id"), F.col(tokens_col).alias("__nd_payload")
-    )
-    ev = eval_df.select(
-        F.col(id_col).cast("long").alias("__nd_id"), F.col(tokens_col).alias("__nd_payload")
-    )
     return _decontaminate_impl(
-        tr, ev, shingler, threshold_pct, rows_per_band, num_hashes, metric,
-        eval_broadcast_max_shingles=eval_broadcast_max_shingles,
+        token_shingle_minhash, train_df, eval_df, tokens_col, id_col, k, num_hashes,
+        threshold_pct, rows_per_band, metric, eval_broadcast_max_shingles,
     )
 
 
@@ -1229,15 +1135,9 @@ def neardup_pairs_tokens(
 ) -> DataFrame:
     """:func:`neardup_pairs` over token-array documents (k-gram jaccard of
     token sequences instead of word shingles)."""
-    shmin = token_shingle_minhash(
-        df, tokens_col=tokens_col, id_col=id_col, k=k, num_hashes=num_hashes
-    ).persist()
-    cand = lsh_candidate_pairs(
-        shmin.select("doc_id", "sig"), rows_per_band=rows_per_band, num_hashes=num_hashes
-    ).persist()
-    cand.count()  # materialize before the broadcast subtrees build
-    return _finalize_unpersist(
-        _verify_pairs(shmin.select("doc_id", "sh"), cand, threshold_pct), [shmin, cand]
+    return _neardup_impl(
+        token_shingle_minhash, df, tokens_col, id_col, k, num_hashes, threshold_pct,
+        rows_per_band, "cached",
     )
 
 

@@ -633,6 +633,25 @@ def test_decode_points_count_bound_is_max_count(monkeypatch):
         gw.decode_points(_with_inner_count(buf, 11))
 
 
+def test_encode_points_count_bound_is_max_count(monkeypatch):
+    # encode refuses any block decode_points would refuse as implausible
+    monkeypatch.setattr(bitio, "MAX_COUNT", 10)
+    ts, vals = np.arange(11) * 1000, np.arange(11) * 0.5
+    dec_ts, dec_vals, _ = gw.decode_points(gw.encode_points(ts[:10], vals[:10]))
+    assert np.array_equal(dec_ts, ts[:10]) and np.array_equal(dec_vals, vals[:10])
+    with pytest.raises(ValueError, match="implausible element count 11"):
+        gw.encode_points(ts, vals)
+
+
+def test_encode_timeseries_wire_rejects_block_points_at_call_time(spark):
+    # raised by the call itself, before any Spark job: 0 or negative would
+    # fail inside a task, and above MAX_COUNT no full block would decode
+    df = spark.range(3).selectExpr("id AS ts", "CAST(id AS double) AS value")
+    for bad in (0, -5, bitio.MAX_COUNT + 1):
+        with pytest.raises(ValueError, match="block_points"):
+            gw.encode_timeseries_wire(df, block_points=bad)
+
+
 def test_decode_points_zeroed_inner_count_raises_cleanly():
     # a corrupt buffer whose inner count is zeroed (outer count nonzero)
     # must fail with the decoder's ValueError contract, never IndexError

@@ -118,12 +118,16 @@ def test_shingle_sets_short_docs_empty(spark):
     assert rows[2] == ["a b c", "b c d"]
 
 
-def test_minhash_signature_shape_and_determinism(spark, docs):
-    sh = T.shingle_sets(docs.limit(20))
-    s1 = {r.doc_id: r.sig for r in T.minhash_signature(sh).collect()}
-    s2 = {r.doc_id: r.sig for r in T.minhash_signature(sh).collect()}
-    assert s1 == s2
-    assert all(len(v) == 128 for v in s1.values())
+@pytest.mark.parametrize("bad", [{"k": 0}, {"num_hashes": 0}], ids=["k0", "num_hashes0"])
+@pytest.mark.parametrize("kernel", [T.shingle_minhash, T.token_shingle_minhash])
+def test_shingle_kernel_rejects_bad_k_and_num_hashes_at_call_time(spark, kernel, bad):
+    # raised by the call itself, before any Spark job (otherwise an
+    # IndexError inside a Python worker at the first collect)
+    df = spark.createDataFrame(
+        [(1, "a b c d", [1, 2, 3, 4])], "doc_id long, text string, tokens array<int>"
+    )
+    with pytest.raises(ValueError, match="must be >= 1"):
+        kernel(df, **bad)
 
 
 def test_neardup_partition_invariance(spark, docs):
@@ -181,8 +185,8 @@ def test_simhash_kernel_matches_hof_bit_for_bit(spark, docs):
         "doc_id long, text string",
     )
     df = docs.select("doc_id", "text").unionByName(edge)
-    k = {r.doc_id: r.simhash for r in T.simhash(df, impl="kernel").collect()}
-    h = {r.doc_id: r.simhash for r in T.simhash(df, impl="hof").collect()}
+    k = {r.doc_id: r.simhash for r in T.simhash(df).collect()}
+    h = {r.doc_id: r.simhash for r in T.simhash_hof(df).collect()}
     assert k == h
     assert len(k) == df.count()
 
