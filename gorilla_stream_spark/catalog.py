@@ -21,9 +21,14 @@ passes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Any
 
-__all__ = ["iceberg_available", "is_iceberg_location", "read_table", "write_table"]
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+__all__ = [
+    "iceberg_available", "is_iceberg_location", "observed", "read_table", "write_table",
+]
 
 _PREFIX = "iceberg:"
 
@@ -62,14 +67,30 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
     return spark.read.parquet(location)
 
 
-def write_table(df: DataFrame, location: str, mode: str = "overwrite") -> None:
-    """Write to either storage.  ``mode`` is ``overwrite`` or ``append``;
+def observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with an :class:`Observation` attached: ``rows = count(1)`` plus
+    the named aggregate ``metrics``.  The next action on the returned frame
+    fills ``obs.get`` from the pass that runs anyway — no second scan.
+    DISTINCT aggregates are refused by Spark (observed metrics merge
+    per-task partials)."""
+    obs = Observation()
+    cols = [F.count(F.lit(1)).alias("rows")] + [c.alias(k) for k, c in metrics.items()]
+    return df.observe(obs, *cols), obs
+
+
+def write_table(
+    df: DataFrame, location: str, mode: str = "overwrite", **metrics: Column
+) -> dict[str, Any]:
+    """Write to either storage and return the metrics observed during the
+    write: ``rows`` plus each named aggregate in ``metrics`` (see
+    :func:`observed`).  ``mode`` is ``overwrite`` or ``append``;
     Iceberg overwrite is ``createOrReplace`` (snapshot-isolated, atomic),
     parquet overwrite is directory replace (atomic per partition-file via
     the job commit protocol, not per table — the documented gap Iceberg
     closes on a real deployment)."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unsupported write mode {mode!r}")
+    df, obs = observed(df, **metrics)
     if is_iceberg_location(location):
         if not iceberg_available(df.sparkSession):
             raise RuntimeError(f"cannot write {location!r}: {_ICEBERG_HINT}")
@@ -78,5 +99,6 @@ def write_table(df: DataFrame, location: str, mode: str = "overwrite") -> None:
             w.createOrReplace()
         else:
             w.append()
-        return
-    df.write.mode(mode).option("compression", "zstd").parquet(location)
+    else:
+        df.write.mode(mode).option("compression", "zstd").parquet(location)
+    return obs.get

@@ -27,12 +27,19 @@ def _spark(app: str) -> SparkSession:
     return SparkSession.builder.appName(app).getOrCreate()
 
 
+def _container_dict(args) -> bytes | None:
+    """The ``--dict-path`` container dictionary bytes, or None."""
+    if not getattr(args, "dict_path", None):
+        return None
+    with open(args.dict_path, "rb") as f:
+        return f.read()
+
+
 def cmd_encode(args) -> int:
     from gorilla_stream_spark.checkpoint import encode_with_checkpoint
 
     spark = _spark("gss-encode")
     df = read_table(spark, args.input)
-    cdict = open(args.dict_path, "rb").read() if getattr(args, "dict_path", None) else None
     m = encode_with_checkpoint(
         spark,
         df,
@@ -43,7 +50,7 @@ def cmd_encode(args) -> int:
         codec=args.codec,
         container=args.container,
         container_level=args.level,
-        container_dict=cdict,
+        container_dict=_container_dict(args),
     )
     print(json.dumps({k: (float(v) if v is not None else None) for k, v in m.items()}))
     return 0
@@ -54,22 +61,18 @@ def cmd_decode(args) -> int:
 
     spark = _spark("gss-decode")
     enc = read_table(spark, args.input)
-    cdict = open(args.dict_path, "rb").read() if args.dict_path else None
-    write_table(decode(enc, strict=not args.tolerant, container_dict=cdict), args.output)
-    print(json.dumps({"rows": read_table(spark, args.output).count()}))
+    dec = decode(enc, strict=not args.tolerant, container_dict=_container_dict(args))
+    print(json.dumps({"rows": write_table(dec, args.output)["rows"]}))
     return 0
 
 
 def cmd_compact(args) -> int:
     """Maintenance job: merge under-filled blocks (streaming-ingest debris)
     into full ones; healthy blocks pass through untouched."""
-    from pyspark.sql import functions as F2
-
     from gorilla_stream_spark import compact_blocks
 
     spark = _spark("gss-compact")
     enc = read_table(spark, args.input)
-    cdict = open(args.dict_path, "rb").read() if args.dict_path else None
     out = compact_blocks(
         enc,
         codec=args.codec,
@@ -79,18 +82,18 @@ def cmd_compact(args) -> int:
         strict=not args.tolerant,
         container=args.container,
         container_level=args.level,
-        container_dict=cdict,
+        container_dict=_container_dict(args),
     )
-    write_table(out, args.output)
-    res = read_table(spark, args.output)
-    before, after = enc.count(), res.count()
+    before, prev_max = enc.agg(F.count("*"), F.max("part_id")).first()
     # merged-this-run rows sit ABOVE the input's previous max part_id
     # (earlier compactions' survivors keep their old reserved-range ids)
-    prev_max = int(enc.agg(F2.max("part_id")).first()[0] or 0)
-    merged = res.filter(F2.col("part_id") > prev_max).count()
+    m = write_table(
+        out, args.output,
+        merged=F.count_if(F.col("part_id") > int(prev_max or 0)), tokens=F.sum("n_tokens"),
+    )
     print(json.dumps({
-        "blocks_before": before, "blocks_after": after, "blocks_merged_into": merged,
-        "tokens": res.agg(F2.sum("n_tokens")).first()[0],
+        "blocks_before": before, "blocks_after": m["rows"],
+        "blocks_merged_into": m["merged"], "tokens": m["tokens"],
     }))
     return 0
 
@@ -105,27 +108,25 @@ def cmd_decontaminate(args) -> int:
     pairs = decontaminate(
         train, ev, threshold_pct=args.threshold, metric=args.metric
     ).cache()
-    write_table(pairs, args.output)
-    out = {"pairs": pairs.count(), "train_docs_flagged": pairs.select("train_id").distinct().count()}
+    out = {
+        "pairs": write_table(pairs, args.output)["rows"],
+        "train_docs_flagged": pairs.select("train_id").distinct().count(),
+    }
     if args.cleaned:
         leaked = pairs.select(F.col("train_id").alias("doc_id")).distinct()
         kept = train.join(leaked, "doc_id", "left_anti")
-        write_table(kept, args.cleaned)
-        out["train_docs_kept"] = read_table(spark, args.cleaned).count()
+        out["train_docs_kept"] = write_table(kept, args.cleaned)["rows"]
     print(json.dumps(out))
     return 0
 
 
 def cmd_fsck(args) -> int:
     """Source-free integrity check: per-block crc + manifest consistency."""
-    from pyspark.sql import functions as F2
-
     from gorilla_stream_spark.validate import fsck
 
     spark = _spark("gss-fsck")
-    cdict = open(args.dict_path, "rb").read() if args.dict_path else None
-    rep = fsck(read_table(spark, args.input), container_dict=cdict).cache()
-    bad = rep.filter(~F2.col("ok"))
+    rep = fsck(read_table(spark, args.input), container_dict=_container_dict(args)).cache()
+    bad = rep.filter(~F.col("ok"))
     n_bad = bad.count()
     if args.report:
         write_table(bad, args.report)
@@ -142,8 +143,7 @@ def cmd_verify(args) -> int:
 
     spark = _spark("gss-verify")
     src = read_table(spark, args.source)
-    cdict = open(args.dict_path, "rb").read() if getattr(args, "dict_path", None) else None
-    dec = decode(read_table(spark, args.encoded), container_dict=cdict)
+    dec = decode(read_table(spark, args.encoded), container_dict=_container_dict(args))
     joined = src.alias("s").join(dec.alias("d"), "doc_id", "full_outer")
     bad = joined.filter(
         F.col("s.tokens").isNull()
@@ -221,8 +221,7 @@ def cmd_dedup(args) -> int:
     df = read_table(spark, args.input)
     before = df.count()
     out = dedup_exact(df, content_col=args.text_col, id_col=args.id_col)
-    write_table(out, args.output)
-    after = read_table(spark, args.output).count()
+    after = write_table(out, args.output)["rows"]
     print(json.dumps({"rows_in": before, "rows_out": after, "removed": before - after}))
     return 0
 
@@ -250,8 +249,7 @@ def cmd_neardup(args) -> int:
         df, text_col=args.text_col, id_col=args.id_col, threshold_pct=args.threshold,
         verify=args.verify_mode,
     )
-    write_table(pairs, args.output)
-    out = {"pairs": read_table(spark, args.output).count()}
+    out = {"pairs": write_table(pairs, args.output)["rows"]}
     if args.dedup_first:
         out["rows_in"] = n_in
         out["rows_after_dedup"] = df.count()
@@ -300,13 +298,9 @@ def cmd_encode_multi(args) -> int:
         from gorilla_stream_spark.engine import widen_multi
 
         enc = widen_multi(enc, cols)
-    enc.write.mode("overwrite").option("compression", "snappy").parquet(args.output)
-    m = read_table(spark, args.output).agg(
-        F.count("*").alias("blocks"), F.sum("raw_bytes").alias("raw"),
-        F.sum("enc_bytes").alias("enc"),
-    ).first()
+    m = write_table(enc, args.output, raw=F.sum("raw_bytes"), enc=F.sum("enc_bytes"))
     print(json.dumps({
-        "blocks": m["blocks"], "columns": cols, "raw_bytes": m["raw"],
+        "blocks": m["rows"], "columns": cols, "raw_bytes": m["raw"],
         "enc_bytes": m["enc"],
         "ratio": (m["enc"] / m["raw"]) if m["raw"] else None,
     }))
@@ -319,8 +313,7 @@ def cmd_decode_multi(args) -> int:
     spark = _spark("gss-decode-multi")
     cols = [c.strip() for c in args.columns.split(",") if c.strip()]
     dec = decode_multi(read_table(spark, args.input), cols, strict=not args.tolerant)
-    write_table(dec, args.output)
-    print(json.dumps({"rows": read_table(spark, args.output).count(), "columns": cols}))
+    print(json.dumps({"rows": write_table(dec, args.output)["rows"], "columns": cols}))
     return 0
 
 
@@ -335,13 +328,9 @@ def cmd_encode_vectors(args) -> int:
         quantize=args.quantize,
     )
     # lsh layout partitions the sink by bucket_pfx -> ann probes prune dirs
-    write_vectors(enc, args.output)
-    m = read_table(spark, args.output).agg(
-        F.count("*").alias("blocks"), F.sum("raw_bytes").alias("raw"),
-        F.sum("enc_bytes").alias("enc"),
-    ).first()
+    m = write_vectors(enc, args.output, raw=F.sum("raw_bytes"), enc=F.sum("enc_bytes"))
     print(json.dumps({
-        "blocks": m["blocks"], "raw_bytes": m["raw"], "enc_bytes": m["enc"],
+        "blocks": m["rows"], "raw_bytes": m["raw"], "enc_bytes": m["enc"],
         "ratio": (m["enc"] / m["raw"]) if m["raw"] else None,
     }))
     return 0
@@ -352,8 +341,7 @@ def cmd_decode_vectors(args) -> int:
 
     spark = _spark("gss-decode-vectors")
     dec = decode_vectors(read_table(spark, args.input), strict=not args.tolerant)
-    write_table(dec, args.output)
-    print(json.dumps({"rows": read_table(spark, args.output).count()}))
+    print(json.dumps({"rows": write_table(dec, args.output)["rows"]}))
     return 0
 
 
@@ -368,8 +356,7 @@ def cmd_ann(args) -> int:
         (int(r[args.id_col]), list(r[args.vec_col])) for r in qdf.collect()
     ]
     out = ann_search(enc, queries, k=args.k)
-    write_table(out, args.output)
-    print(json.dumps({"results": read_table(spark, args.output).count(),
+    print(json.dumps({"results": write_table(out, args.output)["rows"],
                       "queries": len(queries), "k": args.k}))
     return 0
 
@@ -390,15 +377,16 @@ def cmd_sample(args) -> int:
     out = sample_corpus(
         df, fractions, seed=args.seed, source_col=args.source_col, hash_fn=args.hash_fn
     )
-    write_table(out, args.output)
-    res = read_table(spark, args.output)
-    print(json.dumps({
-        "rows_in": df.count(), "rows_out": res.count(),
-        "by_source": {
+    rows_out = write_table(out, args.output)["rows"]
+    by_source = None
+    if args.source_col in out.columns:
+        # read-back: a per-source count is a group-by, not one observed aggregate
+        res = read_table(spark, args.output)
+        by_source = {
             r[args.source_col]: r["n"]
             for r in res.groupBy(args.source_col).agg(F.count("*").alias("n")).collect()
-        } if args.source_col in res.columns else None,
-    }))
+        }
+    print(json.dumps({"rows_in": df.count(), "rows_out": rows_out, "by_source": by_source}))
     return 0
 
 
@@ -414,22 +402,20 @@ def cmd_dup_spans(args) -> int:
         keep_first=args.keep_first or bool(args.strip_output),
         anchored=args.anchored,
     )
-    write_table(spans, args.output)
-    sp = read_table(spark, args.output)
-    summary = sp.agg(
-        F.count("*").alias("docs_with_dups"),
-        F.sum("n_dup_windows").alias("dup_windows"),
-        F.sum("n_spans").alias("spans"),
-        F.sum("dup_tokens").alias("dup_tokens"),
-    ).collect()[0]
+    summary = write_table(
+        spans, args.output, dup_windows=F.sum("n_dup_windows"), spans=F.sum("n_spans"),
+        dup_tokens=F.sum("dup_tokens"),
+    )
     if args.strip_output:
+        # read-back: stripping consumes the written spans as data
+        sp = read_table(spark, args.output)
         stripped_df = strip_duplicate_spans(
             df, sp, tokens_col=args.tokens_col, id_col=args.id_col
         )
         write_table(stripped_df, args.strip_output)
     print(json.dumps({
         "docs": df.count(),
-        "docs_with_dups": summary["docs_with_dups"],
+        "docs_with_dups": summary["rows"],
         "dup_windows": int(summary["dup_windows"] or 0),
         "spans": int(summary["spans"] or 0),
         "dup_tokens": int(summary["dup_tokens"] or 0),
@@ -457,7 +443,7 @@ def cmd_incremental_encode(args) -> int:
         block_tokens=args.block_tokens or DEFAULT_BLOCK_TOKENS,
         container=args.container, old_digests=old_digests,
     )
-    write_table(inc, args.output)
+    m = write_table(inc, args.output, tokens=F.sum("n_tokens"))
     if args.save_digests:
         # persist the NEW snapshot's digest table (P rows) so the next
         # incremental run diffs with one scan via --old-digests
@@ -473,13 +459,9 @@ def cmd_incremental_encode(args) -> int:
         tokens_col=args.tokens_col, id_col=args.id_col,
         old_digests=old_digests,
     ).count()
-    out = read_table(spark, args.output)
-    m = out.agg(
-        F.count("*").alias("blocks"), F.sum("n_tokens").alias("tokens")
-    ).first()
     n_parts_old = old_enc.select("part_id").distinct().count()
     print(json.dumps({
-        "blocks": m["blocks"],
+        "blocks": m["rows"],
         "tokens": int(m["tokens"] or 0),
         "parts_changed": n_changed,
         "parts_old": n_parts_old,
@@ -497,14 +479,9 @@ def cmd_diff_docs(args) -> int:
     old = read_table(spark, args.old)
     new = read_table(spark, args.new)
     d = snapshot_diff(old, new, tokens_col=args.tokens_col, id_col=args.id_col)
-    write_table(d, args.output)
-    res = read_table(spark, args.output)
-    by = {r["status"]: r["n"] for r in res.groupBy("status").agg(F.count("*").alias("n")).collect()}
-    print(json.dumps({
-        "added": by.get("added", 0),
-        "removed": by.get("removed", 0),
-        "changed": by.get("changed", 0),
-    }))
+    statuses = ("added", "removed", "changed")
+    m = write_table(d, args.output, **{s: F.count_if(F.col("status") == s) for s in statuses})
+    print(json.dumps({s: m[s] for s in statuses}))
     return 0
 
 
@@ -530,15 +507,11 @@ def cmd_score(args) -> int:
         df, counts=counts, tokens_col=args.tokens_col, id_col=args.id_col,
         alpha=args.alpha,
     )
-    write_table(scored, args.output)
-    res = read_table(spark, args.output)
-    m = res.agg(
-        F.count("*").alias("docs"),
-        F.avg("logprob").alias("mean_logprob"),
-        F.min("logprob").alias("min_logprob"),
-    ).first()
+    m = write_table(
+        scored, args.output, mean_logprob=F.avg("logprob"), min_logprob=F.min("logprob")
+    )
     print(json.dumps({
-        "docs": m["docs"],
+        "docs": m["rows"],
         "mean_logprob": round(float(m["mean_logprob"] or 0.0), 6),
         "min_logprob": round(float(m["min_logprob"] or 0.0), 6),
     }))
@@ -624,15 +597,13 @@ def cmd_delete(args) -> int:
         with open(args.ids_file) as f:
             ids += [line.strip() for line in f if line.strip()]
     out = delete_docs(enc, ids, codec=args.codec, strict=not args.tolerant)
-    write_table(out, args.output)
-    res = read_table(spark, args.output)
     before = enc.agg(F.sum("n_docs"), F.count("*")).first()
-    after = res.agg(F.sum("n_docs"), F.count("*")).first()
+    after = write_table(out, args.output, docs=F.sum("n_docs"))
     print(json.dumps({
         "ids_requested": len(ids),
-        "docs_before": int(before[0] or 0), "docs_after": int(after[0] or 0),
-        "docs_deleted": int((before[0] or 0) - (after[0] or 0)),
-        "blocks_before": before[1], "blocks_after": after[1],
+        "docs_before": int(before[0] or 0), "docs_after": int(after["docs"] or 0),
+        "docs_deleted": int((before[0] or 0) - (after["docs"] or 0)),
+        "blocks_before": before[1], "blocks_after": after["rows"],
     }))
     return 0
 
@@ -651,11 +622,8 @@ def cmd_pack(args) -> int:
         num_partitions=args.partitions,
         drop_last=args.drop_last,
     )
-    write_table(packed, args.output)
-    m = read_table(spark, args.output).agg(
-        F.count("*").alias("seqs"), F.sum("n_tok").alias("tokens")
-    ).first()
-    print(json.dumps({"seqs": m["seqs"], "tokens": int(m["tokens"] or 0)}))
+    m = write_table(packed, args.output, tokens=F.sum("n_tok"))
+    print(json.dumps({"seqs": m["rows"], "tokens": int(m["tokens"] or 0)}))
     return 0
 
 
@@ -676,14 +644,9 @@ def cmd_wire_export(args) -> int:
         victoria_metrics=args.victoria_metrics,
         is_counter=args.counter,
     )
-    write_table(enc, args.output)
-    m = read_table(spark, args.output).agg(
-        F.count("*").alias("blocks"),
-        F.sum("n_points").alias("points"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-    ).first()
+    m = write_table(enc, args.output, points=F.sum("n_points"), enc_bytes=F.sum("enc_bytes"))
     print(json.dumps({
-        "blocks": m["blocks"], "points": int(m["points"] or 0),
+        "blocks": m["rows"], "points": int(m["points"] or 0),
         "enc_bytes": int(m["enc_bytes"] or 0),
         "ratio": (m["enc_bytes"] / (m["points"] * 16)) if m["points"] else None,
     }))
@@ -696,8 +659,8 @@ def cmd_wire_import(args) -> int:
 
     spark = _spark("gss-wire-import")
     enc = read_table(spark, args.input)
-    write_table(decode_timeseries_wire(enc, strict=not args.tolerant), args.output)
-    print(json.dumps({"rows": read_table(spark, args.output).count()}))
+    dec = decode_timeseries_wire(enc, strict=not args.tolerant)
+    print(json.dumps({"rows": write_table(dec, args.output)["rows"]}))
     return 0
 
 
@@ -710,9 +673,7 @@ def cmd_index(args) -> int:
     idx = build_token_index(
         enc, bloom_words=args.bloom_words, k=args.k, strict=not args.tolerant
     )
-    write_table(idx, args.output)
-    n = read_table(spark, args.output).count()
-    print(json.dumps({"blocks": n}))
+    print(json.dumps({"blocks": write_table(idx, args.output)["rows"]}))
     return 0
 
 
@@ -741,12 +702,12 @@ def cmd_grep_token(args) -> int:
         res = find_docs_with_token(enc, idx, args.token, strict=not args.tolerant)
         what = {"token": args.token}
     if args.output:
-        write_table(res, args.output)
-        res = read_table(spark, args.output)
-    m = res.agg(F.count("*").alias("d"), F.sum("n_hits").alias("h")).first()
+        m = write_table(res, args.output, hits=F.sum("n_hits"))
+    else:
+        m = res.agg(F.count("*").alias("rows"), F.sum("n_hits").alias("hits")).first()
     print(json.dumps({
         **what, "candidate_blocks": cand, "total_blocks": total,
-        "docs": m["d"], "hits": int(m["h"] or 0),
+        "docs": m["rows"], "hits": int(m["hits"] or 0),
     }))
     return 0
 
@@ -757,8 +718,8 @@ def cmd_build_dict(args) -> int:
 
     spark = _spark("gss-build-dict")
     df = read_table(spark, args.input)
-    write_table(build_global_dict(df, tokens_col=args.tokens_col), args.output)
-    print(json.dumps({"vocab": read_table(spark, args.output).count()}))
+    vocab = build_global_dict(df, tokens_col=args.tokens_col)
+    print(json.dumps({"vocab": write_table(vocab, args.output)["rows"]}))
     return 0
 
 
@@ -775,10 +736,7 @@ def cmd_remap(args) -> int:
         out = remap_tokens(
             df, d, tokens_col=args.tokens_col, strict=not args.lenient
         )
-    write_table(out, args.output)
-    m = read_table(spark, args.output).agg(
-        F.count("*").alias("rows"), F.sum(F.size(args.tokens_col)).alias("toks")
-    ).first()
+    m = write_table(out, args.output, toks=F.sum(F.size(args.tokens_col)))
     print(json.dumps({"rows": m["rows"], "tokens": int(m["toks"] or 0)}))
     return 0
 
@@ -790,16 +748,12 @@ def cmd_merge(args) -> int:
     spark = _spark("gss-merge")
     a = read_table(spark, args.a)
     b = read_table(spark, args.b)
-    write_table(merge_tables(a, b), args.output)
-    res = read_table(spark, args.output)
-    m = res.agg(
-        F.count("*").alias("blocks"),
-        F.count_distinct("block_id").alias("distinct_ids"),
-        F.sum("n_docs").alias("docs"),
-    ).first()
+    m = write_table(merge_tables(a, b), args.output, docs=F.sum("n_docs"))
+    # read-back: observed metrics refuse DISTINCT aggregates
+    distinct_ids = read_table(spark, args.output).agg(F.count_distinct("block_id")).first()[0]
     print(json.dumps({
-        "blocks": m["blocks"], "distinct_ids": m["distinct_ids"],
-        "docs": int(m["docs"] or 0), "ok": m["blocks"] == m["distinct_ids"],
+        "blocks": m["rows"], "distinct_ids": distinct_ids,
+        "docs": int(m["docs"] or 0), "ok": m["rows"] == distinct_ids,
     }))
     return 0
 
@@ -810,24 +764,17 @@ def cmd_transcode(args) -> int:
 
     spark = _spark("gss-transcode")
     enc = read_table(spark, args.input)
-    cdict = open(args.dict_path, "rb").read() if args.dict_path else None
     out = transcode_blocks(
         enc,
         codec=args.codec,
         container=args.container,
         container_level=args.level,
-        container_dict=cdict,
+        container_dict=_container_dict(args),
         strict=not args.tolerant,
     )
-    write_table(out, args.output)
-    res = read_table(spark, args.output)
-    m = res.agg(
-        F.count("*").alias("blocks"),
-        F.sum("raw_bytes").alias("r"),
-        F.sum("enc_bytes").alias("e"),
-    ).first()
+    m = write_table(out, args.output, r=F.sum("raw_bytes"), e=F.sum("enc_bytes"))
     print(json.dumps({
-        "blocks": m["blocks"],
+        "blocks": m["rows"],
         "ratio": (m["e"] / m["r"]) if m["r"] else None,
     }))
     return 0
@@ -841,15 +788,12 @@ def cmd_drift(args) -> int:
     a = read_table(spark, args.a)
     b = read_table(spark, args.b)
     rep = compare_corpora(a, b, tokens_col=args.tokens_col, min_count=args.min_count)
-    write_table(rep, args.output)
-    res = read_table(spark, args.output)
-    m = res.agg(
-        F.count("*").alias("tokens"),
-        F.count(F.when(F.col("cnt_a") == 0, 1)).alias("appeared"),
-        F.count(F.when(F.col("cnt_b") == 0, 1)).alias("vanished"),
-    ).first()
+    m = write_table(
+        rep, args.output,
+        appeared=F.count_if(F.col("cnt_a") == 0), vanished=F.count_if(F.col("cnt_b") == 0),
+    )
     print(json.dumps({
-        "tokens": m["tokens"], "appeared": m["appeared"], "vanished": m["vanished"],
+        "tokens": m["rows"], "appeared": m["appeared"], "vanished": m["vanished"],
     }))
     return 0
 

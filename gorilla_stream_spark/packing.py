@@ -33,6 +33,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gorilla_stream_spark.catalog import observed
+
 __all__ = ["pack_sequences", "write_training_shards", "shard_manifest"]
 
 
@@ -253,7 +255,7 @@ def write_training_shards(
     path: str,
     seqs_per_shard: int = 1024,
     id_col: str = "seq_id",
-) -> None:
+) -> int:
     """Write packed sequences as size-balanced training shards — the
     consumption end of the pipeline (WebDataset/Megatron-style: a data
     loader claims whole shards, so shards must be equal-sized and their
@@ -271,21 +273,16 @@ def write_training_shards(
     Scale shape at 10^12 sequences: shard count = seqs/seqs_per_shard
     (about 10^9 at the default — raise seqs_per_shard so directory
     listings stay sane; 65536 gives ~15M shards of ~512 MB at 2k-token
-    sequences int32-raw).
+    sequences int32-raw).  Returns the row count observed during the write.
     """
     if seqs_per_shard <= 0:
         raise ValueError("seqs_per_shard must be positive")
     sharded = df.withColumn(
         "shard_id", F.floor(F.col(id_col) / F.lit(seqs_per_shard)).cast("long")
     )
-    (
-        sharded.repartition("shard_id")
-        .sortWithinPartitions(id_col)
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .option("compression", "zstd")
-        .parquet(path)
-    )
+    out, obs = observed(sharded.repartition("shard_id").sortWithinPartitions(id_col))
+    out.write.mode("overwrite").partitionBy("shard_id").option("compression", "zstd").parquet(path)
+    return obs.get["rows"]
 
 
 def shard_manifest(spark, path: str, tokens_col: str = "tokens") -> DataFrame:

@@ -381,13 +381,12 @@ def run_pipeline(
             if stage == "shards":
                 from gorilla_stream_spark.packing import write_training_shards
 
-                write_training_shards(
+                rows = write_training_shards(
                     src, out, seqs_per_shard=cfg["seqs_per_shard"]
                 )
             else:
                 res = _apply_stage(spark, stage, src, cfg, packed)
-                write_table(res, out)
-            rows = read_table(spark, out).count()
+                rows = write_table(res, out)["rows"]
             with open(fp_file, "w") as fh:
                 fh.write(json.dumps({"fp": fp, "rows": rows}))
             reports.append(

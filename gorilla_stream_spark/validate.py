@@ -285,29 +285,21 @@ def fsck_blocks(
 
 
 def fsck_vectors(enc_df: DataFrame) -> DataFrame:
-    """Integrity report for vector block tables (``encode_vectors``)."""
-    import zlib
-
-    from gorilla_stream_spark.codecs import decode_array
+    """Integrity report for vector block tables (``encode_vectors``): the
+    strict decode step, then manifest counts."""
+    from gorilla_stream_spark.vectors import _decode_vector_block_checked
 
     def check(col, i):
-        buf = col["buffer"][i].as_py()
-        if "crc32_buf" in col and zlib.crc32(buf) != col["crc32_buf"][i].as_py():
-            raise ValueError("buffer crc32 mismatch")
-        flat = decode_array(buf)
+        _buf, flat, lens = _decode_vector_block_checked(col, i, strict=True)
         n_values = col["n_values"][i].as_py()
-        lens = col["vec_lens"][i].values.to_numpy(zero_copy_only=False)
-        if int(flat.size) != n_values or int(lens.sum()) != n_values:
-            raise ValueError(
-                f"count mismatch: n_values={n_values}, decoded={int(flat.size)},"
-                f" vec_lens sum={int(lens.sum())}"
-            )
+        if int(flat.size) != n_values:
+            raise ValueError(f"count mismatch: n_values={n_values}, decoded={int(flat.size)}")
         if len(col["vec_ids"][i]) != len(lens):
             raise ValueError("vec_ids / vec_lens length mismatch")
 
     return _fsck_frame(
         enc_df,
-        ["block_id", "n_values", "vec_ids", "vec_lens", "crc32_buf", "buffer"],
+        ["block_id", "n_values", "vec_ids", "vec_lens", "crc32_raw", "crc32_buf", "buffer"],
         check,
     )
 
@@ -344,30 +336,23 @@ def fsck_timeseries(enc_df: DataFrame) -> DataFrame:
 
 
 def fsck_multi(enc_df: DataFrame) -> DataFrame:
-    """Integrity report for multi-column block tables (``encode_multi``)."""
-    import zlib
-
-    from gorilla_stream_spark.codecs import decode_array
+    """Integrity report for multi-column block tables (``encode_multi``):
+    per column the strict decode step, then ``col_lens`` vs ``n_docs``."""
+    from gorilla_stream_spark.engine import _decode_column
 
     def check(col, i):
         bufs = col["buffers"][i].as_py()
         crcs = col["crc32_bufs"][i].as_py()
-        col_lens = col["col_lens"][i].as_py()
+        col_lens = col["col_lens"][i].values
         if not (len(bufs) == len(crcs) == len(col_lens)):
             raise ValueError("buffers / crc32_bufs / col_lens arity mismatch")
         n_docs = col["n_docs"][i].as_py()
+        bid = col["block_id"][i].as_py()
         for ci, buf in enumerate(bufs):
-            if zlib.crc32(buf) != crcs[ci]:
-                raise ValueError(f"buffer crc32 mismatch on column {ci}")
-            flat = decode_array(buf)
-            lens = col_lens[ci]
+            lens = col_lens[ci].values
+            _decode_column(buf, crcs[ci], lens, True, f"block {bid} column {ci}")
             if len(lens) != n_docs:
                 raise ValueError(f"col_lens[{ci}] length {len(lens)} != n_docs {n_docs}")
-            if int(flat.size) != int(sum(lens)):
-                raise ValueError(
-                    f"column {ci} count mismatch: decoded {int(flat.size)},"
-                    f" col_lens sum {int(sum(lens))}"
-                )
 
     return _fsck_frame(
         enc_df,
@@ -378,12 +363,10 @@ def fsck_multi(enc_df: DataFrame) -> DataFrame:
 
 def fsck_multi_wide(enc_df: DataFrame) -> DataFrame:
     """Integrity report for WIDE multi-column block tables
-    (``widen_multi``): per-column buffer crc + decoded-count vs lens vs
-    n_docs — the same invariants as :func:`fsck_multi`, read from the
-    top-level ``lens_<c> / crc32_<c> / buf_<c>`` column groups."""
-    import zlib
-
-    from gorilla_stream_spark.codecs import decode_array
+    (``widen_multi``): the same per-column checks as :func:`fsck_multi`,
+    read from the top-level ``lens_<c> / crc32_<c> / buf_<c>`` column
+    groups."""
+    from gorilla_stream_spark.engine import _decode_column
 
     wide_cols = [c[len("buf_"):] for c in enc_df.columns if c.startswith("buf_")]
     if not wide_cols:
@@ -391,19 +374,15 @@ def fsck_multi_wide(enc_df: DataFrame) -> DataFrame:
 
     def check(col, i):
         n_docs = col["n_docs"][i].as_py()
+        bid = col["block_id"][i].as_py()
         for c in wide_cols:
-            buf = col[f"buf_{c}"][i].as_py()
-            if zlib.crc32(buf) != col[f"crc32_{c}"][i].as_py():
-                raise ValueError(f"buffer crc32 mismatch on column {c}")
-            flat = decode_array(buf)
-            lens = col[f"lens_{c}"][i].values.to_numpy(zero_copy_only=False)
+            lens = col[f"lens_{c}"][i].values
+            _decode_column(
+                col[f"buf_{c}"][i].as_py(), col[f"crc32_{c}"][i].as_py(), lens, True,
+                f"block {bid} column {c}",
+            )
             if len(lens) != n_docs:
                 raise ValueError(f"lens_{c} length {len(lens)} != n_docs {n_docs}")
-            if int(flat.size) != int(lens.sum()):
-                raise ValueError(
-                    f"column {c} count mismatch: decoded {int(flat.size)},"
-                    f" lens sum {int(lens.sum())}"
-                )
 
     needed = ["block_id", "n_docs"] + [
         x for c in wide_cols for x in (f"lens_{c}", f"crc32_{c}", f"buf_{c}")

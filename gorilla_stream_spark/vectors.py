@@ -24,6 +24,7 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gorilla_stream_spark.catalog import observed
 from gorilla_stream_spark.codecs import (
     VECF16,
     VECF32,
@@ -329,12 +330,14 @@ def _grouped_bounds(
 
 
 def write_vectors(
-    enc_df: DataFrame, path: str, mode: str = "overwrite", compression: str = "snappy"
-) -> None:
+    enc_df: DataFrame, path: str, mode: str = "overwrite", compression: str = "snappy",
+    **metrics: Column,
+) -> dict:
     """Write encoded vector blocks; lsh-layout tables partition by
     ``bucket_pfx`` so :func:`ann_search` probe filters prune whole
     directories at the parquet scan (Hive partition pruning — the scan
-    never opens pruned files, and nothing is collected to the driver)."""
+    never opens pruned files, and nothing is collected to the driver).
+    Returns the metrics observed during the write (``catalog.observed``)."""
     if "bucket_pfx" in enc_df.columns:
         # cluster rows by the partition column BEFORE the partitioned write:
         # without it every writer task opens one file per pfx it happens to
@@ -342,10 +345,28 @@ def write_vectors(
         # at 1M vectors vs 16 files / 2.8 s clustered) — and at 100 TB the
         # small-file explosion also poisons every later scan
         enc_df = enc_df.repartition("bucket_pfx")
+    enc_df, obs = observed(enc_df, **metrics)
     w = enc_df.write.mode(mode).option("compression", compression)
     if "bucket_pfx" in enc_df.columns:
         w = w.partitionBy("bucket_pfx")
     w.parquet(path)
+    return obs.get
+
+
+def _decode_vector_block_checked(
+    col: dict, i: int, strict: bool
+) -> tuple[bytes, np.ndarray, np.ndarray]:
+    """One vector block row: buffer crc gate, decode, raw crc, and
+    ``vec_lens`` tiling — shared by :func:`decode_vectors` and fsck."""
+    buf = col["buffer"][i].as_py()
+    bid = col["block_id"][i].as_py()
+    if strict and zlib.crc32(buf) != col["crc32_buf"][i].as_py():
+        raise ValueError(f"buffer crc32 mismatch on block {bid}")
+    flat = decode_array(buf)
+    if strict and zlib.crc32(flat.astype(np.float32).tobytes()) != col["crc32_raw"][i].as_py():
+        raise ValueError(f"crc32 mismatch on block {bid}")
+    lens = _tiling_lens(col["vec_lens"][i].values, flat.size, f"vector block {bid}", "vec_lens")
+    return buf, flat, lens
 
 
 def decode_vectors(
@@ -366,22 +387,7 @@ def decode_vectors(
         for rb in batches:
             col = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
             for i in range(rb.num_rows):
-                buf = col["buffer"][i].as_py()
-                if strict:
-                    bcrc = zlib.crc32(buf)
-                    if bcrc != col["crc32_buf"][i].as_py():
-                        raise ValueError(
-                            f"buffer crc32 mismatch on block {col['block_id'][i].as_py()}"
-                        )
-                flat = decode_array(buf)
-                if strict:
-                    crc = zlib.crc32(flat.astype(np.float32).tobytes())
-                    if crc != col["crc32_raw"][i].as_py():
-                        raise ValueError(
-                            f"crc32 mismatch on block {col['block_id'][i].as_py()}"
-                        )
-                where = f"vector block {col['block_id'][i].as_py()}"
-                lens = _tiling_lens(col["vec_lens"][i].values, flat.size, where, "vec_lens")
+                buf, flat, lens = _decode_vector_block_checked(col, i, strict)
                 arrays = [
                     col["vec_ids"][i].values.cast(pa.int64()),
                     _list_array(flat, lens, np.float32),
