@@ -42,13 +42,14 @@ from pyspark.sql.types import (
 )
 
 from gorilla_stream_spark.codecs import (
+    codec_of,
     decode_array,
     encode_array,
     encode_paged,
     register_container_dict,
     wrap_container,
 )
-from gorilla_stream_spark.skew import salted_repartition
+from gorilla_stream_spark.skew import range_partition, salted_repartition
 
 __all__ = [
     "ENCODED_SCHEMA",
@@ -968,8 +969,14 @@ def read_timerange(enc_df: DataFrame, ts_lo: int, ts_hi: int) -> DataFrame:
     non-overlapping blocks before any buffer is decoded — the Iceberg
     min/max-stats pattern applied to codec blocks.
     """
+    return ts_read_range(enc_df, ts_lo, ts_hi, decode_timeseries)
+
+
+def ts_read_range(enc_df: DataFrame, ts_lo: int, ts_hi: int, decode) -> DataFrame:
+    """Prune blocks on (ts_min, ts_max), ``decode`` the rest, keep the rows
+    in ``[ts_lo, ts_hi]`` — the time-range read of both block formats."""
     pruned = enc_df.filter((F.col("ts_max") >= ts_lo) & (F.col("ts_min") <= ts_hi))
-    return decode_timeseries(pruned).filter((F.col("ts") >= ts_lo) & (F.col("ts") <= ts_hi))
+    return decode(pruned).filter((F.col("ts") >= ts_lo) & (F.col("ts") <= ts_hi))
 
 
 ESTIMATE_SCHEMA = StructType(
@@ -1066,6 +1073,102 @@ TS_ENCODED_SCHEMA = StructType(
 )
 
 
+def ts_blocks(
+    df: DataFrame,
+    ts_col: str,
+    val_col: str,
+    num_partitions: int | None,
+    assume_sorted: bool,
+    block_points: int,
+    encode_block,
+    schema: StructType,
+) -> DataFrame:
+    """The block loop both time-series formats share.  Unless
+    ``assume_sorted``, rows are range-partitioned on time (when
+    ``num_partitions``) and sorted within each partition, so a block covers
+    a contiguous time range for (ts_min, ts_max) pruning.  Each partition is
+    cut into blocks of exactly ``block_points`` points, the last one
+    shorter (reference chunking, ``stream.ex:70``); ``encode_block(ts,
+    vals)`` supplies the format's own columns of each ``schema`` row.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    slim = df.select(F.col(ts_col).cast("long").alias("__ts"), F.col(val_col).cast("double").alias("__val"))
+    if not assume_sorted:
+        if num_partitions:
+            slim = range_partition(slim, "__ts", num_partitions)
+        # the value breaks ties, so duplicate timestamps order the same way
+        # on every run
+        slim = slim.sortWithinPartitions("__ts", "__val")
+    arrow_schema = to_arrow_schema(schema)
+
+    def fn(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        seq = 0
+
+        def emit(ts: np.ndarray, vals: np.ndarray):
+            nonlocal seq
+            row = {
+                "block_id": (pid << 24) | _check_seq(seq),
+                "n_points": int(ts.size),
+                "ts_min": int(ts.min()),
+                "ts_max": int(ts.max()),
+                **encode_block(ts, vals),
+            }
+            seq += 1
+            return pa.RecordBatch.from_pylist([row], schema=arrow_schema)
+
+        ts_acc, val_acc, n_acc = [], [], 0
+        for rb in batches:  # Arrow batches, zero-copy to numpy (no pandas)
+            if rb.num_rows == 0:
+                continue
+            # Fail loud on nulls: to_numpy would surface them as NaN and the
+            # int64 cast would then silently store INT64_MIN, corrupting both
+            # the block payload and ts_min pruning.  Mirrors the reference's
+            # validate-first contract (gorilla.ex:188-204).
+            if rb.column(0).null_count or rb.column(1).null_count:
+                raise ValueError(
+                    "time-series encode: null ts/value cells in input "
+                    "(run validate.clean_timeseries first or filter nulls)"
+                )
+            ts_acc.append(rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False))
+            val_acc.append(rb.column(1).to_numpy(zero_copy_only=False).astype(np.float64, copy=False))
+            n_acc += rb.num_rows
+            if n_acc >= block_points:
+                ts_all, val_all = np.concatenate(ts_acc), np.concatenate(val_acc)
+                pos = 0
+                while n_acc - pos >= block_points:
+                    yield emit(ts_all[pos : pos + block_points], val_all[pos : pos + block_points])
+                    pos += block_points
+                ts_acc, val_acc, n_acc = [ts_all[pos:]], [val_all[pos:]], n_acc - pos
+        if n_acc:
+            yield emit(np.concatenate(ts_acc), np.concatenate(val_acc))
+
+    return slim.mapInArrow(fn, schema)
+
+
+def ts_decode(enc_df: DataFrame, buffer_cols: list[str], decode_block) -> DataFrame:
+    """(ts, value) rows of a time-series block table, either format:
+    ``decode_block(*buffers)`` turns one block's ``buffer_cols`` into its
+    (ts, values) arrays."""
+
+    def fn(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        for rb in batches:
+            for i in range(rb.num_rows):
+                ts, vals = decode_block(*(c[i].as_py() for c in rb.columns))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(ts, pa.int64()), pa.array(vals, pa.float64())],
+                    names=["ts", "value"],
+                )
+
+    return enc_df.select(*buffer_cols).mapInArrow(fn, "ts long, value double")
+
+
 def encode_timeseries(
     df: DataFrame,
     ts_col: str = "ts",
@@ -1083,10 +1186,10 @@ def encode_timeseries(
     decimal scaling (``enhancements.ex:19-50``), Gorilla XOR windows
     (``encoder/value_compression.ex``) and Chimp128-style lagged XOR
     (``gorilla_nif.cpp:577-713``) — the reference's ``algorithm`` and
-    ``victoria_metrics`` options made automatic per block.  Rows are
-    range-partitioned and sorted by timestamp so each block covers a
-    contiguous time range — the manifest's (ts_min, ts_max) then supports
-    partition pruning on time predicates.
+    ``victoria_metrics`` options made automatic per block.  Blocks hold
+    2^20 points, cut by :func:`ts_blocks`; with ``num_partitions`` the range
+    bounds come from the data, so a re-run of the same input writes the
+    same blocks.
 
     ``assume_sorted=True`` skips the range-partition shuffle AND the sort —
     for ingest layouts that are already time-ordered per partition (the
@@ -1096,99 +1199,28 @@ def encode_timeseries(
     ``read_timerange`` pruning stays correct with any layout — overlapping
     block ranges just prune less sharply.
     """
-    slim = df.select(F.col(ts_col).cast("long").alias("__ts"), F.col(val_col).cast("double").alias("__val"))
-    if not assume_sorted:
-        if num_partitions:
-            slim = slim.repartitionByRange(num_partitions, "__ts")
-        slim = slim.sortWithinPartitions("__ts")
 
-    block_points = 1 << 20
+    def encode_block(ts: np.ndarray, vals: np.ndarray) -> dict:
+        tbuf, vbuf = encode_array(ts, codec=ts_codec), encode_array(vals, codec=val_codec)
+        return {
+            "ts_codec": codec_of(tbuf), "val_codec": codec_of(vbuf), "raw_bytes": int(ts.size) * 16,
+            "enc_bytes": len(tbuf) + len(vbuf), "ts_buffer": tbuf, "val_buffer": vbuf,
+        }
 
-    def fn(batches: Iterator) -> Iterator:
-        import pyarrow as pa
+    return ts_blocks(
+        df, ts_col, val_col, num_partitions, assume_sorted, 1 << 20, encode_block, TS_ENCODED_SCHEMA
+    )
 
-        from gorilla_stream_spark.codecs import codec_of
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        seq = 0
-        ts_acc: list[np.ndarray] = []
-        val_acc: list[np.ndarray] = []
-        n_acc = 0
-
-        def flush():
-            nonlocal seq, ts_acc, val_acc, n_acc
-            ts = np.concatenate(ts_acc) if len(ts_acc) > 1 else ts_acc[0]
-            vals = np.concatenate(val_acc) if len(val_acc) > 1 else val_acc[0]
-            ts_acc, val_acc, n_acc = [], [], 0
-            # counts must match across encoded columns — reference invariant
-            # (encoder/bit_packing.ex:30-36)
-            assert ts.size == vals.size
-            tbuf = encode_array(ts, codec=ts_codec)
-            vbuf = encode_array(vals, codec=val_codec)
-            out = pa.RecordBatch.from_pydict(
-                {
-                    "block_id": pa.array([(pid << 24) | _check_seq(seq)], pa.int64()),
-                    "n_points": pa.array([int(ts.size)], pa.int64()),
-                    "ts_codec": pa.array([codec_of(tbuf)], pa.string()),
-                    "val_codec": pa.array([codec_of(vbuf)], pa.string()),
-                    "raw_bytes": pa.array([int(ts.size) * 16], pa.int64()),
-                    "enc_bytes": pa.array([len(tbuf) + len(vbuf)], pa.int64()),
-                    "ts_min": pa.array([int(ts.min()) if ts.size else None], pa.int64()),
-                    "ts_max": pa.array([int(ts.max()) if ts.size else None], pa.int64()),
-                    "ts_buffer": pa.array([tbuf], pa.binary()),
-                    "val_buffer": pa.array([vbuf], pa.binary()),
-                }
-            )
-            seq += 1
-            return out
-
-        for rb in batches:  # Arrow batches, zero-copy to numpy (no pandas)
-            if rb.num_rows == 0:
-                continue
-            # Fail loud on nulls: to_numpy would surface them as NaN and the
-            # int64 cast would then silently store INT64_MIN, corrupting both
-            # the block payload and ts_min pruning.  Mirrors the reference's
-            # validate-first contract (gorilla.ex:188-204).
-            if rb.column(0).null_count or rb.column(1).null_count:
-                raise ValueError(
-                    "encode_timeseries: null ts/value cells in input "
-                    "(run validate.clean_timeseries first or filter nulls)"
-                )
-            ts_acc.append(rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False))
-            val_acc.append(rb.column(1).to_numpy(zero_copy_only=False).astype(np.float64, copy=False))
-            n_acc += rb.num_rows
-            if n_acc >= block_points:  # Arrow batches accumulate into
-                yield flush()  # reference-chunk-style blocks (stream.ex:70)
-        if n_acc:
-            yield flush()
-
-    return slim.mapInArrow(fn, TS_ENCODED_SCHEMA)
+def _decode_ts_block(tbuf: bytes, vbuf: bytes) -> tuple[np.ndarray, np.ndarray]:
+    ts, vals = decode_array(tbuf), decode_array(vbuf)
+    if ts.size != vals.size:
+        raise ValueError("ts/value count mismatch")  # reference invariant
+    return ts.astype(np.int64, copy=False), vals.astype(np.float64, copy=False)
 
 
 def decode_timeseries(enc_df: DataFrame) -> DataFrame:
-    def fn(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        for rb in batches:
-            tcol = rb.column(rb.schema.get_field_index("ts_buffer"))
-            vcol = rb.column(rb.schema.get_field_index("val_buffer"))
-            for i in range(rb.num_rows):
-                ts = decode_array(tcol[i].as_py())
-                vals = decode_array(vcol[i].as_py())
-                if ts.size != vals.size:
-                    raise ValueError("ts/value count mismatch")  # reference invariant
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ts.astype(np.int64, copy=False), pa.int64()),
-                        pa.array(vals.astype(np.float64, copy=False), pa.float64()),
-                    ],
-                    names=["ts", "value"],
-                )
-
-    return enc_df.select("ts_buffer", "val_buffer").mapInArrow(
-        fn, "ts long, value double"
-    )
+    return ts_decode(enc_df, ["ts_buffer", "val_buffer"], _decode_ts_block)
 
 
 # ---------------------------------------------------------------------------
@@ -1216,8 +1248,6 @@ def encode_multi(
     realigns by position.
     """
     import pyarrow as pa
-
-    from gorilla_stream_spark.codecs import codec_of, encode_paged
 
     if not token_cols:
         raise ValueError("token_cols must be non-empty")

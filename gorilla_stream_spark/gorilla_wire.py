@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
+from functools import partial
 
 import numpy as np
 
@@ -1330,10 +1330,10 @@ def read_gorilla_file(path: str, *, strict: bool = True):
 
 # ---------------------------------------------------------------------------
 # Spark operators — distributed wire-format encode/decode.  Same block
-# substrate as engine.encode_timeseries (range-partition + sort so blocks
-# cover contiguous time ranges); each block is one reference-compatible
-# binary, so an exported table is a directory a reference user can decode
-# block-by-block with GorillaStream.decompress/1.
+# loop as engine.encode_timeseries (engine.ts_blocks: range-partition +
+# sort so blocks cover contiguous time ranges); each block is one
+# reference-compatible binary, so an exported table is a directory a
+# reference user can decode block-by-block with GorillaStream.decompress/1.
 # ---------------------------------------------------------------------------
 
 
@@ -1348,94 +1348,39 @@ def encode_timeseries_wire(
     is_counter: bool = False,
     algorithm: str = "gorilla",
 ):
-    """Encode (ts, value) rows into reference wire blocks (~5000 points per
-    block, matching the reference's chunking default, stream.ex:42).
+    """Encode (ts, value) rows into reference wire blocks of ``block_points``
+    points (5000 by default, the reference's chunking, stream.ex:42).
 
     ``algorithm`` selects the per-block value stream ("gorilla", "chimp",
     "chimp128" — see :func:`encode_points`); the decode side dispatches on
     the block's own header flags, so mixed-algorithm tables read fine.
     """
-    from pyspark import TaskContext
-    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
-    from gorilla_stream_spark.engine import _check_seq
+    from gorilla_stream_spark.engine import ts_blocks
 
     if algorithm not in ("gorilla", "chimp", "chimp128"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
     if not 1 <= block_points <= bitio.MAX_COUNT:
         raise ValueError(f"block_points must be in [1, {bitio.MAX_COUNT}], got {block_points}")
-    slim = df.select(
-        F.col(ts_col).cast("long").alias("__ts"),
-        F.col(val_col).cast("double").alias("__val"),
+
+    def encode_block(ts: np.ndarray, vals: np.ndarray) -> dict:
+        buf = encode_points(
+            ts, vals, victoria_metrics=victoria_metrics, is_counter=is_counter, algorithm=algorithm
+        )
+        return {"enc_bytes": len(buf), "buffer": buf}
+
+    return ts_blocks(
+        df, ts_col, val_col, num_partitions, assume_sorted, block_points, encode_block,
+        StructType.fromDDL(
+            "block_id long, n_points long, enc_bytes long, ts_min long, ts_max long, buffer binary"
+        ),
     )
-    if not assume_sorted:
-        if num_partitions:
-            slim = slim.repartitionByRange(num_partitions, "__ts")
-        slim = slim.sortWithinPartitions("__ts")
 
-    def fn(batches: Iterator) -> Iterator:
-        import pyarrow as pa
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        seq = 0
-        ts_acc: list[np.ndarray] = []
-        val_acc: list[np.ndarray] = []
-        n_acc = 0
-
-        def emit(ts: np.ndarray, vals: np.ndarray):
-            nonlocal seq
-            buf = encode_points(
-                ts,
-                vals,
-                victoria_metrics=victoria_metrics,
-                is_counter=is_counter,
-                algorithm=algorithm,
-            )
-            out = pa.RecordBatch.from_pydict(
-                {
-                    "block_id": pa.array([(pid << 24) | _check_seq(seq)], pa.int64()),
-                    "n_points": pa.array([int(ts.size)], pa.int64()),
-                    "enc_bytes": pa.array([len(buf)], pa.int64()),
-                    "ts_min": pa.array([int(ts.min())], pa.int64()),
-                    "ts_max": pa.array([int(ts.max())], pa.int64()),
-                    "buffer": pa.array([buf], pa.binary()),
-                }
-            )
-            seq += 1
-            return out
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            if rb.column(0).null_count or rb.column(1).null_count:
-                raise ValueError("encode_timeseries_wire: null ts/value cells")
-            ts_acc.append(rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False))
-            val_acc.append(rb.column(1).to_numpy(zero_copy_only=False).astype(np.float64, copy=False))
-            n_acc += rb.num_rows
-            if n_acc >= block_points:
-                ts_all = np.concatenate(ts_acc) if len(ts_acc) > 1 else ts_acc[0]
-                val_all = np.concatenate(val_acc) if len(val_acc) > 1 else val_acc[0]
-                pos = 0
-                while ts_all.size - pos >= block_points:
-                    yield emit(
-                        ts_all[pos : pos + block_points],
-                        val_all[pos : pos + block_points],
-                    )
-                    pos += block_points
-                ts_acc = [ts_all[pos:]] if pos < ts_all.size else []
-                val_acc = [val_all[pos:]] if pos < val_all.size else []
-                n_acc = ts_all.size - pos
-        if n_acc:
-            yield emit(
-                np.concatenate(ts_acc) if len(ts_acc) > 1 else ts_acc[0],
-                np.concatenate(val_acc) if len(val_acc) > 1 else val_acc[0],
-            )
-
-    return slim.mapInArrow(
-        fn,
-        "block_id long, n_points long, enc_bytes long, ts_min long, ts_max long, buffer binary",
-    )
+def _decode_wire_block(buf: bytes, strict: bool = True) -> tuple[np.ndarray, np.ndarray]:
+    ts, vals, _info = decode_points(buf, strict=strict)
+    return ts, vals
 
 
 def read_timerange_wire(enc_df, ts_lo: int, ts_hi: int, *, strict: bool = True):
@@ -1445,27 +1390,13 @@ def read_timerange_wire(enc_df, ts_lo: int, ts_hi: int, *, strict: bool = True):
     ``engine.read_timerange`` — non-overlapping blocks are pruned before
     any reference-format buffer is parsed.
     """
-    from pyspark.sql import functions as F
+    from gorilla_stream_spark.engine import ts_read_range
 
-    pruned = enc_df.filter((F.col("ts_max") >= ts_lo) & (F.col("ts_min") <= ts_hi))
-    return decode_timeseries_wire(pruned, strict=strict).filter(
-        (F.col("ts") >= ts_lo) & (F.col("ts") <= ts_hi)
-    )
+    return ts_read_range(enc_df, ts_lo, ts_hi, partial(decode_timeseries_wire, strict=strict))
 
 
 def decode_timeseries_wire(enc_df, *, strict: bool = True):
     """Inverse of :func:`encode_timeseries_wire` -> (ts, value) rows."""
+    from gorilla_stream_spark.engine import ts_decode
 
-    def fn(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        for rb in batches:
-            col = rb.column(rb.schema.get_field_index("buffer"))
-            for i in range(rb.num_rows):
-                ts, vals, _info = decode_points(col[i].as_py(), strict=strict)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ts, pa.int64()), pa.array(vals, pa.float64())],
-                    names=["ts", "value"],
-                )
-
-    return enc_df.select("buffer").mapInArrow(fn, "ts long, value double")
+    return ts_decode(enc_df, ["buffer"], partial(_decode_wire_block, strict=strict))

@@ -7,8 +7,10 @@ fragment lengths (``doc_spans``) for attention-mask construction.
 
 Scale design — global concatenation WITHOUT a global sort or full shuffle:
 
-1. range-partition + sort by ``doc_id`` (the one shuffle, same layout the
-   encode path uses);
+1. range-partition + sort by ``doc_id`` (the one shuffle; the encode path
+   hashes ids instead, but packing needs contiguous id ranges — Spark's
+   sampled bounds are fine here because the packed output does not depend
+   on where they fall);
 2. one pass counts tokens per partition; the driver turns the (tiny,
    one-long-per-partition) counts into global start offsets;
 3. each partition then knows exactly which chunk ids it covers and emits

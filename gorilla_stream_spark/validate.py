@@ -304,19 +304,23 @@ def fsck_vectors(enc_df: DataFrame) -> DataFrame:
     )
 
 
-def fsck_timeseries(enc_df: DataFrame) -> DataFrame:
-    """Integrity report for timeseries block tables (``encode_timeseries``).
+def _fsck_ts(enc_df: DataFrame, buffer_cols: list[str], decode_block) -> DataFrame:
+    """Integrity report for time-series block tables, native
+    (``encode_timeseries``) or wire (``encode_timeseries_wire``).
 
-    These blocks carry no crc (the self-describing codecs validate their own
-    counts); fsck decodes both buffers and cross-checks n_points and the
-    (ts_min, ts_max) pruning manifest — a wrong manifest silently breaks
-    ``read_timerange``, so it is an integrity error here.
+    These blocks carry no crc (their buffers validate their own counts);
+    fsck runs the decoders' per-block step and cross-checks ``enc_bytes``,
+    ``n_points`` and the (ts_min, ts_max) pruning manifest — a wrong
+    manifest silently breaks ``read_timerange``, so it is an integrity
+    error here.
     """
-    from gorilla_stream_spark.codecs import decode_array
 
     def check(col, i):
-        ts = decode_array(col["ts_buffer"][i].as_py())
-        vals = decode_array(col["val_buffer"][i].as_py())
+        bufs = [col[c][i].as_py() for c in buffer_cols]
+        size = sum(len(b) for b in bufs)
+        if "enc_bytes" in col and size != col["enc_bytes"][i].as_py():
+            raise ValueError(f"enc_bytes {col['enc_bytes'][i].as_py()} != buffer length {size}")
+        ts, vals = decode_block(*bufs)
         n = col["n_points"][i].as_py()
         if ts.size != n or vals.size != n:
             raise ValueError(f"count mismatch: n_points={n}, ts={ts.size}, vals={vals.size}")
@@ -329,9 +333,7 @@ def fsck_timeseries(enc_df: DataFrame) -> DataFrame:
                 )
 
     return _fsck_frame(
-        enc_df,
-        ["block_id", "n_points", "ts_min", "ts_max", "ts_buffer", "val_buffer"],
-        check,
+        enc_df, ["block_id", "n_points", "enc_bytes", "ts_min", "ts_max", *buffer_cols], check
     )
 
 
@@ -390,31 +392,6 @@ def fsck_multi_wide(enc_df: DataFrame) -> DataFrame:
     return _fsck_frame(enc_df, needed, check)
 
 
-def fsck_wire(enc_df: DataFrame) -> DataFrame:
-    """Integrity report for reference wire-format tables
-    (``encode_timeseries_wire``): full decode + count + pruning manifest."""
-    from gorilla_stream_spark.gorilla_wire import decode_points
-
-    def check(col, i):
-        buf = col["buffer"][i].as_py()
-        if "enc_bytes" in col and len(buf) != col["enc_bytes"][i].as_py():
-            raise ValueError(
-                f"enc_bytes {col['enc_bytes'][i].as_py()} != buffer length {len(buf)}"
-            )
-        ts, vals, _info = decode_points(buf)
-        n = col["n_points"][i].as_py()
-        if ts.size != n or vals.size != n:
-            raise ValueError(f"count mismatch: n_points={n}, decoded={ts.size}")
-        if n and "ts_min" in col:
-            lo, hi = col["ts_min"][i].as_py(), col["ts_max"][i].as_py()
-            if lo is not None and (int(ts.min()) != lo or int(ts.max()) != hi):
-                raise ValueError("pruning manifest mismatch")
-
-    return _fsck_frame(
-        enc_df, ["block_id", "n_points", "enc_bytes", "ts_min", "ts_max", "buffer"], check
-    )
-
-
 def fsck(enc_df: DataFrame, container_dict: bytes | None = None) -> DataFrame:
     """Integrity check for ANY engine table — dispatches on the manifest
     shape (token blocks, vector blocks, multi-column blocks nested or wide,
@@ -428,9 +405,13 @@ def fsck(enc_df: DataFrame, container_dict: bytes | None = None) -> DataFrame:
     if "vec_ids" in cols:
         return fsck_vectors(enc_df)
     if "ts_buffer" in cols:
-        return fsck_timeseries(enc_df)
+        from gorilla_stream_spark.engine import _decode_ts_block
+
+        return _fsck_ts(enc_df, ["ts_buffer", "val_buffer"], _decode_ts_block)
     if "doc_ids" in cols:
         return fsck_blocks(enc_df, container_dict=container_dict)
     if "n_points" in cols and "buffer" in cols:
-        return fsck_wire(enc_df)
+        from gorilla_stream_spark.gorilla_wire import _decode_wire_block
+
+        return _fsck_ts(enc_df, ["buffer"], _decode_wire_block)
     raise ValueError(f"unrecognized block-table schema: {sorted(cols)}")

@@ -55,6 +55,9 @@ __all__ = [
 ]
 
 DEFAULT_MAX_VOCAB = 1 << 24  # 16M entries ~= 192 MB broadcast ceiling
+# Token ranges below this take remap's dense int32 LUT: at most 16 MB per
+# task, under the 32 MB glibc mmap threshold (intcodecs._DENSE_RANGE_CAP).
+_DENSE_LUT_RANGE_CAP = 1 << 22
 
 
 def token_counts(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
@@ -207,6 +210,21 @@ def _collect_dict(dict_df: DataFrame, max_vocab: int) -> tuple[np.ndarray, np.nd
     return toks, ranks
 
 
+def _dense_lut(toks: np.ndarray, ranks32: np.ndarray) -> np.ndarray | None:
+    """token -> rank gather table over ``[toks[0], toks[-1]]`` (-1 marks a
+    gap), or None when that range reaches ``_DENSE_LUT_RANGE_CAP``.
+
+    Every real tokenizer vocabulary spans a compact id range, so remap is
+    one LUT gather (O(n)) instead of a searchsorted (O(n log V)); sparse or
+    wide vocabularies keep the searchsorted path (identical results, pinned
+    by tests)."""
+    if not toks.size or int(toks[-1]) - int(toks[0]) >= _DENSE_LUT_RANGE_CAP:
+        return None
+    lut = np.full(int(toks[-1]) - int(toks[0]) + 1, -1, dtype=np.int32)
+    lut[(toks - np.int64(toks[0])).astype(np.intp)] = ranks32
+    return lut
+
+
 def _remap_fn(tokens_col: str, bc, strict: bool, inverse: bool):
     """Shared Arrow kernel for remap (searchsorted) and unmap (gather)."""
     import pyarrow as pa
@@ -217,15 +235,7 @@ def _remap_fn(tokens_col: str, bc, strict: bool, inverse: bool):
         # then runs int32 in -> int32 out with no widening copies — the old
         # int64 path copied every batch twice (flatten widen + final cast)
         ranks32 = ranks.astype(np.int32, copy=False)
-        # dense fast path: every real tokenizer vocabulary spans a compact
-        # id range, so token -> rank is one LUT gather (O(n)) instead of a
-        # searchsorted (O(n log V)); sparse/wide vocabularies keep the
-        # searchsorted path (identical results, pinned by tests)
-        lut = None
-        if toks.size and int(toks[-1]) - int(toks[0]) < (1 << 24):
-            lo_t = np.int64(toks[0])
-            lut = np.full(int(toks[-1]) - int(toks[0]) + 1, -1, dtype=np.int32)
-            lut[(toks - lo_t).astype(np.intp)] = ranks32
+        lut = None if inverse else _dense_lut(toks, ranks32)
         if inverse:
             # ranks are dense 0..V-1 -> direct int32 gather table
             inv = np.empty(ranks.size, dtype=np.int32)

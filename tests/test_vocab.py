@@ -161,3 +161,24 @@ class TestCompareCorpora:
 
         rows = compare_corpora(small, small).collect()
         assert rows and all(abs(r["log2_ratio"]) < 1e-12 for r in rows)
+
+
+def test_dense_lut_cap_boundary(spark):
+    from gorilla_stream_spark import vocab
+
+    cap = vocab._DENSE_LUT_RANGE_CAP
+    # the int32 gather table stays under the 32 MB glibc mmap threshold
+    assert 4 * cap < 32 << 20
+    outs = []
+    for span, dense in ((cap - 1, True), (cap, False)):
+        toks = np.array([7, 9, 7 + span], dtype=np.int64)
+        ranks = np.array([2, 0, 1], dtype=np.int64)
+        assert (vocab._dense_lut(toks, ranks.astype(np.int32)) is not None) == dense
+        d = spark.createDataFrame(
+            [(int(t), int(r), 1) for t, r in zip(toks, ranks)], "token int, rank int, cnt long"
+        )
+        src = _corpus(spark, [("a", [9, 7, 7 + span, 9], "s"), ("b", [8, 7 + span], "s")])
+        outs.append(
+            remap_tokens(src, d, strict=False).orderBy("doc_id").select("tokens").collect()
+        )
+    assert outs[0] == outs[1] == [([0, 2, 1, 0],), ([-1, 1],)]
