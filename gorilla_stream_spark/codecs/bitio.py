@@ -7,7 +7,7 @@ value crosses the JVM<->Python boundary in Arrow batches and is packed with
 numpy's C kernels — no per-value Python.  Layout is MSB-first big-endian like
 the reference (``gorilla_nif.cpp:69-81``).  Fixed-width sections go through
 :func:`pack`/:func:`unpack`, variable-width fields at arbitrary bit offsets
-(the wire format) through :func:`pack_fields`/:func:`gather`, and classed
+(the wire format) through :class:`FieldPacker`/:func:`gather`, and classed
 streams (dod, forc, gxor, xorlag) through :func:`pack_classes`/
 :func:`unpack_classes`.
 """
@@ -27,7 +27,9 @@ __all__ = [
     "pack",
     "unpack",
     "pack_fields",
+    "FieldPacker",
     "gather",
+    "next_set_bit",
     "sign_extend",
     "BitReader",
     "pack_classes",
@@ -36,6 +38,8 @@ __all__ = [
     "unzigzag",
     "check_count",
     "MAX_COUNT",
+    "PACK_CHUNK",
+    "SCAN_BYTES",
 ]
 
 _U64 = np.uint64
@@ -45,6 +49,12 @@ _U64 = np.uint64
 # raise, not allocate (a width-0 stream consumes zero payload bytes, so the
 # buffer length alone cannot validate the count).
 MAX_COUNT = 1 << 28
+
+# Fields packed per FieldPacker step: about a dozen 8-byte temporaries per
+# field, so ~1 MB of scratch however long the stream.
+PACK_CHUNK = 1 << 13
+# Widest byte window one next_set_bit probe reads (64 Kbit).
+SCAN_BYTES = 1 << 13
 
 
 def check_count(n: int) -> int:
@@ -190,83 +200,139 @@ def unpack(buf: bytes | np.ndarray, width: int, n: int) -> np.ndarray:
     return out.ravel()[:n]
 
 
+class FieldPacker:
+    """Streaming MSB-first packer of variable-width fields.
+
+    :meth:`add` takes fields in any number of calls and packs them
+    :data:`PACK_CHUNK` at a time.  Every field lands in at most two
+    consecutive big-endian 64-bit words, fields never share bits (so OR ==
+    ADD) and field offsets are non-decreasing, so one ``np.add.reduceat``
+    over each chunk's first words plus one scatter of the word-crossing
+    tails assembles the chunk's words with zero per-field Python.  The
+    partial last word is carried into the next chunk; completed words are
+    kept as bytes.  Scratch is O(PACK_CHUNK) per chunk on top of the
+    output itself.  Every value must be < 2**width.
+    """
+
+    def __init__(self):
+        self._parts: list[bytes] = []
+        self._carry = _U64(0)  # the partial last word, bits from the MSB
+        self.nbits = 0
+
+    def add(self, vals: np.ndarray, widths: np.ndarray) -> None:
+        v = np.ascontiguousarray(vals, dtype=np.uint64)
+        w = np.ascontiguousarray(widths, dtype=np.int64)
+        for a in range(0, v.size, PACK_CHUNK):
+            self._add_chunk(v[a : a + PACK_CHUNK], w[a : a + PACK_CHUNK])
+
+    def _add_chunk(self, v: np.ndarray, w: np.ndarray) -> None:
+        nz = w > 0  # width-0 fields contribute nothing
+        if not nz.all():
+            v, w = v[nz], w[nz]
+        if w.size == 0:
+            return
+        lead = self.nbits & 63  # bits of the carried word already filled
+        o = np.cumsum(w)
+        end = lead + int(o[-1])
+        o -= w
+        o += lead  # start bit of each field, from the carried word's MSB
+        word = o >> 6
+        shift = o & 63
+        shift += w
+        shift -= 64  # > 0: the field's low `shift` bits spill into word+1
+        spill = np.flatnonzero(shift > 0)
+        hi = (v << np.maximum(-shift, 0).astype(np.uint64)) >> np.maximum(shift, 0).astype(
+            np.uint64
+        )
+        words = np.zeros((end + 63) >> 6, dtype=np.uint64)
+        starts = np.flatnonzero(np.diff(word, prepend=-1))
+        words[word[starts]] = np.add.reduceat(hi, starts)
+        if spill.size:
+            # distinct target words: a crossing field ends inside word+1,
+            # so the next crossing field starts there or later
+            words[word[spill] + 1] += v[spill] << (np.uint64(64) - shift[spill].astype(np.uint64))
+        words[0] |= self._carry
+        full = end >> 6
+        self._carry = words[full] if end & 63 else _U64(0)
+        self._parts.append(words[:full].astype(">u8").tobytes())
+        self.nbits += end - lead
+
+    def finish(self) -> bytes:
+        """The packed stream, zero-padded to a whole byte."""
+        tail = ((self.nbits & 63) + 7) >> 3
+        if tail:
+            self._parts.append(np.array([self._carry], dtype=">u8").tobytes()[:tail])
+        return b"".join(self._parts)
+
+
 def pack_fields(vals: np.ndarray, widths: np.ndarray) -> tuple[bytes, int]:
     """MSB-first concatenation of variable-width fields -> (bytes, nbits).
 
-    Word-wise construction: every field lands in at most two consecutive
-    big-endian 64-bit words, fields never share bits (so OR == ADD), and
-    field offsets are non-decreasing — one stable sort of the (word,
-    contribution) pairs plus ``np.add.reduceat`` assembles the stream with
-    zero per-field Python and O(words) memory.  Zero-pads the final byte
-    exactly like the reference's pad_to_byte_boundary
-    (bit_packing.ex:115-125).  At a fixed width the bytes equal
-    :func:`pack`'s.
+    One :class:`FieldPacker` pass, so scratch is O(:data:`PACK_CHUNK`) plus
+    the output bytes.  Zero-pads the final byte exactly like the
+    reference's pad_to_byte_boundary (bit_packing.ex:115-125).  At a fixed
+    width the bytes equal :func:`pack`'s.
     """
-    v = np.ascontiguousarray(vals, dtype=np.uint64)
-    w = np.ascontiguousarray(widths, dtype=np.int64)
-    total = int(w.sum())
-    if total == 0:
-        return b"", 0
-    # keep only non-empty fields (width-0 contributes nothing)
-    nz = w > 0
-    if not nz.all():
-        v, w = v[nz], w[nz]
-    o = np.cumsum(w) - w  # start bit of each field
-    w0 = o >> 6
-    hi_shift = 64 - (o & 63) - w  # may be negative (field crosses a word)
-    pos_sh = np.maximum(hi_shift, 0).astype(np.uint64)
-    neg_sh = np.maximum(-hi_shift, 0).astype(np.uint64)
-    hi = np.where(hi_shift >= 0, v << pos_sh, v >> neg_sh)
-    crosses = hi_shift < 0
-    if crosses.any():
-        lo = v[crosses] << (np.uint64(64) - neg_sh[crosses])
-        idx = np.concatenate([w0, w0[crosses] + 1])
-        contrib = np.concatenate([hi, lo])
-        order = np.argsort(idx, kind="stable")
-        idx, contrib = idx[order], contrib[order]
-    else:
-        idx, contrib = w0, hi
-    run_start = np.concatenate(([True], idx[1:] != idx[:-1]))
-    sums = np.add.reduceat(contrib, np.flatnonzero(run_start))
-    n_words = (total + 63) >> 6
-    words = np.zeros(n_words, dtype=np.uint64)
-    words[idx[run_start]] = sums
-    return words.astype(">u8").tobytes()[: (total + 7) >> 3], total
+    packer = FieldPacker()
+    packer.add(vals, widths)
+    return packer.finish(), packer.nbits
 
 
 def gather(data: np.ndarray, starts: np.ndarray, width: int) -> np.ndarray:
     """Read ``width``-bit (<=64) unsigned values at arbitrary absolute bit
-    offsets from PACKED bytes — gathers ceil((7+w)/8) bytes per value
-    instead of one byte per BIT (~7x less traffic at w=64).  ``data`` must
-    be a uint8 array.
+    offsets from PACKED bytes: one unaligned 8-byte read per value, plus a
+    9th byte when ``width`` > 57.  ``data`` must be a uint8 array; reads
+    past its end see zero bytes.  Scratch is O(len(starts)), plus a padded
+    copy of ``data[min(starts) // 8:]`` only when a read passes the end.
     """
-    if starts.size == 0:
-        return np.empty(0, dtype=np.uint64)
+    if starts.size == 0 or width == 0:
+        return np.zeros(starts.size, dtype=np.uint64)
     o = starts.astype(np.int64, copy=False)
     b0 = o >> 3
+    tail = width > 57  # the field can reach into a 9th byte
+    need = int(b0.max()) + 8 + tail
+    if need > data.size:
+        lo = int(b0.min())
+        data = np.concatenate([data[lo:], np.zeros(need - data.size, dtype=np.uint8)])
+        b0 = b0 - lo
     sh = (o & 7).astype(np.uint64)
-    nbytes = (7 + width + 7) >> 3  # worst-case window for any sh
-    pad = np.concatenate([data, np.zeros(nbytes, dtype=np.uint8)])
-    mat = pad[b0[:, None] + np.arange(nbytes, dtype=np.int64)]
-    mask = (
-        np.uint64(0xFFFFFFFFFFFFFFFF)
-        if width == 64
-        else (np.uint64(1) << np.uint64(width)) - np.uint64(1)
-    )
-    if nbytes <= 8:
-        win = np.zeros((o.size, 8), dtype=np.uint8)
-        win[:, 8 - nbytes :] = mat
-        hi = np.ascontiguousarray(win).view(">u8").ravel().astype(np.uint64)
-        return (hi >> (np.uint64(nbytes * 8) - sh - np.uint64(width))) & mask
-    # nbytes == 9 (width 58..64): 8-byte head + low-bit tail
-    hi = np.ascontiguousarray(mat[:, :8]).view(">u8").ravel().astype(np.uint64)
-    lo = mat[:, 8].astype(np.uint64)
-    win = np.where(
-        sh == 0,
-        hi,
-        (hi << sh) | (lo >> (np.uint64(8) - sh)),
-    )  # the top `width` bits of the 72-bit window, left-aligned at bit sh
-    return (win >> (np.uint64(64) - np.uint64(width))) & mask
+    # element i of this overlapping stride-1 view is the big-endian word
+    # starting at byte i: one unaligned 8-byte gather per value
+    data = np.ascontiguousarray(data)
+    be64 = np.ndarray((data.size - 7,), dtype=">u8", buffer=data, strides=(1,))
+    words = be64[b0].astype(np.uint64)
+    words <<= sh
+    if tail:
+        words |= data[b0 + 8].astype(np.uint64) >> (np.uint64(8) - sh)
+    words >>= np.uint64(64 - width)
+    return words
+
+
+def next_set_bit(data: np.ndarray, pos: int, end: int) -> int:
+    """Absolute position of the first set bit of packed ``data`` in
+    [``pos``, ``end``), or -1.  Probes the first byte as a Python int, then
+    byte windows that grow 8x up to :data:`SCAN_BYTES`, so a nearby bit
+    costs O(1) and a long zero run O(run / 8) bytes with bounded scratch.
+    """
+    end = min(end, data.size << 3)
+    if pos >= end:
+        return -1
+    b = pos >> 3
+    x = int(data[b]) & (0xFF >> (pos & 7))
+    last = (end - 1) >> 3
+    step = 64
+    while True:
+        if x:
+            hit = (b << 3) + 8 - x.bit_length()
+            return hit if hit < end else -1
+        b += 1
+        if b > last:
+            return -1
+        chunk = data[b : min(b + step, last + 1)]
+        i = int((chunk != 0).argmax())
+        x = int(chunk[i])
+        b += i if x else chunk.size - 1
+        step = min(step << 3, SCAN_BYTES)
 
 
 def sign_extend(v: np.ndarray, width: int) -> np.ndarray:

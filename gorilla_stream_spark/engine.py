@@ -1,4 +1,4 @@
-"""Block encode/decode over Spark DataFrames via Arrow-vectorized mapInPandas.
+"""Block encode/decode over Spark DataFrames via Arrow-vectorized mapInArrow.
 
 The distribution story (what the reference leaves to the user via
 ``Task.async_stream``, ``/root/reference/docs/performance_guide.md:157-178``)
@@ -26,7 +26,6 @@ import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -1011,7 +1010,7 @@ def estimate(
     """
     from gorilla_stream_spark.selector import block_estimate
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator) -> Iterator:
         import pyarrow as pa
 
         ctx = TaskContext.get()

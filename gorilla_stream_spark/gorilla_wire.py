@@ -70,6 +70,7 @@ MAGIC = 0x474F52494C4C41  # "GORILLA" (metadata.ex:18)
 VERSION = 1
 _U64 = np.uint64
 _MASK64 = (1 << 64) - 1
+_W64 = np.array([64], dtype=np.int64)
 
 # outer header v1: magic, version, header_size, count, compressed_size,
 # original_size, checksum, first_timestamp, first_delta(signed),
@@ -118,74 +119,116 @@ def _dod_fields(d: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return vals, widths
 
 
-# DoD prefix classes for decode: (test fn, code_len, payload_width)
-def _ts_jump_table(b: np.ndarray) -> np.ndarray:
-    """J[p] = next code start for the DoD prefix classes (total function)."""
-    n = b.size
-    pad = np.concatenate([b, np.zeros(4, dtype=np.uint8)])
-    L = np.where(
-        pad[:n] == 0,
-        1,
-        np.where(
-            pad[1 : n + 1] == 0,
-            9,
-            np.where(pad[2 : n + 2] == 0, 12, np.where(pad[3 : n + 3] == 0, 16, 36)),
-        ),
-    )
-    J = np.minimum(np.arange(n, dtype=np.int64) + L, n)
-    return np.concatenate([J, np.array([n], dtype=np.int64)])
+# Bits per decode window: a window walk holds O(SCAN_WINDOW) scratch (bits,
+# prefixes, prefix counts, and int64 chains over the window's set bits; at
+# most ~50 B per bit, ~3 MB) on top of the O(points) outputs, never a
+# per-bit table over the whole stream.
+SCAN_WINDOW = 8 * bitio.SCAN_BYTES
+
+# 4-bit prefix b0b1b2b3 at a code start -> code length / DoD class
+# ('0', '10'+7, '110'+9, '1110'+12, '1111'+32; a canonical value code is
+# '0' or '10'+64)
+_DOD_CODE_LEN = np.array([1] * 8 + [9] * 4 + [12] * 2 + [16, 36], dtype=np.int32)
+_DOD_CLASS = np.array([0] * 8 + [1] * 4 + [2] * 2 + [3, 4], dtype=np.int8)
+_DOD_PAYLOADS = ((1, 2, 7), (2, 3, 9), (3, 4, 12), (4, 4, 32))  # (class, prefix, width)
+_VALUE_CODE_LEN = np.array([1] * 8 + [66] * 8, dtype=np.int32)
 
 
-def _chain_positions(J: np.ndarray, start: int, count: int) -> np.ndarray:
+def _chain_positions(
+    J: np.ndarray, start: int, count: int, bound: int | None = None
+) -> np.ndarray:
     """First ``count`` chain nodes of p -> J[p] from ``start`` (pointer
-    doubling: log2(count) vectorized gathers, no per-code Python loop)."""
+    doubling: log2(count) vectorized gathers, no per-code Python loop).
+    With ``bound``, stops early once the chain has reached ``bound``."""
     if count <= 0:
         return np.empty(0, dtype=np.int64)
-    P = np.array([start], dtype=np.int64)
+    P = np.array([start], dtype=J.dtype)
     Jk = J
     while P.size < count:
         P = np.concatenate([P, Jk[P]])
-        if P.size >= count:
+        if P.size >= count or (bound is not None and P[-1] >= bound):
             break
         Jk = Jk[Jk]
     return P[:count]
 
 
-def _decode_dod_stream(
-    bits: np.ndarray, start: int, count: int, packed: np.ndarray, base: int
-) -> tuple[np.ndarray, int]:
-    """Decode ``count`` DoD prefix codes -> (int64 dods, end_bit_pos).
+def _code_windows(datab, base: int, pos: int, end: int, count: int, code_len: np.ndarray):
+    """Walk ``count`` consecutive prefix codes from stream bit ``pos``, one
+    :data:`SCAN_WINDOW` of bits at a time, for grammars whose only one-bit
+    code is '0'.
 
-    ``bits`` is the unpacked region (drives the jump table); payloads are
-    gathered from ``packed`` bytes at absolute offset ``base`` + position.
+    Yields ``(starts, heads)`` per window: the stream positions of the codes
+    that start in it and their 4-bit prefixes (bits at or past ``end`` read
+    as 0); ``code_len[head]`` is a code's length.  Codes that start on a
+    set bit are chained by pointer doubling over the window's set bits
+    (after such a code, '0' codes run up to the next set bit); the '0'
+    codes between them fill in the node list.  Yields ``None`` and stops if
+    the codes do not fit before ``end``.  ``base`` is the stream's first
+    bit in the packed bytes ``datab``.
     """
-    if count <= 0:
-        # a forged/corrupt inner count can drive this negative via
-        # count-1 arithmetic upstream — empty result, not IndexError
-        return np.empty(0, dtype=np.int64), start
-    n = bits.size
-    J = _ts_jump_table(bits)
-    # restrict the chain to positions >= start by chaining on the global J
-    P = _chain_positions(J, start, count)
-    if P[-1] >= n:
-        raise ValueError("gorilla wire: timestamp bitstream truncated")
-    pad = np.concatenate([bits, np.zeros(4, dtype=np.uint8)])
-    b0, b1, b2, b3 = pad[P], pad[P + 1], pad[P + 2], pad[P + 3]
-    cls = np.where(
-        b0 == 0, 0, np.where(b1 == 0, 1, np.where(b2 == 0, 2, np.where(b3 == 0, 3, 4)))
-    )
-    lens = np.array([1, 9, 12, 16, 36], dtype=np.int64)[cls]
-    end = int(P[-1] + lens[-1])
-    if end > n:
-        raise ValueError("gorilla wire: timestamp bitstream truncated")
-    out = np.zeros(count, dtype=np.int64)
-    for c, (plen, w) in enumerate([(1, 0), (2, 7), (3, 9), (4, 12), (4, 32)]):
-        m = cls == c
-        if not m.any() or w == 0:
-            continue
-        raw = bitio.gather(packed, base + P[m] + plen, w)
-        out[m] = bitio.sign_extend(raw, w)
-    return out, end
+    while count > 0:
+        W = min(SCAN_WINDOW, end - pos)
+        if W <= 0:
+            yield None
+            return
+        a = base + pos
+        raw = np.unpackbits(datab[a >> 3 : ((a + W + 2) >> 3) + 1])
+        b = np.zeros(W + 3, dtype=np.uint8)
+        seg = raw[a & 7 : (a & 7) + min(W + 3, end - pos)]
+        b[: seg.size] = seg
+        head = (b[:W] << 3) | (b[1 : W + 1] << 2) | (b[2 : W + 2] << 1) | b[3:]
+        S = np.flatnonzero(b[:W])
+        if S.size:
+            LS = code_len[head[S]]
+            # after a set-bit-headed code, '0' codes run to the next set bit:
+            # J[i] = index in S of the first set bit at or past S[i] + LS[i]
+            before = np.zeros(W + 1, dtype=np.int32)
+            np.cumsum(b[:W], dtype=np.int32, out=before[1:])
+            J = np.empty(S.size + 1, dtype=np.int64)
+            J[:-1] = before[np.minimum(S + LS, W)]
+            J[-1] = S.size
+            T = _chain_positions(J, 0, S.size, bound=S.size)
+            T = T[T < S.size]
+            ST, LT = S[T], LS[T].astype(np.int64)
+            # node index of each set-bit-headed code: its bit position less
+            # the interior bits of the codes before it
+            at = ST.copy()
+            at[1:] -= np.cumsum(LT[:-1] - 1)
+            total = int(at[-1]) + 1 + max(0, W - int(ST[-1] + LT[-1]))
+            steps = np.ones(min(total, count), dtype=np.int64)
+            keep = at < steps.size
+            steps[at[keep]] = LT[keep]
+            P = np.zeros(steps.size, dtype=np.int64)
+            np.cumsum(steps[:-1], out=P[1:])
+        else:
+            P = np.arange(min(W, count), dtype=np.int64)
+        heads = head[P]
+        nxt = int(P[-1]) + int(code_len[heads[-1]])
+        if pos + nxt > end:
+            yield None
+            return
+        yield pos + P, heads
+        pos += nxt
+        count -= P.size
+
+
+def _decode_dod_stream(datab: np.ndarray, start: int, end: int, out: np.ndarray) -> None:
+    """Decode ``out.size`` DoD prefix codes from bit ``start`` of the packed
+    bytes into ``out`` (int64); the codes must end by bit ``end``."""
+    k = 0
+    for win in _code_windows(datab, 0, start, end, out.size, _DOD_CODE_LEN):
+        if win is None:
+            raise ValueError("gorilla wire: timestamp bitstream truncated")
+        P, heads = win
+        seg = out[k : k + P.size]
+        seg[:] = 0
+        if heads.any():
+            cls = _DOD_CLASS[heads]
+            for c, plen, w in _DOD_PAYLOADS:
+                m = np.flatnonzero(cls == c)
+                if m.size:
+                    seg[m] = bitio.sign_extend(bitio.gather(datab, P[m] + plen, w), w)
+        k += P.size
 
 
 # ---------------------------------------------------------------------------
@@ -514,66 +557,48 @@ def encode_points(
         flags |= _FLAG_CHIMP128
 
     # --- timestamp fields: first::64, first_delta code, DoD codes ---
+    # The 32-byte inner header is whole words, so the streams after it are
+    # packed on their own and the header is prepended.
+    packer = bitio.FieldPacker()
     tsu = ts.view(np.uint64)
-    f_vals = [np.array([tsu[0]], dtype=np.uint64)]
-    f_wid = [np.array([64], dtype=np.int64)]
+    packer.add(tsu[:1], _W64)
     first_delta = 0
     if n >= 2:
         deltas = np.diff(ts)
         first_delta = int(deltas[0])
-        fdv, fdw = _dod_fields(np.array([first_delta], dtype=np.int64))
-        f_vals.append(fdv)
-        f_wid.append(fdw)
-        if n >= 3:
-            dodv, dodw = _dod_fields(np.diff(deltas))
-            f_vals.append(dodv)
-            f_wid.append(dodw)
-    ts_bit_len = int(np.concatenate(f_wid).sum())
+        packer.add(*_dod_fields(deltas[:1]))
+        for a in range(1, n - 1, bitio.PACK_CHUNK):
+            packer.add(*_dod_fields(np.diff(deltas[a - 1 : a + bitio.PACK_CHUNK])))
+        del deltas
+    ts_bit_len = packer.nbits
 
     # --- value fields: first::64 then the per-algorithm stream ---
     # gorilla: '0' / '10'+xor64 (see module doc); chimp/chimp128: 2-bit
     # flags per the NIF tables
     vb = pre.view(np.uint64)
-    f_vals.append(vb[:1].copy())
-    f_wid.append(np.array([64], dtype=np.int64))
-    val_bit_len = 64
+    packer.add(vb[:1], _W64)
     if n >= 2:
         if algorithm == "chimp":
-            fv, fw = _chimp_fields(vb)
+            packer.add(*_chimp_fields(vb))
         elif algorithm == "chimp128":
-            fv, fw = _chimp128_fields(vb)
+            packer.add(*_chimp128_fields(vb))
         else:
-            xors = vb[1:] ^ vb[:-1]
-            nz = xors != np.uint64(0)
-            n1 = n - 1
-            nnz = int(nz.sum())
-            off = np.concatenate(([0], np.cumsum(nz[:-1]))) if n1 else np.empty(0, np.int64)
-            ctrl_idx = np.arange(n1, dtype=np.int64) + off.astype(np.int64)
-            fv = np.zeros(n1 + nnz, dtype=np.uint64)
-            fw = np.zeros(n1 + nnz, dtype=np.int64)
-            fw[ctrl_idx] = np.where(nz, 2, 1)
-            fv[ctrl_idx] = np.where(nz, np.uint64(0b10), np.uint64(0))
-            pay_idx = ctrl_idx[nz] + 1
-            fv[pay_idx] = xors[nz]
-            fw[pay_idx] = 64
-        f_vals.append(fv)
-        f_wid.append(fw)
-        val_bit_len += int(fw.sum())
+            for a in range(1, n, bitio.PACK_CHUNK):
+                b = min(a + bitio.PACK_CHUNK, n)
+                x = vb[a:b] ^ vb[a - 1 : b - 1]
+                nz = x != 0
+                ctrl = nz.astype(np.uint64) << np.uint64(1)
+                packer.add(*_interleave_fields(ctrl, 1 + nz, x, 64 * nz))
+    val_bit_len = packer.nbits - ts_bit_len
+    body = packer.finish()
 
     first_value_bits = int(vb[0])
     # first_delta::32-signed truncates to the low 32 bits (bit_packing.ex:99)
     fd32 = ((first_delta + (1 << 31)) & 0xFFFFFFFF) - (1 << 31)
-    # inner header rides the same bitstream (byte-aligned by construction)
     inner = _INNER.pack(
         n, int(tsu[0]), first_value_bits, fd32, ts_bit_len, val_bit_len
     )
-    header_fields_v = np.frombuffer(inner, dtype=np.uint8).astype(np.uint64)
-    header_fields_w = np.full(header_fields_v.size, 8, dtype=np.int64)
-    all_vals = np.concatenate([header_fields_v] + f_vals)
-    all_wid = np.concatenate([header_fields_w] + f_wid)
-    payload, _bits = bitio.pack_fields(all_vals, all_wid)
-
-    compressed_size = len(payload)
+    compressed_size = len(inner) + len(body)
     original_size = n * 16  # metadata.ex:140-144
     ratio = compressed_size / original_size
     outer = _OUTER.pack(
@@ -583,7 +608,7 @@ def encode_points(
         n,
         compressed_size,
         original_size,
-        zlib.crc32(payload) & 0xFFFFFFFF,
+        zlib.crc32(body, zlib.crc32(inner)) & 0xFFFFFFFF,
         int(tsu[0]),
         fd32,
         first_value_bits,
@@ -594,46 +619,13 @@ def encode_points(
         int(creation_time) & _MASK64,
         flags,
     )
-    if emit_v2:
-        outer += struct.pack(">I", scale_n)
-    return outer + payload
+    scale = struct.pack(">I", scale_n) if emit_v2 else b""
+    return b"".join((outer, scale, inner, body))
 
 
 # ---------------------------------------------------------------------------
 # Block decode
 # ---------------------------------------------------------------------------
-
-
-def _decode_values_sequential(
-    bits: np.ndarray, count: int, first_bits: int
-) -> np.ndarray:
-    """Faithful general XOR decoder incl. '11' window codes
-    (value_decompression.ex:124-210) — fallback for non-reference writers."""
-    out = np.empty(count, dtype=np.uint64)
-    out[0] = first_bits
-    prev = first_bits
-    lead, trail = 0, 0
-    read = bitio.BitReader(bits, 64, "gorilla wire: value bitstream truncated").read
-
-    for i in range(1, count):
-        if read(1) == 0:
-            out[i] = prev
-            continue
-        if read(1) == 0:  # '10' reuse window
-            mlen = 64 - lead - trail
-            if mlen <= 0:
-                raise ValueError("invalid meaningful length in previous window")
-            xor = read(mlen) << trail
-        else:  # '11' new window
-            lead = read(5)
-            mlen = read(6) + 1
-            trail = 64 - lead - mlen
-            if trail < 0:
-                raise ValueError("invalid trailing zeros calculation")
-            xor = read(mlen) << trail
-        prev ^= xor
-        out[i] = prev
-    return out
 
 
 def _gather_var_bits(
@@ -857,37 +849,46 @@ def _decode_values_general(
     return np.bitwise_xor.accumulate(out)
 
 
-def _scan_value_positions(
-    vb: np.ndarray, val_bit_len: int, count: int
+def _region_bits(datab: np.ndarray, start: int, nbits: int) -> np.ndarray:
+    """Bits [start, start + nbits) of the packed bytes, one uint8 per bit
+    (for the per-value decoders of non-canonical streams)."""
+    sh = start & 7
+    return np.unpackbits(datab[start >> 3 : (start + nbits + 7) >> 3])[sh : sh + nbits]
+
+
+_RUN_CAP = SCAN_WINDOW // 66  # '10' codes one run probe may read
+
+
+def _decode_canonical_values(
+    datab: np.ndarray, base: int, V: int, count: int, first_bits: int
 ) -> np.ndarray | None:
-    """Bit positions of the '10' codes in a reference-canonical value
-    stream, or None if the stream cannot be canonical ('11' codes present
-    or inconsistent) — the caller then uses the sequential general decoder.
+    """Values of a reference-canonical '0'/'10' stream (the ``V`` bits from
+    bit ``base`` of the packed bytes), or None if the stream cannot be
+    canonical ('11' codes present or inconsistent) — the caller then uses
+    the general decoder.
 
     Exploits the stream grammar (first:64, then z 1-bit '0' codes and o
-    66-bit '10' codes): 64 + z + 66*o = val_bit_len and z + o = count-1
-    pin o exactly.  The walk is run-batched: consecutive '10' codes sit at
-    a fixed 66-bit stride, so each iteration verifies a whole run with one
-    vectorized probe and each '0'-run is skipped with one searchsorted —
-    iterations scale with the number of RUNS, not values (all-changing and
-    all-constant streams both decode in a handful of numpy calls).
+    66-bit '10' codes): 64 + z + 66*o = V and z + o = count-1 pin o
+    exactly.  The walk is run-batched: consecutive '10' codes sit at a
+    fixed 66-bit stride, so each iteration verifies up to :data:`_RUN_CAP`
+    of a run with one 2-bit gather of their control bits, and each '0' run
+    is skipped with one :func:`bitio.next_set_bit`; iterations scale with
+    the number of RUNS, not values.  Streams of short runs switch to
+    :func:`_code_windows`.  The k-th '10' at bit p is code p - 64 - 65k, so
+    its payload lands straight in the XOR array: scratch is the O(count)
+    output plus one window.
     """
-    rem = val_bit_len - 64 - (count - 1)
+    rem = V - 64 - (count - 1)
     if rem < 0 or rem % 65:
         return None
     o = rem // 65
-    region = vb[:val_bit_len]
-    if o == 0:
-        # all-'0' codes: any set bit would mean a non-canonical stream
-        if region[64:].any():
-            return None
-        return np.empty(0, dtype=np.int64)
-    ones = np.flatnonzero(region)
-    chunks: list[np.ndarray] = []
+    xors = np.zeros(count, dtype=np.uint64)
+    xors[0] = np.uint64(first_bits)
+    end = base + V
     found = 0
     q = 64
     zeros = 0
-    batch = 1024  # adapts to ~2x the observed run length (floor 64):
+    batch = _RUN_CAP  # adapts to ~2x the observed run length (floor 64):
     # long-run streams probe whole runs at once, short-run streams stay
     # O(runs * 64) instead of O(runs * o) (quadratic on alternating data)
     iters = 0
@@ -895,58 +896,47 @@ def _scan_value_positions(
         iters += 1
         if iters >= 64 and found < 4 * iters:
             # short-run regime (near-alternating '0'/'10'): per-run Python
-            # costs more than one fully-vectorized pointer-doubling pass
-            # over the remainder (J[p] = p + 1 + 65*bit covers both codes)
+            # costs more than one windowed pointer-doubling walk over the
+            # remainder (code length 1 + 65*bit covers both codes)
             remaining = (count - 1) - (zeros + found)
-            # int32 jump table halves doubling-gather traffic (block bit
-            # lengths are far below 2^31; blocks are bounded by MAX_COUNT)
-            jdt = np.int32 if val_bit_len < (1 << 31) - 66 else np.int64
-            J = np.minimum(
-                np.arange(val_bit_len, dtype=jdt)
-                + jdt(1)
-                + jdt(65) * region.astype(jdt),
-                jdt(val_bit_len),
-            )
-            J = np.concatenate([J, np.array([val_bit_len], dtype=jdt)])
-            P = _chain_positions(J, q, remaining).astype(np.int64)
-            if P.size and P[-1] >= val_bit_len:
-                return None
-            m = region[P] == 1
-            tens = P[m]
-            if tens.size and (
-                int(tens[-1]) + 66 > val_bit_len or region[tens + 1].any()
-            ):
-                return None
-            chunks.append(tens)
-            found += int(tens.size)
-            zeros += int(remaining - tens.size)
+            for win in _code_windows(datab, base, q, V, remaining, _VALUE_CODE_LEN):
+                if win is None:
+                    return None
+                P, heads = win
+                tens = P[heads >= 8]
+                if (heads >= 12).any():
+                    return None  # second control bit 1 => '11' code
+                k = found + np.arange(tens.size, dtype=np.int64)
+                xors[1 + tens - 64 - 65 * k] = bitio.gather(datab, base + tens + 2, 64)
+                found += tens.size
             if found != o:
                 return None
-            return np.concatenate(chunks) if chunks else np.empty(0, np.int64)
-        i = int(np.searchsorted(ones, q))
-        if i >= ones.size:
+            return np.bitwise_xor.accumulate(xors, out=xors)
+        p = bitio.next_set_bit(datab, base + q, end)
+        if p < 0:
             return None
-        p = int(ones[i])
+        p -= base
         zeros += p - q
         cand = p + 66 * np.arange(min(o - found, batch), dtype=np.int64)
-        cand = cand[cand + 66 <= val_bit_len]
+        cand = cand[cand + 66 <= V]
         if cand.size == 0:
             return None
-        b0 = region[cand]
-        stop = int(np.argmin(b0)) if (b0 == 0).any() else cand.size
-        run = cand[:stop]  # region[p] == 1, so stop >= 1
-        if region[run + 1].any():  # second control bit 1 => '11' code
+        ctrl = bitio.gather(datab, base + cand, 2)
+        stop = int(np.argmax(ctrl < 2)) if (ctrl < 2).any() else cand.size
+        if (ctrl[:stop] == 3).any():  # second control bit 1 => '11' code
             return None
-        chunks.append(run)
-        found += run.size
+        run = cand[:stop]  # ctrl[0] >= 2: p is a set bit, so stop >= 1
+        k = found + np.arange(stop, dtype=np.int64)
+        xors[1 + run - 64 - 65 * k] = bitio.gather(datab, base + run + 2, 64)
+        found += stop
         q = int(run[-1]) + 66
-        batch = max(64, min(2 * stop, 1 << 16))
-    if int(np.searchsorted(ones, q)) != ones.size:
+        batch = max(64, min(2 * stop, _RUN_CAP))
+    if bitio.next_set_bit(datab, base + q, end) >= 0:
         return None  # set bit inside the trailing all-'0'-codes region
-    zeros += val_bit_len - q
+    zeros += V - q
     if zeros + o != count - 1:
         return None
-    return np.concatenate(chunks)
+    return np.bitwise_xor.accumulate(xors, out=xors)
 
 
 def decode_points(
@@ -993,7 +983,7 @@ def decode_points(
             raise ValueError("gorilla wire: truncated v2 header")
         (scale_decimals,) = struct.unpack_from(">I", buf, 80)
         off = 84
-    payload = buf[off : off + compressed_size]
+    payload = memoryview(buf)[off : off + compressed_size]
     if len(payload) < compressed_size:
         raise ValueError("gorilla wire: truncated payload")
     info = {
@@ -1026,30 +1016,26 @@ def decode_points(
         # zero/negative inner count on a non-empty payload is corruption —
         # downstream first-value reads would IndexError instead
         raise ValueError(f"gorilla wire: implausible count {count}")
-    data = payload[32:]
     need_bytes = (ts_bit_len + val_bit_len + 7) >> 3
-    if len(data) < need_bytes:
+    if len(payload) - 32 < need_bytes:
         raise ValueError("gorilla wire: payload shorter than declared bit lengths")
-    datab = np.frombuffer(data, dtype=np.uint8, count=need_bytes)
-    bits = np.unpackbits(datab)
+    datab = np.frombuffer(payload, dtype=np.uint8, count=need_bytes, offset=32)
 
     # --- timestamps ---
-    tb = bits[:ts_bit_len]
     if ts_bit_len < 64:
         raise ValueError("gorilla wire: timestamp stream too short")
     first_ts = int(bitio.gather(datab, np.array([0]), 64)[0])
     first_ts = first_ts - (1 << 64) if first_ts >= (1 << 63) else first_ts  # signed read
-    if count == 1:
-        ts = np.array([first_ts], dtype=np.int64)
-    else:
-        codes, _end = _decode_dod_stream(tb, 64, count - 1, datab, 0)
-        fd, dods = int(codes[0]), codes[1:]
-        deltas = fd + np.concatenate(([0], np.cumsum(dods)))
-        ts = first_ts + np.concatenate(([0], np.cumsum(deltas)))
-        ts = ts.astype(np.int64)
+    # ts[1:] holds the first-delta and DoD codes, then two in-place
+    # prefix sums turn them into deltas and offsets from the first stamp
+    ts = np.zeros(count, dtype=np.int64)
+    if count > 1:
+        _decode_dod_stream(datab, 64, ts_bit_len, ts[1:])
+        np.cumsum(ts[1:], out=ts[1:])
+        np.cumsum(ts, out=ts)
+    ts += first_ts
 
     # --- values ---
-    vb = bits[ts_bit_len : ts_bit_len + val_bit_len]
     if val_bit_len < 64:
         raise ValueError("gorilla wire: value stream too short")
     first_vb = int(bitio.gather(datab, np.array([ts_bit_len]), 64)[0])
@@ -1057,30 +1043,21 @@ def decode_points(
         vbits = np.array([first_vb], dtype=np.uint64)
     elif flags & _FLAG_CHIMP128:
         # NIF decoder checks 0x8 before 0x4 (gorilla_nif.cpp:1417-1424)
-        vbits = _decode_values_chimp128(vb, count, first_vb)
+        vbits = _decode_values_chimp128(
+            _region_bits(datab, ts_bit_len, val_bit_len), count, first_vb
+        )
     elif flags & _FLAG_CHIMP:
-        vbits = _decode_values_chimp(vb, count, first_vb)
+        vbits = _decode_values_chimp(_region_bits(datab, ts_bit_len, val_bit_len), count, first_vb)
     else:
         # fast path: reference-canonical '0'/'10' stream (see module doc)
-        P10 = _scan_value_positions(vb, val_bit_len, count)
-        if P10 is None:
+        vbits = _decode_canonical_values(datab, ts_bit_len, val_bit_len, count, first_vb)
+        if vbits is None:
             # '11' codes present (non-reference writer) -> faithful
             # batched general decoder
             vbits = _decode_values_general(
-                vb, val_bit_len, count, first_vb, datab, ts_bit_len
+                _region_bits(datab, ts_bit_len, val_bit_len),
+                val_bit_len, count, first_vb, datab, ts_bit_len,
             )
-        else:
-            # code index of the k-th '10': the pos_k - 64 bits before it
-            # hold k 66-bit codes and (pos_k - 64 - 66k) 1-bit codes, so
-            # its 0-based code index is pos_k - 64 - 65k
-            xors = np.zeros(count, dtype=np.uint64)
-            if P10.size:
-                idxs = P10 - 64 - 65 * np.arange(P10.size, dtype=np.int64)
-                xors[1 + idxs] = bitio.gather(
-                    datab, ts_bit_len + P10 + 2, 64
-                )
-            xors[0] = np.uint64(first_vb)
-            vbits = np.bitwise_xor.accumulate(xors)
     vals = np.ascontiguousarray(vbits).view(np.float64)
     vals = _vm_postprocess(vals, flags, scale_decimals)
     return ts, np.ascontiguousarray(vals, dtype=np.float64), info

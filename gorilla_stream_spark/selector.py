@@ -5,9 +5,9 @@ pattern analyzer (``/root/reference/lib/gorilla_stream/compression/gorilla/
 encoder.ex:197-359``, ``lib/gorilla_stream/config.ex:26-172``): the reference
 predicts Gorilla's size from the delta-bucket distribution to *advise*; we
 compute the exact encoded size of every candidate codec from cheap features
-(no trial encoding except FSST's sampled gain) and *pick the argmin*.  Lives
-inside ``mapInPandas`` — data-dependent per partition, invisible to Catalyst
-by design (SURVEY.md §4).
+(no trial encoding except FSST's sampled gain) and *pick the argmin*.  Runs
+inside the engine's ``mapInArrow`` kernels — data-dependent per partition,
+invisible to Catalyst by design (SURVEY.md §4).
 """
 
 from __future__ import annotations

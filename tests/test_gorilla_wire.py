@@ -1086,6 +1086,36 @@ def _mk_value_stream(first_bits, tokens):
     return bw, expect
 
 
+def _decode_values_sequential(bits: np.ndarray, count: int, first_bits: int) -> np.ndarray:
+    """Oracle: faithful general XOR decoder incl. '11' window codes
+    (value_decompression.ex:124-210), one bit-list read per field."""
+    out = np.empty(count, dtype=np.uint64)
+    out[0] = first_bits
+    prev = first_bits
+    lead, trail = 0, 0
+    read = bitio.BitReader(bits, 64, "gorilla wire: value bitstream truncated").read
+
+    for i in range(1, count):
+        if read(1) == 0:
+            out[i] = prev
+            continue
+        if read(1) == 0:  # '10' reuse window
+            mlen = 64 - lead - trail
+            if mlen <= 0:
+                raise ValueError("invalid meaningful length in previous window")
+            xor = read(mlen) << trail
+        else:  # '11' new window
+            lead = read(5)
+            mlen = read(6) + 1
+            trail = 64 - lead - mlen
+            if trail < 0:
+                raise ValueError("invalid trailing zeros calculation")
+            xor = read(mlen) << trail
+        prev ^= xor
+        out[i] = prev
+    return out
+
+
 def _run_general(bw, count):
     payload = bw.to_bytes()
     datab = np.frombuffer(payload, dtype=np.uint8)
@@ -1095,7 +1125,7 @@ def _run_general(bw, count):
         bitio.gather(datab, np.array([0]), 64)[0]
     )
     got = gw._decode_values_general(bits[:V], V, count, first, datab, 0)
-    oracle = gw._decode_values_sequential(bits[:V], count, first)
+    oracle = _decode_values_sequential(bits[:V], count, first)
     return got, oracle
 
 
@@ -1166,7 +1196,7 @@ def test_general_decoder_truncation_raises():
     with pytest.raises(ValueError, match="truncated"):
         gw._decode_values_general(bits[:V], V, 4, 0x4045000000000000, datab, 0)
     with pytest.raises(ValueError):
-        gw._decode_values_sequential(bits[:V], 4, 0x4045000000000000)
+        _decode_values_sequential(bits[:V], 4, 0x4045000000000000)
 
 
 def test_general_decoder_full_block_foreign_stream():
@@ -1198,3 +1228,236 @@ def test_general_decoder_full_block_foreign_stream():
     bw, expect = _mk_value_stream(int(bits_v[0]), toks)
     got, oracle = _run_general(bw, len(toks) + 1)
     np.testing.assert_array_equal(got, oracle)
+
+
+# ---------------------------------------------------------------------------
+# Bounded-scratch kernels: chunk, word and scan-window edges against the
+# whole-block packer and the sequential decoders, and the scratch bound
+# ---------------------------------------------------------------------------
+
+
+def _pack_fields_whole(vals, widths):
+    """Oracle: the whole-block packer (one stable sort of every field's
+    word contributions, then one add.reduceat), O(fields) temporaries."""
+    v = np.ascontiguousarray(vals, dtype=np.uint64)
+    w = np.ascontiguousarray(widths, dtype=np.int64)
+    total = int(w.sum())
+    if total == 0:
+        return b"", 0
+    nz = w > 0
+    v, w = v[nz], w[nz]
+    o = np.cumsum(w) - w
+    w0 = o >> 6
+    hi_shift = 64 - (o & 63) - w
+    pos_sh = np.maximum(hi_shift, 0).astype(np.uint64)
+    neg_sh = np.maximum(-hi_shift, 0).astype(np.uint64)
+    hi = np.where(hi_shift >= 0, v << pos_sh, v >> neg_sh)
+    crosses = hi_shift < 0
+    lo = v[crosses] << (np.uint64(64) - neg_sh[crosses])
+    idx = np.concatenate([w0, w0[crosses] + 1])
+    contrib = np.concatenate([hi, lo])
+    order = np.argsort(idx, kind="stable")
+    idx, contrib = idx[order], contrib[order]
+    run_start = np.concatenate(([True], idx[1:] != idx[:-1]))
+    sums = np.add.reduceat(contrib, np.flatnonzero(run_start))
+    words = np.zeros((total + 63) >> 6, dtype=np.uint64)
+    words[idx[run_start]] = sums
+    return words.astype(">u8").tobytes()[: (total + 7) >> 3], total
+
+
+def _oracle_payload(ts, vals) -> bytes:
+    """Gorilla payload (inner header + streams) from whole-block field
+    arrays packed by :func:`_pack_fields_whole`."""
+    ts = np.asarray(ts, dtype=np.int64)
+    vb = np.asarray(vals, dtype=np.float64).view(np.uint64)
+    n = ts.size
+    fv = [ts.view(np.uint64)[:1]]
+    fw = [np.array([64])]
+    deltas = np.diff(ts)
+    if n >= 2:
+        for v, w in (gw._dod_fields(deltas[:1]), gw._dod_fields(np.diff(deltas))):
+            fv.append(v)
+            fw.append(w)
+    ts_bits = int(np.concatenate(fw).sum())
+    x = vb[1:] ^ vb[:-1]
+    nz = x != 0
+    ctrl_v = np.where(nz, np.uint64(2), np.uint64(0))
+    inter_v = np.stack([ctrl_v, x], axis=1).ravel()
+    inter_w = np.stack([1 + nz, 64 * nz], axis=1).ravel()
+    fv += [vb[:1], inter_v]
+    fw += [np.array([64]), inter_w]
+    val_bits = int(np.concatenate(fw).sum()) - ts_bits
+    fd32 = int(deltas[:1].astype(np.int32)[0]) if n >= 2 else 0
+    inner = gw._INNER.pack(n, int(ts.view(np.uint64)[0]), int(vb[0]), fd32, ts_bits, val_bits)
+    body, _ = _pack_fields_whole(np.concatenate(fv), np.concatenate(fw))
+    return inner + body
+
+
+def _decode_dod_sequential(bits, count):
+    """Oracle: the DoD prefix codes read one field at a time."""
+    read = bitio.BitReader(bits, 64, "gorilla wire: timestamp bitstream truncated").read
+    out = []
+    for _ in range(count):
+        w = 0
+        for width in (7, 9, 12, 32):  # prefix '0', '10', '110', '1110', '1111'
+            if read(1) == 0:
+                break
+            w = width
+        raw = read(w) if w else 0
+        out.append(raw - (1 << w) if w and raw >> (w - 1) else raw)
+    return np.array(out, dtype=np.int64)
+
+
+def _check_block(ts, vals):
+    """encode_points bytes == the whole-block oracle; decode_points ==
+    the sequential decoders == the input."""
+    buf = gw.encode_points(ts, vals)
+    payload = _oracle_payload(ts, vals)
+    assert buf[80:] == payload
+    assert struct.unpack_from(">I", buf, 24)[0] == zlib.crc32(payload)
+    got_ts, got_v, _ = gw.decode_points(buf)
+    n, _, _, _, ts_bits, val_bits = gw._INNER.unpack_from(payload, 0)
+    bits = np.unpackbits(np.frombuffer(payload[32:], dtype=np.uint8))
+    if n > 1:
+        codes = _decode_dod_sequential(bits[:ts_bits], n - 1)
+        deltas = np.cumsum(codes)
+        want_ts = int(ts[0]) + np.concatenate(([0], np.cumsum(deltas)))
+        np.testing.assert_array_equal(got_ts, want_ts)
+    vb = bits[ts_bits : ts_bits + val_bits]
+    first = int(np.asarray(vals, dtype=np.float64).view(np.uint64)[0])
+    want_v = _decode_values_sequential(vb, n, first)
+    np.testing.assert_array_equal(got_v.view(np.uint64), want_v)
+    np.testing.assert_array_equal(got_ts, ts)
+    np.testing.assert_array_equal(got_v.view(np.uint64), np.asarray(vals).view(np.uint64))
+    return buf, ts_bits, val_bits
+
+
+def test_pack_fields_chunk_and_word_edges(monkeypatch):
+    rng = np.random.default_rng(7)
+    C = bitio.PACK_CHUNK
+    # the last field of the first chunk starts at bit 61 of a word, so it
+    # and the first field of the next chunk both straddle word edges
+    widths = np.array([7] + [5] * (C - 2) + [64] * 4, dtype=np.int64)
+    vals = rng.integers(0, 1 << 63, widths.size, dtype=np.uint64)
+    vals[widths < 64] &= (np.uint64(1) << widths[widths < 64].astype(np.uint64)) - np.uint64(1)
+    starts = np.cumsum(widths) - widths
+    assert starts[C - 1] % 64 == 61 and starts[C] % 64 == 61
+    assert bitio.pack_fields(vals, widths) == _pack_fields_whole(vals, widths)
+    for chunk in (1, 3, 64):
+        monkeypatch.setattr(bitio, "PACK_CHUNK", chunk)
+        for _ in range(20):
+            n = int(rng.integers(1, 300))
+            w = rng.integers(0, 65, n)
+            v = rng.integers(0, 1 << 63, n, dtype=np.uint64) << np.uint64(1)
+            v |= rng.integers(0, 2, n).astype(np.uint64)
+            v = np.where(w == 64, v, v & ((np.uint64(1) << w.astype(np.uint64)) - np.uint64(1)))
+            want = _pack_fields_whole(v, w)
+            assert bitio.pack_fields(v, w) == want
+            packer = bitio.FieldPacker()  # the same fields over several add calls
+            cuts = np.sort(rng.integers(0, n + 1, 3))
+            for a, b in zip(np.r_[0, cuts], np.r_[cuts, n]):
+                packer.add(v[a:b], w[a:b])
+            assert (packer.finish(), packer.nbits) == want
+
+
+def test_next_set_bit_matches_flatnonzero():
+    rng = np.random.default_rng(3)
+    for density in (0.0, 1e-5, 1e-3, 0.3):
+        data = np.packbits(rng.random(3 * bitio.SCAN_BYTES * 8) < density)
+        ones = np.flatnonzero(np.unpackbits(data))
+        for pos in [0, 1, 7, 8, 8 * bitio.SCAN_BYTES - 1, *rng.integers(0, data.size * 8, 30)]:
+            for end in (data.size * 8, int(pos) + 9, int(pos) + 8 * bitio.SCAN_BYTES + 1):
+                hit = ones[(ones >= pos) & (ones < end)]
+                want = int(hit[0]) if hit.size else -1
+                assert bitio.next_set_bit(data, int(pos), int(end)) == want
+
+
+def _regular(n):
+    return 1_600_000_000 + 60 * np.arange(n, dtype=np.int64)
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_dod_stream_of_one_window_and_one_bit_more(extra):
+    # first delta (9-bit code), n-3 one-bit '0' codes, a final +1 DoD
+    # (9-bit code): n + 15 bits after the first timestamp
+    n = gw.SCAN_WINDOW - 15 + extra
+    ts = _regular(n)
+    ts[-1] += 1
+    _, ts_bits, _ = _check_block(ts, np.zeros(n))
+    assert ts_bits - 64 == gw.SCAN_WINDOW + extra
+
+
+def test_dod_code_across_scan_windows():
+    # 36-bit DoD codes: some code straddles every window edge
+    rng = np.random.default_rng(11)
+    n = 5000
+    ts = np.cumsum(rng.integers(1, 1 << 30, n)).astype(np.int64)
+    widths = gw._dod_fields(np.diff(np.diff(ts)))[1]
+    starts = 64 + 36 + np.cumsum(widths) - widths
+    for edge in (gw.SCAN_WINDOW, 2 * gw.SCAN_WINDOW):
+        assert ((starts - 64 < edge) & (starts + widths - 64 > edge)).any()
+    _check_block(ts, np.round(rng.normal(0, 1, n), 2))
+
+
+def test_value_runs_across_scan_windows():
+    n = 3 * gw.SCAN_WINDOW // 66
+    rng = np.random.default_rng(5)
+    # one '10' run longer than a run probe and than a window
+    _check_block(_regular(n), np.round(rng.normal(20, 1, n), 3))
+    # short '0'/'10' runs: the windowed pointer-doubling walk, whose
+    # 66-bit codes straddle window edges
+    vals = np.where(rng.random(4 * n) < 0.5, 1.5, 2.5)
+    _check_block(_regular(4 * n), vals)
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+@pytest.mark.parametrize("last_changes", [False, True])
+def test_value_zero_run_of_one_window_and_one_bit_more(extra, last_changes):
+    # V - 64 == SCAN_WINDOW (+1): one all-'0' window, or a '0' run ending
+    # in one '10' code at the very end of the stream
+    n = gw.SCAN_WINDOW + 1 + extra - (65 if last_changes else 0)
+    vals = np.full(n, 3.25)
+    if last_changes:
+        vals[-1] = 4.5
+    _, _, val_bits = _check_block(_regular(n), vals)
+    assert val_bits - 64 == gw.SCAN_WINDOW + extra
+
+
+def _series(n, irregular):
+    """The perfbench series shape (minute sine + noise, 3 decimals)."""
+    i = np.arange(n, dtype=np.int64)
+    ts = 1_600_000_000 + i * 60
+    if irregular:
+        ts = np.cumsum(np.random.default_rng(4).integers(1, 1 << 30, n)).astype(np.int64)
+    vals = np.round(
+        np.sin(i / 1440.0 * 2 * np.pi) * 10.0 + np.sin((i + 4 * 7919) * 12.9898) * 0.5 + 20.0, 3
+    )
+    return ts, vals
+
+
+def _traced_peak(fn) -> int:
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        fn()
+        return tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+@pytest.mark.parametrize("irregular", [False, True])
+def test_wire_kernels_scratch_is_bounded(irregular):
+    # a 65,536-point block encodes and decodes in <= 8 MiB of traced
+    # allocations (outputs included), and 4x the points in <= 4.5x that
+    peaks = {}
+    for n in (65536, 4 * 65536):
+        ts, vals = _series(n, irregular)
+        buf = gw.encode_points(ts, vals)
+        peaks[n] = (
+            _traced_peak(lambda: gw.encode_points(ts, vals)),
+            _traced_peak(lambda: gw.decode_points(buf)),
+        )
+    for op, small, big in zip(("encode", "decode"), peaks[65536], peaks[4 * 65536]):
+        assert small <= 8 << 20, (op, small)
+        assert big <= 4.5 * small, (op, small, big)
