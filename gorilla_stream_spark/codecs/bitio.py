@@ -26,7 +26,6 @@ __all__ = [
     "ctz64",
     "pack",
     "unpack",
-    "pack_fields",
     "FieldPacker",
     "gather",
     "next_set_bit",
@@ -258,24 +257,13 @@ class FieldPacker:
         self.nbits += end - lead
 
     def finish(self) -> bytes:
-        """The packed stream, zero-padded to a whole byte."""
+        """The packed stream, zero-padded to a whole byte exactly like the
+        reference's pad_to_byte_boundary (bit_packing.ex:115-125).  At a
+        fixed width the bytes equal :func:`pack`'s."""
         tail = ((self.nbits & 63) + 7) >> 3
         if tail:
             self._parts.append(np.array([self._carry], dtype=">u8").tobytes()[:tail])
         return b"".join(self._parts)
-
-
-def pack_fields(vals: np.ndarray, widths: np.ndarray) -> tuple[bytes, int]:
-    """MSB-first concatenation of variable-width fields -> (bytes, nbits).
-
-    One :class:`FieldPacker` pass, so scratch is O(:data:`PACK_CHUNK`) plus
-    the output bytes.  Zero-pads the final byte exactly like the
-    reference's pad_to_byte_boundary (bit_packing.ex:115-125).  At a fixed
-    width the bytes equal :func:`pack`'s.
-    """
-    packer = FieldPacker()
-    packer.add(vals, widths)
-    return packer.finish(), packer.nbits
 
 
 def gather(data: np.ndarray, starts: np.ndarray, width: int) -> np.ndarray:

@@ -142,7 +142,7 @@ def _chain_positions(
     With ``bound``, stops early once the chain has reached ``bound``."""
     if count <= 0:
         return np.empty(0, dtype=np.int64)
-    P = np.array([start], dtype=J.dtype)
+    P = np.array([start], dtype=np.int64)
     Jk = J
     while P.size < count:
         P = np.concatenate([P, Jk[P]])
@@ -214,14 +214,14 @@ def _code_windows(datab, base: int, pos: int, end: int, count: int, code_len: np
 
 def _decode_dod_stream(datab: np.ndarray, start: int, end: int, out: np.ndarray) -> None:
     """Decode ``out.size`` DoD prefix codes from bit ``start`` of the packed
-    bytes into ``out`` (int64); the codes must end by bit ``end``."""
+    bytes into ``out`` (int64, zeroed: '0' codes are not written); the
+    codes must end by bit ``end``."""
     k = 0
     for win in _code_windows(datab, 0, start, end, out.size, _DOD_CODE_LEN):
         if win is None:
             raise ValueError("gorilla wire: timestamp bitstream truncated")
         P, heads = win
         seg = out[k : k + P.size]
-        seg[:] = 0
         if heads.any():
             cls = _DOD_CLASS[heads]
             for c, plen, w in _DOD_PAYLOADS:
@@ -260,7 +260,7 @@ _CHIMP128_HASH_MASK = np.uint64((1 << (_CHIMP128_THRESHOLD + 1)) - 1)
 def _interleave_fields(
     hdr_v: np.ndarray, hdr_w: np.ndarray, pay_v: np.ndarray, pay_w: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(header, payload) per element -> flat field arrays for bitio.pack_fields
+    """(header, payload) per element -> flat field arrays for bitio.FieldPacker
     (zero-width payloads are dropped there)."""
     n = hdr_v.size
     fv = np.empty(2 * n, dtype=np.uint64)
@@ -917,6 +917,8 @@ def _decode_canonical_values(
             return None
         p -= base
         zeros += p - q
+        if zeros + o > count - 1:
+            return None  # too many '0' codes; keeps every XOR index <= count-1
         cand = p + 66 * np.arange(min(o - found, batch), dtype=np.int64)
         cand = cand[cand + 66 <= V]
         if cand.size == 0:

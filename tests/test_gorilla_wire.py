@@ -452,6 +452,13 @@ def test_spark_wire_rejects_nulls(spark):
         gw.encode_timeseries_wire(df).collect()
 
 
+def _pack(vals, widths):
+    """One FieldPacker pass -> (bytes, nbits)."""
+    packer = bitio.FieldPacker()
+    packer.add(vals, widths)
+    return packer.finish(), packer.nbits
+
+
 @settings(max_examples=40, deadline=None)
 @given(
     st.lists(
@@ -467,7 +474,7 @@ def test_pack_fields_gather_roundtrip(fields):
     vals = np.array(
         [v & ((1 << w) - 1) for w, v in fields], dtype=np.uint64
     )
-    buf, nbits = bitio.pack_fields(vals, widths)
+    buf, nbits = _pack(vals, widths)
     assert nbits == int(widths.sum())
     assert len(buf) == (nbits + 7) // 8
     data = np.frombuffer(buf, dtype=np.uint8)
@@ -1342,7 +1349,7 @@ def test_pack_fields_chunk_and_word_edges(monkeypatch):
     vals[widths < 64] &= (np.uint64(1) << widths[widths < 64].astype(np.uint64)) - np.uint64(1)
     starts = np.cumsum(widths) - widths
     assert starts[C - 1] % 64 == 61 and starts[C] % 64 == 61
-    assert bitio.pack_fields(vals, widths) == _pack_fields_whole(vals, widths)
+    assert _pack(vals, widths) == _pack_fields_whole(vals, widths)
     for chunk in (1, 3, 64):
         monkeypatch.setattr(bitio, "PACK_CHUNK", chunk)
         for _ in range(20):
@@ -1352,7 +1359,7 @@ def test_pack_fields_chunk_and_word_edges(monkeypatch):
             v |= rng.integers(0, 2, n).astype(np.uint64)
             v = np.where(w == 64, v, v & ((np.uint64(1) << w.astype(np.uint64)) - np.uint64(1)))
             want = _pack_fields_whole(v, w)
-            assert bitio.pack_fields(v, w) == want
+            assert _pack(v, w) == want
             packer = bitio.FieldPacker()  # the same fields over several add calls
             cuts = np.sort(rng.integers(0, n + 1, 3))
             for a, b in zip(np.r_[0, cuts], np.r_[cuts, n]):
@@ -1421,6 +1428,43 @@ def test_value_zero_run_of_one_window_and_one_bit_more(extra, last_changes):
         vals[-1] = 4.5
     _, _, val_bits = _check_block(_regular(n), vals)
     assert val_bits - 64 == gw.SCAN_WINDOW + extra
+
+
+@pytest.mark.parametrize(
+    "vals",
+    [
+        # the '10' payload after the cleared bit starts '0000 0000 0000 10':
+        # the run scan lands inside it and reads a '10' control pair there
+        [1.0, 1.0, 1.5, 2.5],
+        np.round(np.random.default_rng(8).normal(20, 1, 120), 1),
+    ],
+    ids=["four_points", "120_points"],
+)
+def test_cleared_value_control_bit_fails_cleanly(vals):
+    # clearing the first control bit of any '10' code leaves a stream the
+    # canonical walk must reject (the general decoder then raises
+    # ValueError or decodes), never an out-of-range XOR index
+    vals = np.asarray(vals, dtype=np.float64)
+    n = vals.size
+    buf = gw.encode_points(_regular(n), vals)
+    ts_bits = gw._INNER.unpack_from(buf, 80)[4]
+    base = (80 + 32) * 8 + ts_bits  # first bit of the value stream
+    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
+    tens, pos = [], 64
+    for _ in range(n - 1):
+        if bits[base + pos]:
+            tens.append(pos)
+            pos += 66
+        else:
+            pos += 1
+    assert tens
+    for p in tens:
+        bad = bits.copy()
+        bad[base + p] = 0
+        try:
+            gw.decode_points(np.packbits(bad).tobytes(), strict=False)
+        except ValueError:
+            pass
 
 
 def _series(n, irregular):

@@ -38,7 +38,9 @@ def test_pack_unpack_roundtrip(width, n, data):
     data = bitio.pack(vals, width)
     assert len(data) == (vals.size * width + 7) // 8
     # the fixed-width and the variable-width writer/reader share one layout
-    assert data == bitio.pack_fields(vals, np.full(vals.size, width))[0]
+    packer = bitio.FieldPacker()
+    packer.add(vals, np.full(vals.size, width))
+    assert data == packer.finish()
     if width:
         starts = np.arange(vals.size) * width
         got = bitio.gather(np.frombuffer(data, dtype=np.uint8), starts, width)
