@@ -28,7 +28,9 @@ Two reference quirks are reproduced deliberately (bug-for-bug wire parity):
    is emitted as ``'10' + full 64 XOR bits`` and every repeat as ``'0'``
    (``value_compression.ex:82-118``).  Export emits exactly that; import
    fast-paths it and falls back to the faithful general decoder (window
-   updates, '11' codes) for streams from other writers.
+   updates, '11' codes), one bit-serial walk over the packed bytes, for
+   streams from other writers.  Only the Chimp/Chimp128 decoders unpack
+   their value stream to one byte per bit.
 2. The DoD bucket upper bounds (+64, +256, +2048) don't fit their signed
    payload widths: the reference encodes the low bits and its decoder
    sign-extends, so a delta-of-delta of exactly +64 round-trips as -64
@@ -71,6 +73,7 @@ VERSION = 1
 _U64 = np.uint64
 _MASK64 = (1 << 64) - 1
 _W64 = np.array([64], dtype=np.int64)
+_MASK88 = (1 << 88) - 1
 
 # outer header v1: magic, version, header_size, count, compressed_size,
 # original_size, checksum, first_timestamp, first_delta(signed),
@@ -628,230 +631,60 @@ def encode_points(
 # ---------------------------------------------------------------------------
 
 
-def _gather_var_bits(
-    datab: np.ndarray, abs_starts: np.ndarray, widths: np.ndarray
-) -> np.ndarray:
-    """Per-element variable-width (1..64 bit) gather at absolute offsets:
-    one fixed 64-bit gather, then keep each element's top ``width`` bits."""
-    full = bitio.gather(datab, abs_starts, 64)
-    return full >> (np.uint64(64) - widths.astype(np.uint64))
-
-
 def _decode_values_general(
-    vb: np.ndarray,
-    val_bit_len: int,
-    count: int,
-    first_bits: int,
-    datab: np.ndarray,
-    base: int,
+    datab: np.ndarray, base: int, V: int, count: int, first_bits: int
 ) -> np.ndarray:
-    """Vectorized faithful general XOR decoder ('0'/'10'/'11' window codes,
-    value_decompression.ex:124-210) for non-reference-canonical writers.
+    """Faithful general XOR decoder ('0'/'10'/'11' window codes,
+    value_decompression.ex:124-210) for streams from writers other than the
+    reference: the ``V`` bits from bit ``base`` of the packed bytes.
 
-    The grammar is bit-serial with data-dependent widths, but only the
-    '10' code's width depends on carried state (the current window's
-    meaningful length ``w``); '0' (1 bit) and '11' (13 bits + own 6-bit
-    length header) are self-delimiting.  Decode therefore runs in batched
-    phases, each one pointer-doubling chain over a jump table:
-
-    - W-phase (current token '0'/'10'): slice-local J with ``J[p] = p+1``
-      ('0'), ``p+2+w`` ('10'), ``p+13+mlen(p)`` ('11').  The chain stays
-      valid through any run of '0'/'10' codes and '11' codes that KEEP the
-      window length; it is cut at the first '11' whose mlen differs (that
-      token itself still decodes).  Smooth foreign streams batch in a few
-      numpy passes; the slice lookahead grows geometrically so total work
-      stays O(bits log) even without cuts.
-    - S-phase (current token '11'): global self-delimiting J ('10' is a
-      barrier) — consecutive '11'/'0' codes with arbitrary per-token
-      window changes batch into one chain, covering the alternating-window
-      case that cuts W-phases down to single tokens.
-
-    Payload bits are gathered per class from the packed bytes and the
-    per-value XORs folded once at the end with one bitwise_xor.accumulate.
-    If phases stop making progress (adversarial '11'/'10' alternation) the
-    remainder falls to a byte-windowed scalar walk (one 11-byte int read
-    per token — still ~10x the bit-list oracle in tests/).
+    One bit-serial walk, as in the Gorilla paper: a code's width is known
+    once its control bits are read, so each step is one 88-bit window read
+    at the walk's bit (the longest code, '11' + 5 + 6 + 64 bits, fits at
+    any bit offset).  A step takes one '10' or '11' code, or the run of
+    '0' codes the window opens with (at most 81 of them).  The XORs are
+    folded once at the end; scratch is the O(count) output and one copy of
+    the stream's bytes.
     """
-    V = int(val_bit_len)
-    n_tok = count - 1
-    xors = np.zeros(n_tok, dtype=np.uint64)
-    region = vb[:V]
-    pad2 = np.concatenate([region, np.zeros(2, dtype=np.uint8)])
-    is0_all = pad2[:V] == 0
-    is10_all = (pad2[:V] == 1) & (pad2[1 : V + 1] == 0)
-    pos, i = 64, 0
+    data = datab[base >> 3 : (base + V + 7) >> 3].tobytes() + bytes(11)
+    p = base & 7
+    end = p + V
+    p += 64
     w, trail = 64, 0  # initial window: lead 0, trail 0 (decoder state)
-    J_self = mlen_self = None
-    K = 256
-    weak = 0
-
-    def _truncated():
-        raise ValueError("gorilla wire: value bitstream truncated")
-
-    while i < n_tok:
-        if pos >= V or (not is0_all[pos] and pos + 1 >= V):
-            _truncated()
-        remaining = n_tok - i
-        if weak >= 6:
-            # scalar floor: byte-windowed walk over the packed bytes
-            data_bytes = datab.tobytes()
-            p = base + pos
-            end_abs = base + V
-            M88 = (1 << 88) - 1
-            while i < n_tok:
-                byte0 = p >> 3
-                chunk = data_bytes[byte0 : byte0 + 11]
-                win = int.from_bytes(chunk + b"\0" * (11 - len(chunk)), "big")
-                win = (win << (p & 7)) & M88
-                if not (win >> 87):  # '0'
-                    if p + 1 > end_abs:
-                        _truncated()
-                    xor = 0
-                    p += 1
-                elif not ((win >> 86) & 1):  # '10' reuse window
-                    if p + 2 + w > end_abs:
-                        _truncated()
-                    xor = ((win >> (86 - w)) & ((1 << w) - 1)) << trail
-                    p += 2 + w
-                else:  # '11' new window
-                    lead = (win >> 81) & 31
-                    ml = ((win >> 75) & 63) + 1
-                    tr = 64 - lead - ml
-                    if tr < 0:
-                        raise ValueError("invalid trailing zeros calculation")
-                    if p + 13 + ml > end_abs:
-                        _truncated()
-                    xor = ((win >> (75 - ml)) & ((1 << ml) - 1)) << tr
-                    w, trail = ml, tr
-                    p += 13 + ml
-                xors[i] = np.uint64(xor)
-                i += 1
-            break
-        if not (is0_all[pos] or is10_all[pos]):
-            # ---- S-phase: '0'/'11' run, '10' is a barrier ----
-            if J_self is None:
-                idx = np.arange(V, dtype=np.int64)
-                mlen_self = (
-                    bitio.gather(datab, base + idx + 7, 6).astype(np.int64) + 1
-                )
-                BAR = V + 1
-                Js = np.where(
-                    is10_all,
-                    np.int64(BAR),
-                    np.minimum(np.where(is0_all, idx + 1, idx + 13 + mlen_self), V),
-                )
-                J_self = np.concatenate([Js, np.array([V, BAR], dtype=np.int64)])
-            P = _chain_positions(J_self, pos, remaining + 1)
-            inside = P[:remaining] < V
-            stop_at = np.flatnonzero(~inside | is10_all[np.minimum(P[:remaining], V - 1)])
-            consumed = int(stop_at[0]) if stop_at.size else remaining
-            if consumed == 0:
-                _truncated()  # defensive: pos itself classified '11'
-            Pk = P[:consumed]
-            # true-width end check for the last token (J was end-clipped)
-            last = int(Pk[-1])
-            lw = 1 if is0_all[last] else 13 + int(mlen_self[last])
-            if last + lw > V:
-                _truncated()
-            if consumed < remaining and P[consumed] >= V:
-                _truncated()
-            m11 = ~is0_all[Pk]
-            P11 = Pk[m11]
-            if P11.size:
-                ml = mlen_self[P11]
-                lead = bitio.gather(datab, base + P11 + 2, 5).astype(np.int64)
-                tr = 64 - lead - ml
-                if (tr < 0).any():
-                    raise ValueError("invalid trailing zeros calculation")
-                pay = _gather_var_bits(datab, base + P11 + 13, ml)
-                xb = np.zeros(consumed, dtype=np.uint64)
-                xb[m11] = pay << tr.astype(np.uint64)
-                xors[i : i + consumed] = xb
-                w, trail = int(ml[-1]), int(tr[-1])
-            i += consumed
-            pos = last + lw
-            weak = weak + 1 if consumed < 8 else 0
-            continue
-        # ---- W-phase: fixed window w ----
-        m = int(min(remaining, K))
-        S_len = int(min(V - pos, 66 + 78 * m))
-        i0 = is0_all[pos : pos + S_len]
-        i10 = is10_all[pos : pos + S_len]
-        is11_sl = ~(i0 | i10)
-        w11 = np.flatnonzero(is11_sl)
-        width_sl = np.ones(S_len, dtype=np.int64)
-        width_sl[i10] = 2 + w
-        ml_map = None
-        if w11.size:
-            ml_map = np.zeros(S_len, dtype=np.int64)
-            ml_map[w11] = (
-                bitio.gather(datab, base + pos + w11 + 7, 6).astype(np.int64) + 1
-            )
-            width_sl[w11] = 13 + ml_map[w11]
-        idx = np.arange(S_len, dtype=np.int64)
-        Jl = np.concatenate(
-            [np.minimum(idx + width_sl, S_len), np.array([S_len], dtype=np.int64)]
-        )
-        P = _chain_positions(Jl, 0, m + 1)
-        Pm = P[:m]
-        # keep tokens fully inside the slice (true, unclipped width)
-        ok = (Pm < S_len) & (Pm + width_sl[np.minimum(Pm, S_len - 1)] <= S_len)
-        bad = np.flatnonzero(~ok)
-        kept = int(bad[0]) if bad.size else m
-        if kept == 0:
-            _truncated()  # token at pos overruns the stream
-        Pk = Pm[:kept]
-        # cut at the first '11' that changes the window length
-        k11 = np.flatnonzero(is11_sl[Pk])
-        consumed = kept
-        cut = -1
-        if k11.size and ml_map is not None:
-            chg = np.flatnonzero(ml_map[Pk[k11]] != w)
-            if chg.size:
-                cut = int(k11[chg[0]])
-                consumed = cut + 1
-        Pk = Pk[:consumed]
-        x = np.zeros(consumed, dtype=np.uint64)
-        sel11 = is11_sl[Pk]
-        tr_tok = np.zeros(consumed, dtype=np.int64)
-        if sel11.any():
-            P11 = Pk[sel11]
-            ml = ml_map[P11]
-            lead = bitio.gather(datab, base + pos + P11 + 2, 5).astype(np.int64)
-            tr11 = 64 - lead - ml
-            if (tr11 < 0).any():
+    xors = np.zeros(count, dtype=np.uint64)
+    xors[0] = first_bits
+    i = 1
+    while i < count:
+        win = (int.from_bytes(data[p >> 3 : (p >> 3) + 11], "big") << (p & 7)) & _MASK88
+        if not win >> 87:  # '0' codes, up to the window's first set bit
+            z = min(88 - win.bit_length(), 81, count - i)
+            p += z
+            i += z
+        elif not (win >> 86) & 1:  # '10' reuse window
+            xors[i] = ((win >> (86 - w)) & ((1 << w) - 1)) << trail
+            p += 2 + w
+            i += 1
+        else:  # '11' new window
+            if p + 13 > end:
+                break
+            ml = ((win >> 75) & 63) + 1
+            tr = 64 - ((win >> 81) & 31) - ml
+            if tr < 0:
                 raise ValueError("invalid trailing zeros calculation")
-            pay = _gather_var_bits(datab, base + pos + P11 + 13, ml)
-            x[sel11] = pay << tr11.astype(np.uint64)
-            tr_tok[sel11] = tr11
-        sel10 = i10[Pk]
-        if sel10.any():
-            # trailing-shift forward-fill: '11's in this batch keep mlen==w
-            # (any change cuts the batch) but may move the window's lead
-            j11 = np.where(sel11, np.arange(consumed, dtype=np.int64), -1)
-            lastf = np.maximum.accumulate(j11)
-            tr_map = np.concatenate([np.array([trail], dtype=np.int64), tr_tok])
-            tr_ff = tr_map[lastf + 1]
-            pay = bitio.gather(datab, base + pos + Pk[sel10] + 2, w)
-            x[sel10] = pay << tr_ff[sel10].astype(np.uint64)
-        xors[i : i + consumed] = x
-        i += consumed
-        last = int(Pk[-1])
-        pos = pos + last + int(width_sl[last])
-        if cut >= 0:
-            w = int(ml_map[Pk[cut]])
-            trail = int(tr_tok[cut])
-        K = min(K * 4, 1 << 16) if consumed == m else max(64, 2 * consumed)
-        weak = weak + 1 if consumed < 8 else 0
-    out = np.empty(count, dtype=np.uint64)
-    out[0] = np.uint64(first_bits)
-    out[1:] = xors
-    return np.bitwise_xor.accumulate(out)
+            xors[i] = ((win >> (75 - ml)) & ((1 << ml) - 1)) << tr
+            w, trail = ml, tr
+            p += 13 + ml
+            i += 1
+        if p > end:
+            break
+    else:
+        return np.bitwise_xor.accumulate(xors, out=xors)
+    raise ValueError("gorilla wire: value bitstream truncated")
 
 
 def _region_bits(datab: np.ndarray, start: int, nbits: int) -> np.ndarray:
     """Bits [start, start + nbits) of the packed bytes, one uint8 per bit
-    (for the per-value decoders of non-canonical streams)."""
+    (for the Chimp/Chimp128 decoders)."""
     sh = start & 7
     return np.unpackbits(datab[start >> 3 : (start + nbits + 7) >> 3])[sh : sh + nbits]
 
@@ -1023,9 +856,18 @@ def decode_points(
         raise ValueError("gorilla wire: payload shorter than declared bit lengths")
     datab = np.frombuffer(payload, dtype=np.uint8, count=need_bytes, offset=32)
 
-    # --- timestamps ---
     if ts_bit_len < 64:
         raise ValueError("gorilla wire: timestamp stream too short")
+    if val_bit_len < 64:
+        raise ValueError("gorilla wire: value stream too short")
+    # every DoD code and every value code takes at least one bit, so the
+    # declared bit lengths bound count before any O(count) allocation
+    if count - 1 > ts_bit_len - 64:
+        raise ValueError("gorilla wire: timestamp bitstream truncated")
+    if count - 1 > val_bit_len - 64:
+        raise ValueError("gorilla wire: value bitstream truncated")
+
+    # --- timestamps ---
     first_ts = int(bitio.gather(datab, np.array([0]), 64)[0])
     first_ts = first_ts - (1 << 64) if first_ts >= (1 << 63) else first_ts  # signed read
     # ts[1:] holds the first-delta and DoD codes, then two in-place
@@ -1038,8 +880,6 @@ def decode_points(
     ts += first_ts
 
     # --- values ---
-    if val_bit_len < 64:
-        raise ValueError("gorilla wire: value stream too short")
     first_vb = int(bitio.gather(datab, np.array([ts_bit_len]), 64)[0])
     if count == 1:
         vbits = np.array([first_vb], dtype=np.uint64)
@@ -1055,11 +895,8 @@ def decode_points(
         vbits = _decode_canonical_values(datab, ts_bit_len, val_bit_len, count, first_vb)
         if vbits is None:
             # '11' codes present (non-reference writer) -> faithful
-            # batched general decoder
-            vbits = _decode_values_general(
-                _region_bits(datab, ts_bit_len, val_bit_len),
-                val_bit_len, count, first_vb, datab, ts_bit_len,
-            )
+            # general decoder, a scalar walk over the same packed bytes
+            vbits = _decode_values_general(datab, ts_bit_len, val_bit_len, count, first_vb)
     vals = np.ascontiguousarray(vbits).view(np.float64)
     vals = _vm_postprocess(vals, flags, scale_decimals)
     return ts, np.ascontiguousarray(vals, dtype=np.float64), info

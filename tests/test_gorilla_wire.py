@@ -485,26 +485,37 @@ def test_pack_fields_gather_roundtrip(fields):
         assert np.array_equal(got, vals[m]), (w, got, vals[m])
 
 
+def _decoded_count(buf: bytes) -> int:
+    """Points a (possibly corrupt) block must decode to if it decodes."""
+    header_size, outer_count = struct.unpack_from(">HI", buf, 10)
+    return struct.unpack_from(">I", buf, header_size)[0] if outer_count else 0
+
+
 def test_decode_corruption_always_fails_cleanly():
     # random byte corruption must surface as ValueError (or a flagged
-    # tolerant decode) — never IndexError/struct.error out of the kernels
+    # tolerant decode of the block's point count) — never
+    # IndexError/struct.error out of the kernels.  The second block comes
+    # from a windowing writer: its '11' codes take the general decoder.
     rng = np.random.default_rng(0)
     ts = np.arange(500, dtype=np.int64) * 60
     vals = rng.normal(0, 1, 500)
-    base = bytearray(gw.encode_points(ts, vals))
-    for trial in range(400):
-        buf = bytearray(base)
-        for _ in range(int(rng.integers(1, 4))):
-            buf[int(rng.integers(0, len(buf)))] = int(rng.integers(0, 256))
-        try:
-            _, _, info = gw.decode_points(bytes(buf), strict=False)
-        except ValueError:
-            continue
-    for cut in range(0, len(base), 53):
-        try:
-            gw.decode_points(bytes(base[:cut]), strict=False)
-        except ValueError:
-            continue
+    fv, fw, expect = _windowed_stream(np.random.default_rng(1), 500)
+    foreign = _foreign_block(int(expect[0]), fv, fw, 500)
+    for base in (gw.encode_points(ts, vals), foreign):
+        for trial in range(400):
+            buf = bytearray(base)
+            for _ in range(int(rng.integers(1, 4))):
+                buf[int(rng.integers(0, len(buf)))] = int(rng.integers(0, 256))
+            try:
+                got_ts, got_v, _ = gw.decode_points(bytes(buf), strict=False)
+            except ValueError:
+                continue
+            assert got_ts.size == got_v.size == _decoded_count(bytes(buf))
+        for cut in range(0, len(base), 53):
+            try:
+                gw.decode_points(base[:cut], strict=False)
+            except ValueError:
+                continue
 
 
 def test_vm_rejects_non_finite():
@@ -1051,7 +1062,7 @@ def test_spark_wire_chimp_roundtrip(spark):
 
 
 # ---------------------------------------------------------------------------
-# General ('11'-window) XOR value decoder — batched vs sequential oracle
+# General ('11'-window) XOR value decoder — scalar walk vs sequential oracle
 # ---------------------------------------------------------------------------
 
 
@@ -1131,7 +1142,7 @@ def _run_general(bw, count):
     first = int(
         bitio.gather(datab, np.array([0]), 64)[0]
     )
-    got = gw._decode_values_general(bits[:V], V, count, first, datab, 0)
+    got = gw._decode_values_general(datab, 0, V, count, first)
     oracle = _decode_values_sequential(bits[:V], count, first)
     return got, oracle
 
@@ -1156,7 +1167,60 @@ def _random_tokens(rng, n, p0=0.3, p10=0.4, mlen_pool=None):
     return toks
 
 
-@pytest.mark.parametrize("seed", range(8))
+def _windowed_stream(rng, n, p=(0.3, 0.4, 0.3)):
+    """Value-stream fields of ``n`` points from a windowing writer, built
+    vectorized: random '0' / '10' / '11' codes with probabilities ``p``
+    after the first value -> (field vals, field widths, expected value
+    bits)."""
+    first = 0x3FF0000000000000
+    kind = rng.choice(3, n - 1, p=p)  # 0: '0', 1: '10', 2: '11'
+    ml = rng.integers(1, 65, n - 1)
+    lead = rng.integers(0, np.minimum(32, 65 - ml))
+    # a code's window is set by the last '11' at or before it (initially
+    # lead 0, trail 0)
+    last = np.maximum.accumulate(np.where(kind == 2, np.arange(n - 1), -1))
+    at = np.maximum(last, 0)
+    w = np.where(last >= 0, ml[at], 64)
+    trail = np.where(last >= 0, 64 - lead[at] - ml[at], 0)
+    pay = rng.integers(0, 1 << 64, n - 1, dtype=np.uint64, endpoint=False)
+    pay >>= (64 - w).astype(np.uint64)
+    pay[kind == 0] = 0
+    hdr_v = np.select([kind == 0, kind == 1], [0, 0b10], (0b11 << 11) | (lead << 6) | (ml - 1))
+    hdr_w = np.select([kind == 0, kind == 1], [1, 2], 13)
+    fv, fw = gw._interleave_fields(hdr_v.astype(np.uint64), hdr_w, pay, np.where(kind == 0, 0, w))
+    xors = np.concatenate((np.array([first], dtype=np.uint64), pay << trail.astype(np.uint64)))
+    return fv, fw, np.bitwise_xor.accumulate(xors)
+
+
+def _foreign_block(first, vals, widths, n) -> bytes:
+    """A full wire block (v1 header, crc set) of ``n`` points 60 s apart
+    whose value stream is the value bits ``first``, then the fields
+    (vals, widths)."""
+    packer = bitio.FieldPacker()
+    ts = 1000 + 60 * np.arange(n, dtype=np.int64)
+    packer.add(ts.view(np.uint64)[:1], gw._W64)
+    packer.add(*gw._dod_fields(np.diff(ts)[:1]))
+    packer.add(*gw._dod_fields(np.diff(ts, 2)))
+    ts_bits = packer.nbits
+    packer.add(np.array([first], dtype=np.uint64), gw._W64)
+    packer.add(vals, widths)
+    val_bits = packer.nbits - ts_bits
+    payload = gw._INNER.pack(n, 1000, first, 60, ts_bits, val_bits) + packer.finish()
+    outer = gw._OUTER.pack(
+        gw.MAGIC, 1, 80, n, len(payload), 16 * n, zlib.crc32(payload), 1000, 60, first,
+        ts_bits, val_bits, 8 * len(payload), len(payload) / (16 * n), 0, 0,
+    )
+    return outer + payload
+
+
+# block-sized (the reference's 5000-point chunks) streams of long '0' runs
+_BLOCK_SHAPES = [dict(p0=0.8, p10=0.15), dict(p0=0.95, p10=0.04)]
+
+
+@pytest.mark.parametrize(
+    "seed",
+    [*range(8), pytest.param(8, id="block_p0_0.8"), pytest.param(9, id="block_p0_0.95")],
+)
 def test_general_decoder_fuzz_parity(seed):
     rng = np.random.default_rng(seed)
     shapes = [
@@ -1166,8 +1230,11 @@ def test_general_decoder_fuzz_parity(seed):
         dict(p0=0.02, p10=0.9),  # long '10' runs
         dict(p0=0.0, p10=0.0, mlen_pool=[20, 21]),  # near-alternating mlens
     ]
-    sh = shapes[seed % len(shapes)]
-    n = int(rng.integers(1, 400))
+    if seed < 8:
+        sh = shapes[seed % len(shapes)]
+        n = int(rng.integers(1, 400))
+    else:
+        sh, n = _BLOCK_SHAPES[seed - 8], 4999
     toks = _random_tokens(rng, n, **sh)
     first = int(rng.integers(0, 1 << 63))
     bw, expect = _mk_value_stream(first, toks)
@@ -1177,9 +1244,8 @@ def test_general_decoder_fuzz_parity(seed):
 
 
 def test_general_decoder_scalar_floor_parity():
-    # strict ['11' toggling mlen, '10'] alternation: every phase consumes
-    # 1-2 tokens -> the weak-phase counter trips the byte-windowed scalar
-    # floor, which must stay bit-exact
+    # strict ['11' toggling mlen, '10'] alternation: every '10' code reads
+    # the window the '11' before it set, at a width that changes each time
     toks = []
     for k in range(600):
         mlen = 20 if k % 2 == 0 else 21
@@ -1201,7 +1267,7 @@ def test_general_decoder_truncation_raises():
     bits = np.unpackbits(datab)
     V = len(bw.bits)
     with pytest.raises(ValueError, match="truncated"):
-        gw._decode_values_general(bits[:V], V, 4, 0x4045000000000000, datab, 0)
+        gw._decode_values_general(datab, 0, V, 4, 0x4045000000000000)
     with pytest.raises(ValueError):
         _decode_values_sequential(bits[:V], 4, 0x4045000000000000)
 
@@ -1235,6 +1301,18 @@ def test_general_decoder_full_block_foreign_stream():
     bw, expect = _mk_value_stream(int(bits_v[0]), toks)
     got, oracle = _run_general(bw, len(toks) + 1)
     np.testing.assert_array_equal(got, oracle)
+
+
+def test_general_decoder_long_zero_runs_full_block():
+    # a foreign block whose '0' runs are long: decoded exactly, crc intact
+    toks = _random_tokens(np.random.default_rng(5), 2000, p0=0.8, p10=0.15)
+    first, n = 0x3FF0000000000000, len(toks) + 1
+    bw, expect = _mk_value_stream(first, toks)
+    bits = np.array(bw.bits[64:], dtype=np.uint64)  # one 1-bit field each
+    buf = _foreign_block(first, bits, np.ones(bits.size, dtype=np.int64), n)
+    ts, vals, _ = gw.decode_points(buf, strict=True)
+    np.testing.assert_array_equal(vals.view(np.uint64), np.array(expect, dtype=np.uint64))
+    np.testing.assert_array_equal(ts, 1000 + 60 * np.arange(n))
 
 
 # ---------------------------------------------------------------------------
@@ -1505,3 +1583,44 @@ def test_wire_kernels_scratch_is_bounded(irregular):
     for op, small, big in zip(("encode", "decode"), peaks[65536], peaks[4 * 65536]):
         assert small <= 8 << 20, (op, small)
         assert big <= 4.5 * small, (op, small, big)
+
+
+def test_foreign_stream_scratch_is_bounded():
+    # a 65,536-point block with '11' window codes (the general decoder)
+    # decodes in <= 8 MiB of traced allocations, and 4x the points in
+    # <= 4.5x that
+    peaks = {}
+    for n in (65536, 4 * 65536):
+        fv, fw, expect = _windowed_stream(np.random.default_rng(2), n)
+        buf = _foreign_block(int(expect[0]), fv, fw, n)
+        del fv, fw
+        got = []
+        peaks[n] = _traced_peak(lambda: got.append(gw.decode_points(buf)[1]))
+        np.testing.assert_array_equal(got[0].view(np.uint64), expect)
+    assert peaks[65536] <= 8 << 20, peaks
+    assert peaks[4 * 65536] <= 4.5 * peaks[65536], peaks
+
+
+def test_decode_points_count_bound_is_bit_lengths():
+    # every DoD code and every value code takes at least one bit, so a
+    # block's bit lengths bound its count before anything is allocated
+    # per point.  n equal points are n-1 one-bit codes in each stream (the
+    # bound, accepted); values equal and timestamps 60 s apart leave the
+    # timestamp stream 8 bits of slack, so only the value bound refuses
+    # one point more.  MAX_COUNT points would take 2 GiB of outputs.
+    n = 4
+    for ts, stream in ((np.full(n, 1000), "timestamp"), (_regular(n), "value")):
+        buf = gw.encode_points(ts, np.full(n, 2.5))
+        ts_bits, val_bits = gw._INNER.unpack_from(buf, 80)[4:]
+        assert val_bits - 64 == n - 1
+        assert ts_bits - 64 == (n - 1 if stream == "timestamp" else n + 7)
+        got_ts, got_v, _ = gw.decode_points(buf)
+        np.testing.assert_array_equal(got_ts, ts)
+        for count, msg in ((n + 1, stream), (bitio.MAX_COUNT, "timestamp")):
+            bad = _with_inner_count(buf, count)
+
+            def decode():
+                with pytest.raises(ValueError, match=f"{msg} bitstream truncated"):
+                    gw.decode_points(bad)
+
+            assert _traced_peak(decode) < 1 << 20, (stream, count)
