@@ -227,10 +227,12 @@ class CheckpointedEncode:
             if self.token_cols
             else F.sum("n_tokens").alias("n_tokens")
         )
+        # the stored per-buffer crcs (zlib.crc32 at encode): the commit
+        # never reads a written buffer back
         crc_agg = (
             F.sum(F.expr("aggregate(crc32_bufs, 0L, (a, x) -> a + x)")).alias("crc_sum")
             if self.token_cols
-            else F.sum(F.crc32(F.col("buffer"))).alias("crc_sum")
+            else F.sum("crc32_buf").alias("crc_sum")
         )
         man = (
             out.groupBy("part_id")

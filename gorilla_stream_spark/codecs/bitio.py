@@ -9,7 +9,10 @@ the reference (``gorilla_nif.cpp:69-81``).  Fixed-width sections go through
 :func:`pack`/:func:`unpack`, variable-width fields at arbitrary bit offsets
 (the wire format) through :class:`FieldPacker`/:func:`gather`, and classed
 streams (dod, forc, gxor, xorlag) through :func:`pack_classes`/
-:func:`unpack_classes`.
+:func:`unpack_classes`.  Decoders whose next field width depends on the
+field just read (the wire format's value streams) walk the packed bytes
+with :func:`next_set_bit` and window reads of their own, not a per-bit
+copy of the stream.
 """
 
 from __future__ import annotations
@@ -30,7 +33,6 @@ __all__ = [
     "gather",
     "next_set_bit",
     "sign_extend",
-    "BitReader",
     "pack_classes",
     "unpack_classes",
     "zigzag",
@@ -327,24 +329,6 @@ def sign_extend(v: np.ndarray, width: int) -> np.ndarray:
     """Two's-complement interpret ``width``-bit values as int64."""
     sign = np.uint64(1) << np.uint64(width - 1)
     return (v.astype(np.uint64) ^ sign).view(np.int64) - np.int64(1 << (width - 1))
-
-
-class BitReader:
-    """Scalar MSB-first cursor over an unpacked bit array, for decoders
-    whose next field width depends on the value just read.  ``read`` past
-    the end raises ``ValueError(truncated)``."""
-
-    def __init__(self, bits: np.ndarray, pos: int, truncated: str):
-        self._digits = (bits.astype(np.uint8) + 48).tobytes()  # b"0"/b"1" per bit
-        self.pos = pos
-        self._truncated = truncated
-
-    def read(self, w: int) -> int:
-        pos = self.pos
-        if pos + w > len(self._digits):
-            raise ValueError(self._truncated)
-        self.pos = pos + w
-        return int(self._digits[pos : pos + w] or b"0", 2)
 
 
 def pack_classes(cls: np.ndarray, sections) -> bytes:

@@ -90,13 +90,6 @@ def _greedy_match_positions(match: np.ndarray) -> np.ndarray:
     return pos[taken]
 
 
-def _greedy_matches(match: np.ndarray) -> np.ndarray:
-    """Boolean mask of greedily-selected non-overlapping match positions."""
-    out = np.zeros(match.size, dtype=bool)
-    out[_greedy_match_positions(match)] = True
-    return out
-
-
 def fsst_encode(a: np.ndarray, table: np.ndarray | None = None, passes: int = 2) -> bytes:
     """Encode with a pair table (trained on the block itself if not given).
 

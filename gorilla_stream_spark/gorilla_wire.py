@@ -29,8 +29,8 @@ Two reference quirks are reproduced deliberately (bug-for-bug wire parity):
    (``value_compression.ex:82-118``).  Export emits exactly that; import
    fast-paths it and falls back to the faithful general decoder (window
    updates, '11' codes), one bit-serial walk over the packed bytes, for
-   streams from other writers.  Only the Chimp/Chimp128 decoders unpack
-   their value stream to one byte per bit.
+   streams from other writers.  The Chimp/Chimp128 decoder walks the
+   same packed bytes.
 2. The DoD bucket upper bounds (+64, +256, +2048) don't fit their signed
    payload widths: the reference encodes the low bits and its decoder
    sign-extends, so a delta-of-delta of exactly +64 round-trips as -64
@@ -74,6 +74,7 @@ _U64 = np.uint64
 _MASK64 = (1 << 64) - 1
 _W64 = np.array([64], dtype=np.int64)
 _MASK88 = (1 << 88) - 1
+_MASK96 = (1 << 96) - 1
 
 # outer header v1: magic, version, header_size, count, compressed_size,
 # original_size, checksum, first_timestamp, first_delta(signed),
@@ -253,7 +254,7 @@ _CHIMP_ROUND = np.array(
     [0] * 8 + [8] * 4 + [12] * 4 + [16] * 2 + [18] * 2 + [20] * 2 + [22] * 2 + [24] * 41,
     np.int64,
 )
-_CHIMP_DECODE = np.array([0, 8, 12, 16, 18, 20, 22, 24], np.int64)
+_CHIMP_DECODE = (0, 8, 12, 16, 18, 20, 22, 24)
 _CHIMP128_N = 128
 _CHIMP128_LOG2N = 7
 _CHIMP128_THRESHOLD = 13  # 6 + log2(128)
@@ -390,73 +391,68 @@ def _chimp128_fields(vb: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return _interleave_fields(hdr_v, hdr_w, pay_v, pay_w)
 
 
-def _decode_values_chimp(bits: np.ndarray, count: int, first_bits: int) -> np.ndarray:
-    """Faithful Chimp value decoder (gorilla_nif.cpp:522-575)."""
-    out = np.empty(count, dtype=np.uint64)
-    out[0] = first_bits
-    prev = int(first_bits)
-    stored_leading = 65
-    read = bitio.BitReader(bits, 64, "gorilla wire: chimp value bitstream truncated").read
-
-    for i in range(1, count):
-        flag = read(2)
-        if flag == 0b00:
-            stored_leading = 65
-        elif flag == 0b01:
-            leading = int(_CHIMP_DECODE[read(3)])
-            significant = read(6) or 64
-            trailing = max(64 - leading - significant, 0)
-            prev ^= read(significant) << trailing
-            stored_leading = 65
-        elif flag == 0b10:
-            if stored_leading > 64:
-                raise ValueError("gorilla wire: chimp flag 10 without context")
-            prev ^= read(64 - stored_leading)
-        else:
-            leading = int(_CHIMP_DECODE[read(3)])
-            prev ^= read(64 - leading)
-            stored_leading = leading
-        out[i] = prev
-    return out
-
-
-def _decode_values_chimp128(
-    bits: np.ndarray, count: int, first_bits: int
+def _decode_values_chimp(
+    datab: np.ndarray, base: int, V: int, count: int, first_bits: int, log2n: int, name: str
 ) -> np.ndarray:
-    """Faithful Chimp128 value decoder (gorilla_nif.cpp:716-777)."""
+    """Faithful Chimp_N value decoder (gorilla_nif.cpp:522-575 for Chimp,
+    :716-777 for Chimp128) over the ``V`` bits from bit ``base`` of the
+    packed bytes.  Chimp128 keeps a ring of the previous 2**``log2n``
+    values (``[first, 0, 0, ...]`` at the start, as in the NIF); Chimp is
+    the one-value ring (``log2n`` 0): its candidate is always the previous
+    value and its ring indexes take no bits.
+
+    Each step is one 96-bit window read at the walk's bit (the longest
+    code, '01' + 7 + 3 + 6 + 64 bits, fits at any bit offset) and takes one
+    code, or for Chimp the run of '00' repeats the window opens with (at
+    most 44).  Scratch is the O(count) output and one copy of the stream's
+    bytes.
+    """
+    truncated = f"gorilla wire: {name} value bitstream truncated"
+    data = datab[base >> 3 : (base + V + 7) >> 3].tobytes() + bytes(12)
+    p, end = (base & 7) + 64, (base & 7) + V
+    nmask = (1 << log2n) - 1
+    ring = [0] * (nmask + 1)
+    ring[0] = prev = first_bits
+    stored = 65  # stored leading zeros; > 64: no context for a '10' code
     out = np.empty(count, dtype=np.uint64)
     out[0] = first_bits
-    ring = [0] * _CHIMP128_N
-    ring[0] = int(first_bits)
-    ring_pos = 1
-    stored_val = int(first_bits)
-    stored_leading = 65
-    read = bitio.BitReader(bits, 64, "gorilla wire: chimp128 value bitstream truncated").read
-
-    for i in range(1, count):
-        flag = read(2)
-        if flag == 0b00:
-            new_bits = ring[read(_CHIMP128_LOG2N)]
-            stored_leading = 65
-        elif flag == 0b01:
-            idx = read(_CHIMP128_LOG2N)
-            leading = int(_CHIMP_DECODE[read(3)])
-            significant = read(6) or 64
-            trailing = max(64 - leading - significant, 0)
-            new_bits = ring[idx] ^ (read(significant) << trailing)
-            stored_leading = 65
-        elif flag == 0b10:
-            if stored_leading > 64:
-                raise ValueError("gorilla wire: chimp128 flag 10 without context")
-            new_bits = stored_val ^ read(64 - stored_leading)
-        else:
-            leading = int(_CHIMP_DECODE[read(3)])
-            new_bits = stored_val ^ read(64 - leading)
-            stored_leading = leading
-        out[i] = new_bits
-        ring[ring_pos % _CHIMP128_N] = new_bits
-        ring_pos += 1
-        stored_val = new_bits
+    i = 1
+    while i < count:
+        if p + 2 > end:
+            raise ValueError(truncated)
+        win = (int.from_bytes(data[p >> 3 : (p >> 3) + 12], "big") << (p & 7)) & _MASK96
+        flag = win >> 94
+        if flag == 0 and not log2n:  # Chimp: '00' repeats, up to the first set bit
+            z = min((96 - win.bit_length()) >> 1, 44, (end - p) >> 1, count - i)
+            out[i : i + z] = prev
+            stored = 65
+            p += 2 * z
+            i += z
+            continue
+        if flag < 2:  # a ring value; '01' XORs a payload with trailing zeros
+            new = ring[(win >> (94 - log2n)) & nmask]
+            stored = 65
+            if flag:
+                q = 85 - log2n
+                sig = (win >> q) & 63 or 64
+                trail = max(64 - _CHIMP_DECODE[(win >> (q + 6)) & 7] - sig, 0)
+                new ^= ((win >> (q - sig)) & ((1 << sig) - 1)) << trail
+                p += 9 + sig
+            p += 2 + log2n
+        else:  # the previous value XOR 64 - stored bits; '11' first sets stored
+            hdr = 2
+            if flag == 3:
+                stored = _CHIMP_DECODE[(win >> 91) & 7]
+                hdr = 5
+            elif stored > 64:
+                raise ValueError(f"gorilla wire: {name} flag 10 without context")
+            w = 64 - stored
+            new = prev ^ ((win >> (96 - hdr - w)) & ((1 << w) - 1))
+            p += hdr + w
+        if p > end:
+            raise ValueError(truncated)
+        out[i] = ring[i & nmask] = prev = new
+        i += 1
     return out
 
 
@@ -682,13 +678,6 @@ def _decode_values_general(
     raise ValueError("gorilla wire: value bitstream truncated")
 
 
-def _region_bits(datab: np.ndarray, start: int, nbits: int) -> np.ndarray:
-    """Bits [start, start + nbits) of the packed bytes, one uint8 per bit
-    (for the Chimp/Chimp128 decoders)."""
-    sh = start & 7
-    return np.unpackbits(datab[start >> 3 : (start + nbits + 7) >> 3])[sh : sh + nbits]
-
-
 _RUN_CAP = SCAN_WINDOW // 66  # '10' codes one run probe may read
 
 
@@ -883,13 +872,13 @@ def decode_points(
     first_vb = int(bitio.gather(datab, np.array([ts_bit_len]), 64)[0])
     if count == 1:
         vbits = np.array([first_vb], dtype=np.uint64)
-    elif flags & _FLAG_CHIMP128:
-        # NIF decoder checks 0x8 before 0x4 (gorilla_nif.cpp:1417-1424)
-        vbits = _decode_values_chimp128(
-            _region_bits(datab, ts_bit_len, val_bit_len), count, first_vb
+    elif flags & (_FLAG_CHIMP | _FLAG_CHIMP128):
+        # NIF decoder checks 0x8 before 0x4 (gorilla_nif.cpp:1417-1424);
+        # Chimp is Chimp_N with N = 1
+        log2n = _CHIMP128_LOG2N if flags & _FLAG_CHIMP128 else 0
+        vbits = _decode_values_chimp(
+            datab, ts_bit_len, val_bit_len, count, first_vb, log2n, info["algorithm"]
         )
-    elif flags & _FLAG_CHIMP:
-        vbits = _decode_values_chimp(_region_bits(datab, ts_bit_len, val_bit_len), count, first_vb)
     else:
         # fast path: reference-canonical '0'/'10' stream (see module doc)
         vbits = _decode_canonical_values(datab, ts_bit_len, val_bit_len, count, first_vb)

@@ -19,11 +19,12 @@ count/bounds and cannot prune on content):
   bloom probes as PURE JVM expressions over the index (``shiftright`` +
   bit-mask on the ``array<long>`` words — no Python, no decode), then
   broadcast-semi-joins the surviving block ids against the encoded table.
-* ``find_docs_with_token`` — decodes ONLY the surviving blocks and counts
-  per-doc occurrences vectorized (``flatnonzero`` + ``searchsorted`` into
-  the doc-offset array).  Bloom false positives cost a wasted block decode,
-  never a wrong answer; false negatives cannot happen (every distinct token
-  sets its bits).
+* ``find_docs_with_phrase`` — decodes ONLY the blocks that survive every
+  phrase token's prune and counts per-doc occurrences vectorized
+  (``flatnonzero`` + ``searchsorted`` into the doc-offset array);
+  ``find_docs_with_token`` is the one-token phrase.  Bloom false positives
+  cost a wasted block decode, never a wrong answer; false negatives cannot
+  happen (every distinct token sets its bits).
 
 Scale design: the index build is a map-only pass (no shuffle); the prune is
 an index-only JVM scan; the search shuffles nothing but the final
@@ -230,6 +231,21 @@ def _prune_with(enc_df: DataFrame, cand: DataFrame) -> DataFrame:
     return enc_df.join(F.broadcast(cand), "block_id", "inner")
 
 
+def _prune_for_tokens(enc_df: DataFrame, index_df: DataFrame, tokens: list[int]) -> DataFrame:
+    """Encoded table restricted to blocks that MAY contain every one of
+    ``tokens``: the conjunction of each distinct token's zone-map + bloom
+    conditions (OR'd over the index's parameter groups)."""
+    groups = _index_params(index_df)
+    cond = None
+    for t in sorted(set(tokens)):
+        tc = None
+        for bloom_words, k in groups:
+            c = _candidate_filter(t, bloom_words, k)
+            tc = c if tc is None else (tc | c)
+        cond = tc if cond is None else (cond & tc)
+    return _prune_with(enc_df, _candidate_ids(index_df, cond))
+
+
 def prune_blocks_for_token(
     enc_df: DataFrame, index_df: DataFrame, token: int
 ) -> DataFrame:
@@ -238,11 +254,7 @@ def prune_blocks_for_token(
     The index scan is JVM-only; the surviving ids prune the encoded table
     via literal-IN pushdown (selective case — reaches the parquet row-group
     stats) or a broadcast semi-join (large candidate sets)."""
-    cond = None
-    for bloom_words, k in _index_params(index_df):
-        c = _candidate_filter(int(token), bloom_words, k)
-        cond = c if cond is None else (cond | c)
-    return _prune_with(enc_df, _candidate_ids(index_df, cond))
+    return _prune_for_tokens(enc_df, index_df, [int(token)])
 
 
 def find_docs_with_token(
@@ -254,42 +266,13 @@ def find_docs_with_token(
 ) -> DataFrame:
     """Documents containing ``token``: ``(doc_id, n_hits)`` — exact.
 
-    Decodes only index-surviving blocks; per-doc occurrence counting is one
-    ``flatnonzero`` + ``searchsorted`` against the block's doc offsets.
+    The one-token phrase: decodes only index-surviving blocks and counts
+    per-doc occurrences with one ``flatnonzero`` + ``searchsorted`` against
+    the block's doc offsets (:func:`find_docs_with_phrase`).
     """
-    import pyarrow as pa
-
-    pruned = prune_blocks_for_token(enc_df, index_df, int(token))
-
-    def fn(batches: Iterator) -> Iterator:
-        register_container_dict(container_dict)
-        tok = np.int64(int(token))
-        for rb in batches:
-            names = rb.schema.names
-            col = {n: rb.column(i) for i, n in enumerate(names)}
-            for i in range(rb.num_rows):
-                flat, lens = _decode_docs_checked(col, i, strict)
-                hits = np.flatnonzero(flat == tok)
-                if hits.size == 0:
-                    continue  # bloom false positive: wasted decode, no rows
-                ends = np.cumsum(lens)
-                doc_idx = np.searchsorted(ends, hits, side="right")
-                uniq_docs, n_hits = np.unique(doc_idx, return_counts=True)
-                ids = col["doc_ids"][i].values.take(
-                    pa.array(uniq_docs.astype(np.int64))
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        ids.cast(pa.string()),
-                        pa.array(n_hits.astype(np.int64), type=pa.int64()),
-                    ],
-                    names=["doc_id", "n_hits"],
-                )
-
-    needed = ["block_id", "doc_ids", "doc_lens", "crc32_raw", "buffer"]
-    if strict and "crc32_buf" in enc_df.columns:
-        needed.insert(-1, "crc32_buf")
-    return pruned.select(*needed).mapInArrow(fn, "doc_id string, n_hits long")
+    return find_docs_with_phrase(
+        enc_df, index_df, [int(token)], strict=strict, container_dict=container_dict
+    )
 
 
 def find_docs_with_phrase(
@@ -310,28 +293,15 @@ def find_docs_with_phrase(
     position-scan definition DuckDB's ``substr`` oracle reproduces), and a
     match never crosses a document boundary.
 
-    Output ``(doc_id, n_hits)`` — exact, like :func:`find_docs_with_token`
-    (bloom false positives only waste a decode).
+    Output ``(doc_id, n_hits)`` — exact (bloom false positives only waste
+    a decode).
     """
     import pyarrow as pa
 
     ph = [int(t) for t in phrase]
     if not ph:
         raise ValueError("phrase must contain at least one token")
-    if len(ph) == 1:
-        return find_docs_with_token(
-            enc_df, index_df, ph[0], strict=strict, container_dict=container_dict
-        )
-
-    groups = _index_params(index_df)
-    cond = None
-    for t in sorted(set(ph)):
-        tc = None
-        for bloom_words, k in groups:
-            c = _candidate_filter(t, bloom_words, k)
-            tc = c if tc is None else (tc | c)
-        cond = tc if cond is None else (cond & tc)
-    pruned = _prune_with(enc_df, _candidate_ids(index_df, cond))
+    pruned = _prune_for_tokens(enc_df, index_df, ph)
 
     def fn(batches: Iterator) -> Iterator:
         register_container_dict(container_dict)

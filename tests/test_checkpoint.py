@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -109,6 +111,21 @@ def test_resume_manifest_scan_prunes_committed_parts(spark, toks, paths):
     # the part_id directory column, visible in the optimized plan)
     plan = man._jdf.queryExecution().toString()
     assert "part_id" in plan and ("IN (2)" in plan or "isin" in plan or "= 2" in plan or "(2)" in plan), plan[:2000]
+
+
+def test_commit_sums_stored_buffer_crcs(spark, toks, paths):
+    """The commit aggregate sums the stored ``crc32_buf`` column: it reads
+    no written buffer back, and its crc_sum is the sum of zlib.crc32 over
+    the written buffers."""
+    out, ckpt = paths
+    man = _job(out, ckpt).run(spark, toks)
+    plan = man._jdf.queryExecution().executedPlan().toString()
+    schemas = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
+    assert schemas and not any("buffer" in s for s in schemas), plan[:2000]
+    bufs = spark.read.parquet(out).select("buffer").collect()
+    assert len(bufs) > 0
+    want = sum(zlib.crc32(bytes(r["buffer"])) for r in bufs)
+    assert sum(r["crc_sum"] for r in spark.read.parquet(ckpt).collect()) == want
 
 
 def test_container_level_roundtrip_and_fingerprint(spark, toks, paths):

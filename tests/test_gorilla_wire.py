@@ -496,12 +496,16 @@ def test_decode_corruption_always_fails_cleanly():
     # tolerant decode of the block's point count) — never
     # IndexError/struct.error out of the kernels.  The second block comes
     # from a windowing writer: its '11' codes take the general decoder.
+    # The last two are Chimp and Chimp128 blocks.
     rng = np.random.default_rng(0)
     ts = np.arange(500, dtype=np.int64) * 60
     vals = rng.normal(0, 1, 500)
     fv, fw, expect = _windowed_stream(np.random.default_rng(1), 500)
     foreign = _foreign_block(int(expect[0]), fv, fw, 500)
-    for base in (gw.encode_points(ts, vals), foreign):
+    chimps = [
+        gw.encode_points(ts, np.round(vals, 2), algorithm=a) for a in ("chimp", "chimp128")
+    ]
+    for base in (gw.encode_points(ts, vals), foreign, *chimps):
         for trial in range(400):
             buf = bytearray(base)
             for _ in range(int(rng.integers(1, 4))):
@@ -812,13 +816,17 @@ def spec_chimp128_stream(vals, faithful: bool) -> _BW:
 
 
 class _BR:
-    def __init__(self, bits, pos=0):
-        self.bits, self.pos = bits, pos
+    """MSB-first reader over a list or array of bits, one field per call;
+    reading past the end raises ``ValueError(truncated)``."""
+
+    def __init__(self, bits, pos=0, truncated="bitstream truncated"):
+        self.digits = (np.asarray(bits, dtype=np.uint8) + 48).tobytes()  # b"0"/b"1" per bit
+        self.pos, self.truncated = pos, truncated
 
     def r(self, w):
-        v = 0
-        for b in self.bits[self.pos : self.pos + w]:
-            v = (v << 1) | b
+        if self.pos + w > len(self.digits):
+            raise ValueError(self.truncated)
+        v = int(self.digits[self.pos : self.pos + w] or b"0", 2)
         self.pos += w
         return v
 
@@ -1061,6 +1069,78 @@ def test_spark_wire_chimp_roundtrip(spark):
         gw.encode_timeseries_wire(df, algorithm="nope")
 
 
+def _chimp_at_offset(bits, count, algorithm, off, tail=()):
+    """Decode the Chimp/Chimp128 value stream ``bits`` (first value
+    included) placed at bit ``off`` of its bytes, behind ``off`` set bits
+    and before the bits ``tail``."""
+    w = _BW()
+    w.bits = [1] * off + list(bits) + list(tail)
+    datab = np.frombuffer(w.to_bytes(), dtype=np.uint8)
+    first = int("".join(map(str, bits[:64])), 2)
+    log2n = gw._CHIMP128_LOG2N if algorithm == "chimp128" else 0
+    got = gw._decode_values_chimp(datab, off, len(bits), count, first, log2n, algorithm)
+    return [int(v) for v in got]
+
+
+@pytest.mark.parametrize("algorithm", ["chimp", "chimp128"])
+@pytest.mark.parametrize("run", [40, 41, 42, 43, 44, 45, 89])
+def test_chimp_repeat_runs_at_every_bit_offset(algorithm, run):
+    # runs of '00' repeats around the most one window can take (44 from a
+    # 96-bit window at bit offset 7; an 88-bit window sees only 81 bits
+    # there), each ended by a flag-01 code whose second flag bit is set,
+    # from every bit offset
+    a = 3.25
+    b = struct.unpack(">d", struct.pack(">Q", _f2b(a) ^ (1 << 40)))[0]  # trail 40
+    vals = [a] * (run + 1) + [b] * (run + 1) + [a]
+    bits = (spec_chimp_stream if algorithm == "chimp" else spec_chimp128_stream)(
+        vals, faithful=False
+    ).bits
+    spec = (spec_chimp_decode if algorithm == "chimp" else spec_chimp128_decode)
+    assert spec(bits, len(vals)) == [_f2b(v) for v in vals]
+    for off in range(8):
+        assert _chimp_at_offset(bits, len(vals), algorithm, off) == [_f2b(v) for v in vals]
+
+
+@pytest.mark.parametrize("algorithm", ["chimp", "chimp128"])
+def test_chimp_widest_flag01_code_at_every_bit_offset(algorithm):
+    # '01' + ring index + leading bucket + a sig field of 0 (64 payload
+    # bits): 82 bits for Chimp128, its longest code; a ring read follows
+    log2n = gw._CHIMP128_LOG2N if algorithm == "chimp128" else 0
+    spec = spec_chimp_decode if algorithm == "chimp" else spec_chimp128_decode
+    rng = np.random.default_rng(12)
+    for lead_code in (0, 5):
+        w = _BW()
+        w.w(int(rng.integers(0, 1 << 63)), 64)
+        w.w(0b01, 2)
+        w.w(0, log2n)
+        w.w(lead_code, 3)
+        w.w(0, 6)
+        w.w(int(rng.integers(0, 1 << 63)) << 1 | 1, 64)
+        w.w(0b00, 2)
+        w.w(1, log2n)
+        want = spec(w.bits, 3)
+        for off in range(8):
+            assert _chimp_at_offset(w.bits, 3, algorithm, off, tail=[1] * 9) == want
+
+
+@pytest.mark.parametrize("algorithm", ["chimp", "chimp128"])
+def test_chimp_flag_straddling_the_stream_end_is_truncated(algorithm):
+    # a repeat, then the first bit of a '10' flag: the flag does not fit,
+    # so the stream is truncated (not a '10' without context)
+    log2n = gw._CHIMP128_LOG2N if algorithm == "chimp128" else 0
+    w = _BW()
+    w.w(_f2b(2.5), 64)
+    w.w(0b00, 2)
+    w.w(0, log2n)
+    w.w(0b1, 1)
+    spec = spec_chimp_decode if algorithm == "chimp" else spec_chimp128_decode
+    with pytest.raises(ValueError, match="truncated"):
+        spec(w.bits, 3)
+    for off in range(8):
+        with pytest.raises(ValueError, match=f"gorilla wire: {algorithm} value bitstream truncated"):
+            _chimp_at_offset(w.bits, 3, algorithm, off, tail=[0])
+
+
 # ---------------------------------------------------------------------------
 # General ('11'-window) XOR value decoder — scalar walk vs sequential oracle
 # ---------------------------------------------------------------------------
@@ -1111,7 +1191,7 @@ def _decode_values_sequential(bits: np.ndarray, count: int, first_bits: int) -> 
     out[0] = first_bits
     prev = first_bits
     lead, trail = 0, 0
-    read = bitio.BitReader(bits, 64, "gorilla wire: value bitstream truncated").read
+    read = _BR(bits, 64, "gorilla wire: value bitstream truncated").r
 
     for i in range(1, count):
         if read(1) == 0:
@@ -1380,7 +1460,7 @@ def _oracle_payload(ts, vals) -> bytes:
 
 def _decode_dod_sequential(bits, count):
     """Oracle: the DoD prefix codes read one field at a time."""
-    read = bitio.BitReader(bits, 64, "gorilla wire: timestamp bitstream truncated").read
+    read = _BR(bits, 64, "gorilla wire: timestamp bitstream truncated").r
     out = []
     for _ in range(count):
         w = 0
@@ -1598,6 +1678,22 @@ def test_foreign_stream_scratch_is_bounded():
         peaks[n] = _traced_peak(lambda: got.append(gw.decode_points(buf)[1]))
         np.testing.assert_array_equal(got[0].view(np.uint64), expect)
     assert peaks[65536] <= 8 << 20, peaks
+    assert peaks[4 * 65536] <= 4.5 * peaks[65536], peaks
+
+
+@pytest.mark.parametrize("algorithm", ["chimp", "chimp128"])
+def test_chimp_stream_scratch_is_bounded(algorithm):
+    # a 65,536-point Chimp/Chimp128 block decodes in <= 4 MiB of traced
+    # allocations, and 4x the points in <= 4.5x that: no per-bit copy of
+    # the value stream
+    peaks = {}
+    for n in (65536, 4 * 65536):
+        ts, vals = _series(n, irregular=False)
+        buf = gw.encode_points(ts, vals, algorithm=algorithm)
+        got = []
+        peaks[n] = _traced_peak(lambda: got.append(gw.decode_points(buf)[1]))
+        np.testing.assert_array_equal(got[0].view(np.uint64), vals.view(np.uint64))
+    assert peaks[65536] <= 4 << 20, peaks
     assert peaks[4 * 65536] <= 4.5 * peaks[65536], peaks
 
 
