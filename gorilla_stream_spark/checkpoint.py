@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gorilla_stream_spark.engine import DEFAULT_BLOCK_TOKENS, encode, encode_multi
-from gorilla_stream_spark.skew import salted_repartition
+from gorilla_stream_spark.skew import partition_of, salted_repartition
 
 __all__ = ["CheckpointedEncode", "encode_with_checkpoint"]
 
@@ -129,17 +129,16 @@ class CheckpointedEncode:
         """Encode ``df``; skip partitions already committed; return manifest.
 
         Resume prunes *input rows* of committed partitions before any encode
-        work: the physical partition id of ``repartition(P, xxhash64(id))``
-        is exactly ``pmod(hash(xxhash64(id)), P)`` (Spark HashPartitioning),
-        so committed partitions become a pushed-down filter on the scan.
+        work: ``salted_repartition`` routes each doc to
+        ``skew.partition_of(doc_id, P)``, so committed partitions become a
+        pushed-down filter on the scan by the same Column.
         """
         self._reject_legacy_layout(spark)
         done = set(self.committed_parts(spark))
         P = self.num_partitions
         pruned = df
         if done:
-            pid_expr = F.pmod(F.hash(F.xxhash64("doc_id")), F.lit(P))
-            pruned = df.filter(~pid_expr.isin(*sorted(done)))
+            pruned = df.filter(~partition_of("doc_id", P).isin(*sorted(done)))
         sort_cols = (["source"] if "source" in df.columns else []) + ["doc_id"]
         salted = salted_repartition(pruned, num_partitions=P, sort_cols=sort_cols)
         fp = self._config_fingerprint()
@@ -171,7 +170,7 @@ class CheckpointedEncode:
         # task's physical partition id (which shifts once rows are pruned)
         enc = enc.withColumn(
             "part_id",
-            F.pmod(F.hash(F.xxhash64(F.col("doc_ids").getItem(0))), F.lit(P)).cast("int"),
+            partition_of(F.element_at("doc_ids", 1), P).cast("int"),
         ).withColumn("config_fp", F.lit(fp))
         t0 = time.time()
         # dynamic partition overwrite: a partition half-written by a crashed

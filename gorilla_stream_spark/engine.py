@@ -1329,47 +1329,14 @@ def decode_multi(enc_df: DataFrame, token_cols: list[str], strict: bool = True) 
     unrequested ``buf_<col>`` columns are pruned at the parquet scan
     (ReadSchema), so decoding 1 of N columns reads ~1/N of the table's
     bytes; on the nested layout (``buffers array<binary>`` is one physical
-    column) subsetting saves decode CPU only.  Mirrors ``decode``: only the
-    columns the decoder reads cross the Arrow boundary.
+    column) subsetting saves decode CPU only.  A nested table goes through
+    :func:`widen_multi` first (a JVM projection that finds each column's
+    slot by name), so one kernel decodes both layouts.  Mirrors ``decode``:
+    only the columns the decoder reads cross the Arrow boundary.
     """
-    import pyarrow as pa
-
-    if any(c.startswith("buf_") for c in enc_df.columns):
-        return _decode_multi_wide(enc_df, token_cols, strict)
-
-    out_schema = pa.schema(
-        [("doc_id", pa.string())] + [(c, pa.list_(pa.int32())) for c in token_cols]
-    )
-
-    def fn(batches: Iterator) -> Iterator:
-        for rb in batches:
-            col = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-            for i in range(rb.num_rows):
-                names = col["col_names"][i].as_py()
-                try:
-                    idxs = [names.index(c) for c in token_cols]
-                except ValueError:
-                    raise ValueError(
-                        f"block has columns {names}, expected {list(token_cols)}"
-                    ) from None
-                bufs = col["buffers"][i].as_py()
-                crcs = col["crc32_bufs"][i].as_py()
-                lens = col["col_lens"][i].values
-                bid = col["block_id"][i].as_py()
-                arrays = [
-                    _decode_column(
-                        bufs[ci], crcs[ci], lens[ci].values, strict, f"block {bid} column {c}"
-                    )
-                    for c, ci in zip(token_cols, idxs)
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    [col["doc_ids"][i].values.cast(pa.string())] + arrays,
-                    schema=out_schema,
-                )
-
-    ddl = "doc_id string, " + ", ".join(f"{c} array<int>" for c in token_cols)
-    needed = ["block_id", "doc_ids", "col_names", "col_lens", "crc32_bufs", "buffers"]
-    return enc_df.select(*needed).mapInArrow(fn, ddl)
+    if not any(c.startswith("buf_") for c in enc_df.columns):
+        enc_df = widen_multi(enc_df, token_cols)
+    return _decode_multi_wide(enc_df, token_cols, strict)
 
 
 _WIDE_BASE_COLS = [
@@ -1406,7 +1373,8 @@ def widen_multi(enc_df: DataFrame, token_cols: list[str] | None = None) -> DataF
         if row is None:
             raise ValueError("empty table: pass token_cols explicitly")
         token_cols = list(row["col_names"])
-    cols = [F.col(c) for c in _WIDE_BASE_COLS if c in enc_df.columns]
+    present = enc_df.columns  # one schema lookup, not one per name
+    cols = [F.col(c) for c in _WIDE_BASE_COLS if c in present]
     cols.append(F.col("col_names"))
     for c in token_cols:
         # resolve each column's slot by NAME per row, not by position in
@@ -1419,9 +1387,11 @@ def widen_multi(enc_df: DataFrame, token_cols: list[str] | None = None) -> DataF
         idx = F.when(pos > 0, pos.cast("int")).otherwise(
             F.raise_error(
                 F.concat(
-                    F.lit(f"widen_multi: column '{c}' absent from block "),
+                    F.lit("block "),
                     F.col("block_id").cast("string"),
-                    F.lit("'s col_names"),
+                    F.lit(" has columns ["),
+                    F.array_join("col_names", ", "),
+                    F.lit(f"], expected column '{c}'"),
                 )
             ).cast("int")
         )
@@ -1468,7 +1438,8 @@ def _decode_multi_wide(
     columns' buffer bytes."""
     import pyarrow as pa
 
-    missing = [c for c in token_cols if f"buf_{c}" not in enc_df.columns]
+    present = enc_df.columns
+    missing = [c for c in token_cols if f"buf_{c}" not in present]
     if missing:
         raise ValueError(
             f"wide table has columns {_stored_wide_cols(enc_df)},"

@@ -10,11 +10,14 @@ one stream (``/root/reference/lib/gorilla_stream/stream.ex:62-86``); this is
 a from-scratch capability the Spark table layout makes possible.
 
 Why partition granularity works: the encode layout assigns docs to
-partitions by a PURE FUNCTION of ``doc_id`` (``skew.salted_repartition`` —
-``repartition(P, xxhash64(doc_id))``), so a doc's partition never depends on
-input order or on the other docs.  A partition whose doc multiset is
-byte-identical across snapshots therefore produces byte-identical blocks,
-and the old blocks can be reused without decoding them.
+partitions by a PURE FUNCTION of ``doc_id``, ``skew.partition_of`` —
+``pmod(hash(xxhash64(doc_id)), P)``, the Column ``salted_repartition``
+routes rows by — so a doc's partition never depends on input order or on
+the other docs.  The digest, the pruning predicate and the ``part_id``
+re-stamp below all evaluate that same Column.  A partition whose doc
+multiset is byte-identical across snapshots therefore produces
+byte-identical blocks, and the old blocks can be reused without decoding
+them.
 
 Change detection is a per-partition commutative digest, NOT a doc-level
 join: each corpus scan aggregates ``(count, bit_xor(xxhash64(doc_id,
@@ -53,7 +56,7 @@ a homogeneous table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gorilla_stream_spark.engine import (
@@ -62,6 +65,7 @@ from gorilla_stream_spark.engine import (
     ENCODED_SCHEMA,
     encode,
 )
+from gorilla_stream_spark.skew import partition_of
 
 __all__ = [
     "partition_of",
@@ -70,18 +74,6 @@ __all__ = [
     "incremental_encode",
     "snapshot_diff",
 ]
-
-
-def partition_of(id_col: str, num_partitions: int) -> Column:
-    """The encode layout's doc→partition function as a Column expression.
-
-    MUST stay equal to what ``repartition(P, xxhash64(id))`` assigns
-    (Spark's HashPartitioning: ``pmod(murmur3(keys), P)``; ``F.hash`` is the
-    same murmur3/seed-42) — asserted against ``spark_partition_id()`` in
-    tests so a Spark behavior change fails loudly instead of silently
-    mis-routing the diff.
-    """
-    return F.pmod(F.hash(F.xxhash64(F.col(id_col))), F.lit(num_partitions))
 
 
 def corpus_partition_digest(
@@ -273,12 +265,7 @@ def incremental_encode(
     # instead: every doc in a block belongs to one partition by
     # construction, so doc_ids[0] determines it; block_id follows the
     # encoder's identity rule.  Pure JVM projections, plan-shape-proof.
-    pid = (
-        F.pmod(
-            F.hash(F.xxhash64(F.element_at(F.col("doc_ids"), 1))),
-            F.lit(num_partitions),
-        ).cast("int")
-    )
+    pid = partition_of(F.element_at("doc_ids", 1), num_partitions).cast("int")
     fresh = fresh.withColumn("part_id", pid).withColumn(
         "block_id",
         F.shiftleft(F.col("part_id").cast("long"), 24).bitwiseOR(

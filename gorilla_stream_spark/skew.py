@@ -5,9 +5,11 @@ The reference has no skew story (uniform 5,000-point chunks,
 demands one because pre-tokenized training corpora have long-tail ``n_tok``
 (lognormal, heavy tail).  Strategy:
 
-* deterministic partition assignment by ``xxhash64(doc_id)`` — resume-safe
-  lineage (same doc -> same partition on every run, regardless of input
-  split order), and hash-uniform so long docs scatter instead of clumping;
+* deterministic partition assignment by :func:`partition_of`, the one
+  definition of the doc->partition rule, which routes the rows and which
+  resume and incremental re-encode evaluate — resume-safe lineage (same
+  doc -> same partition on every run, regardless of input split order),
+  and hash-uniform so long docs scatter instead of clumping;
 * downstream, the engine re-chunks each partition into ~equal-token blocks,
   so one hot partition cannot produce one giant Arrow batch.
 
@@ -19,16 +21,25 @@ alone, so a re-run of the same input lands every row where it did before.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_repartition", "range_partition", "skew_stats", "cluster_for_compression"]
+__all__ = ["partition_of", "salted_repartition", "range_partition", "skew_stats",
+           "cluster_for_compression"]
 
 # Sampled keys per output partition for range_partition's bounds: 100 kept
 # the largest partition within 1.34x of the mean row count at 4, 8 and 32
 # partitions of a bursty series (90 % of the points in 0.1 % of the time
 # range, four seeds); the collected sample is a few thousand keys.
 _RANGE_SAMPLE_PER_PARTITION = 100
+
+
+def partition_of(id_col: str | Column, num_partitions: int) -> Column:
+    """The salted layout's doc->partition rule, ``pmod(hash(xxhash64(id)),
+    P)``: ``salted_repartition`` routes rows by it, and checkpoint resume
+    and incremental encode prune and re-stamp ``part_id`` by it.  ``id_col``
+    is a name or a Column (e.g. ``F.element_at("doc_ids", 1)``)."""
+    return F.pmod(F.hash(F.xxhash64(id_col)), F.lit(num_partitions))
 
 
 def salted_repartition(
@@ -40,16 +51,16 @@ def salted_repartition(
 ) -> DataFrame:
     """Repartition by a deterministic salt of the doc id.
 
-    ``repartition(P, xxhash64(id))`` gives one shuffle whose keys are
-    uniform regardless of how skewed ``n_tok`` or the input layout is.
-    The full 64-bit hash (not ``hash % P``) is the partition expression:
-    pre-bucketing to P values and re-hashing them would collide for small P
-    and leave partitions empty.  Sorting within partitions by id makes
-    downstream block formation deterministic (required for idempotent
-    checkpoint resume).
+    ``repartitionById(P, partition_of(id, P))`` gives one shuffle whose
+    keys are uniform regardless of how skewed ``n_tok`` or the input layout
+    is; each row lands in the partition the Column names.  The full 64-bit
+    hash (not ``hash % P``) feeds the rule: pre-bucketing to P values and
+    re-hashing them would collide for small P and leave partitions empty.
+    Sorting within partitions by id makes downstream block formation
+    deterministic (required for idempotent checkpoint resume).
     """
     P = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    salted = df.repartition(P, F.xxhash64(F.col(id_col)))
+    salted = df.repartitionById(P, partition_of(id_col, P))
     if not sort_within:
         return salted
     return salted.sortWithinPartitions(*(sort_cols or [id_col]))

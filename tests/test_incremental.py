@@ -15,6 +15,7 @@ from gorilla_stream_spark.incremental import (
     incremental_encode,
     partition_of,
 )
+from gorilla_stream_spark.skew import salted_repartition
 
 P = 32
 
@@ -58,15 +59,19 @@ def new_corpus(spark, old_corpus):
 
 
 def test_partition_of_matches_repartition(spark, old_corpus):
-    # the load-bearing assumption: the Column expression equals what
-    # repartition(P, xxhash64(id)) actually assigns
+    # salted_repartition routes rows by partition_of itself; the plain hash
+    # repartition on xxhash64(id) must still land every row in the same
+    # place, so tables written before the layout routed by the Column keep
+    # their doc->partition assignment
     for p in (3, P, 17):
-        r = (
-            old_corpus.repartition(p, F.xxhash64(F.col("doc_id")))
-            .withColumn("pid", F.spark_partition_id())
-            .withColumn("pred", partition_of("doc_id", p))
-        )
-        assert r.filter(F.col("pid") != F.col("pred")).count() == 0
+        for df in (
+            old_corpus.repartition(p, F.xxhash64(F.col("doc_id"))),
+            salted_repartition(old_corpus, p),
+        ):
+            r = df.withColumn("pid", F.spark_partition_id()).withColumn(
+                "pred", partition_of("doc_id", p)
+            )
+            assert r.filter(F.col("pid") != F.col("pred")).count() == 0
 
 
 def test_digest_is_layout_invariant(spark, old_corpus):
